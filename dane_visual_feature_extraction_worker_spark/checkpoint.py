@@ -5,39 +5,52 @@ Generalizes the reference's control plane:
   (worker.py:66-90) → here: one *bucket* of entities = one unit of work,
   recorded only after its output is durably written;
 - per-step timed Provenance records persisted as JSON
-  (models.py:19-43, provenance.py:19-43) → here: one row per bucket in a
-  ``_checkpoints`` parquet table with rows/bytes/ms/status + a JSON
+  (models.py:19-43, provenance.py:19-43) → here: one small JSON record
+  per bucket in ``checkpoint_dir`` with rows/bytes/ms/status + a JSON
   lineage blob;
 - result registration in an index (worker.py:93-114 save_to_dane_index)
-  → here: the checkpoint row IS the registration.
+  → here: the checkpoint record IS the registration.
 
-Resume contract (north rule): a killed job restarts, anti-joins
-``_checkpoints`` for buckets already ``done``, and recomputes only the
-remainder — no recomputation of finished work, identical final table.
+Resume contract (north rule): a killed job restarts, lists the records,
+and recomputes only the buckets without a ``done`` record — no
+recomputation of finished work, identical final table.
+
+The control plane runs in the driver and launches no Spark job. A record
+is written through the Hadoop ``FileSystem`` API (any URI the session
+can reach) to a ``_``-prefixed temp name, then renamed to
+``bucket=<b>-attempt=<a>.json``; readers skip ``_`` names, so a crash
+leaves no half record. The directory reads as a JSON-lines table
+(``spark.read.json(checkpoint_dir)``) and holds one record per bucket
+and attempt, so it needs no compaction. A missing ``checkpoint_dir``
+means nothing is done; an entry that is not a readable record, or a
+record written with another ``n_buckets`` or ``entity_col``, raises
+naming the file instead of producing a wrong table.
 
 Scale notes: buckets are ``pmod(xxhash64(entity), n_buckets)`` so output
 partitioning is stable across cluster sizes and runs; each bucket's
-write is atomic-ish (write to ``bucket=<i>`` subdir, checkpoint row
-appended after); the checkpoint table itself is tiny (n_buckets rows)
-and read once per restart. On Iceberg the same design uses a metadata
-table + snapshot commits; parquet-dir fallback keeps semantics identical
-where the Iceberg runtime jar is unavailable (SURVEY.md §7c).
+output is written to its own ``bucket=<i>`` subdir before its record is
+published, whatever the output's table format (SURVEY.md §7c).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import time
 from typing import Callable
 
 import pyspark.sql.functions as F
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession, Window
 
 CHECKPOINT_SCHEMA = (
     "bucket int, status string, rows bigint, bytes bigint, ms double, "
     "attempt int, lineage string"
 )
+_FIELDS = [tuple(c.split()) for c in CHECKPOINT_SCHEMA.split(", ")]
+_CAST = {"int": int, "bigint": int, "double": float, "string": str}
+_RECORD_NAME = re.compile(r"bucket=\d+-attempt=\d+\.json")
 
 
 def bucket_of(entity_col: str, n_buckets: int) -> F.Column:
@@ -46,15 +59,13 @@ def bucket_of(entity_col: str, n_buckets: int) -> F.Column:
     return F.pmod(F.xxhash64(F.col(entity_col)), F.lit(n_buckets)).cast("int")
 
 
-def _dir_bytes(path: str) -> int:
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            try:
-                total += os.path.getsize(os.path.join(root, f))
-            except OSError:
-                pass
-    return total
+def _write_text(fs, path, text: str) -> None:
+    """Write ``text`` to the Hadoop ``path``, replacing any old file."""
+    out = fs.create(path, True)
+    try:
+        out.write(text.encode())
+    finally:
+        out.close()
 
 
 class CheckpointedRunner:
@@ -62,7 +73,7 @@ class CheckpointedRunner:
 
     ``pipeline``: (DataFrame of one bucket's input) -> output DataFrame.
     Each bucket's output lands in ``{output_dir}/bucket={i}``; its
-    checkpoint row lands in ``{checkpoint_dir}`` after the write
+    checkpoint record lands in ``{checkpoint_dir}`` after the write
     succeeds, so a crash between the two re-runs that bucket (at-least-
     once on compute, exactly-once on recorded completion — the
     reference's ack-after-success, worker.py:84-90).
@@ -82,34 +93,74 @@ class CheckpointedRunner:
         self.n_buckets = n_buckets
         self.entity_col = entity_col
 
-    # -- checkpoint table ------------------------------------------------
+    def _path(self, parent: str, child: str | None = None):
+        """(Hadoop FileSystem, Path) of ``parent`` or ``parent/child``."""
+        jvm = self.spark._jvm
+        p = jvm.org.apache.hadoop.fs.Path(parent)
+        if child is not None:
+            p = jvm.org.apache.hadoop.fs.Path(p, child)
+        return p.getFileSystem(self.spark._jsc.hadoopConfiguration()), p
+
+    # -- checkpoint records ----------------------------------------------
+    def _records(self) -> list[dict]:
+        """Every record in ``checkpoint_dir``, typed as CHECKPOINT_SCHEMA.
+
+        Raises ``ValueError`` naming the file for an entry that is not a
+        readable record, or for a record this runner's ``n_buckets`` /
+        ``entity_col`` would not have written."""
+        fs, d = self._path(self.checkpoint_dir)
+        if not fs.exists(d):
+            return []
+        io = self.spark._jvm.org.apache.hadoop.io.IOUtils
+        records = []
+        for st in fs.listStatus(d):
+            name = st.getPath().getName()
+            if name.startswith(("_", ".")):  # temp records, crc files
+                continue
+            where = st.getPath().toString()
+            try:
+                if not (st.isFile() and _RECORD_NAME.fullmatch(name)):
+                    raise ValueError("not a checkpoint record")
+                stream = fs.open(st.getPath())
+                try:
+                    raw = json.loads(bytes(io.readFullyToByteArray(stream)))
+                finally:
+                    stream.close()
+                rec = {k: _CAST[t](raw[k]) for k, t in _FIELDS}
+                lineage = json.loads(rec["lineage"])
+                ran_with = (lineage["n_buckets"], lineage["entity_col"])
+            except (ValueError, KeyError, TypeError, Py4JJavaError) as e:
+                raise ValueError(
+                    f"unreadable checkpoint record {where}: {e!r}"
+                ) from e
+            if ran_with != (self.n_buckets, self.entity_col):
+                raise ValueError(
+                    f"checkpoint record {where} was written with "
+                    f"n_buckets={ran_with[0]}, entity_col={ran_with[1]!r}; "
+                    f"this runner has n_buckets={self.n_buckets}, "
+                    f"entity_col={self.entity_col!r}. Resume with the "
+                    f"original settings or use a new checkpoint_dir"
+                )
+            records.append(rec)
+        return sorted(records, key=lambda r: (r["attempt"], r["bucket"]))
+
     def load_checkpoints(self) -> DataFrame:
-        from dane_visual_feature_extraction_worker_spark.sources.maintenance import (
-            _recover_interrupted_swap,
+        """The records as a CHECKPOINT_SCHEMA DataFrame, built in the driver."""
+        return self.spark.createDataFrame(
+            [tuple(r.values()) for r in self._records()], CHECKPOINT_SCHEMA
         )
 
-        # a crash mid-compaction leaves the table at <dir>.__old__;
-        # recover before reading so resume never sees an empty table
-        _recover_interrupted_swap(self.checkpoint_dir)
-        try:
-            return self.spark.read.parquet(self.checkpoint_dir)
-        except Exception:
-            return self.spark.createDataFrame([], CHECKPOINT_SCHEMA)
-
     def done_buckets(self) -> set[int]:
-        cps = self.load_checkpoints()
-        return {
-            r["bucket"]
-            for r in cps.where(F.col("status") == "done")
-            .select("bucket")
-            .distinct()
-            .collect()
-        }
+        return {r["bucket"] for r in self._records() if r["status"] == "done"}
 
     def _record(self, row: dict) -> None:
-        self.spark.createDataFrame([row], CHECKPOINT_SCHEMA).write.mode(
-            "append"
-        ).parquet(self.checkpoint_dir)
+        """Publish one record: write a ``_`` temp, rename it into place."""
+        name = f"bucket={row['bucket']}-attempt={row['attempt']}.json"
+        fs, tmp = self._path(self.checkpoint_dir, "_" + name)
+        _write_text(fs, tmp, json.dumps(row) + "\n")
+        final = self._path(self.checkpoint_dir, name)[1]
+        if not fs.rename(tmp, final):
+            raise OSError(f"could not rename {tmp.toString()} to {final.toString()}")
 
     # -- driver loop (the queue-consumer analogue) ------------------------
     def run(
@@ -125,13 +176,13 @@ class CheckpointedRunner:
         """
         from dane_visual_feature_extraction_worker_spark.provenance import (
             ProvenanceTracker,
+            observed_write,
         )
 
-        done = self.done_buckets()
-        pending = [b for b in range(self.n_buckets) if b not in done]
-        attempt = 1 + (
-            self.load_checkpoints().agg(F.max("attempt")).collect()[0][0] or 0
-        )
+        records = self._records()
+        done_rows = {r["bucket"]: r["rows"] for r in records if r["status"] == "done"}
+        pending = [b for b in range(self.n_buckets) if b not in done_rows]
+        attempt = 1 + max((r["attempt"] for r in records), default=0)
         prov = ProvenanceTracker(
             "checkpointed_run",
             params={
@@ -202,19 +253,16 @@ class CheckpointedRunner:
                 # rows observed DURING the sink write (Observation) —
                 # the old write-then-read-back-count() re-scanned every
                 # bucket's output, a full second pass at 100 TB
-                from dane_visual_feature_extraction_worker_spark.provenance import (
-                    observed_write,
-                )
-
                 rows = int(observed_write(out, path)["rows"])
                 ps.output_data = {"rows": rows, "path": path}
             ms = (time.monotonic() - t0) * 1000.0
+            fs, p = self._path(path)
             self._record(
                 {
                     "bucket": b,
                     "status": "done",
                     "rows": rows,
-                    "bytes": _dir_bytes(path),
+                    "bytes": fs.getContentSummary(p).getLength(),
                     "ms": ms,
                     "attempt": attempt,
                     "lineage": json.dumps(
@@ -228,36 +276,26 @@ class CheckpointedRunner:
                     ),
                 }
             )
+            done_rows[b] = rows
             completed += 1
             if fail_after is not None and completed >= fail_after:
                 raise RuntimeError(f"injected failure after {completed} buckets")
         # success: staging no longer needed (a crashed attempt leaves it;
         # the next attempt re-stages only its own pending buckets)
-        import shutil
-
-        shutil.rmtree(staged_dir, ignore_errors=True)
-        # Checkpoint-table compaction (VERDICT r3): durability demands
-        # one tiny parquet append per completed bucket, so an attempt
-        # leaves O(n_buckets) files; fold them back to O(1) now that
-        # the attempt is done (crash-safe two-rename swap; a crash mid-
-        # swap is recovered by load_checkpoints on the next restart).
-        if completed:
-            from dane_visual_feature_extraction_worker_spark.sources.maintenance import (
-                compact_parquet,
-            )
-
-            compact_parquet(self.spark, self.checkpoint_dir)
+        fs, p = self._path(staged_dir)
+        fs.delete(p, True)
         summary = {
             "attempt": attempt,
-            "skipped": len(done),
+            "skipped": self.n_buckets - len(pending),
             "computed": completed,
             "n_buckets": self.n_buckets,
             "source_scans": 1,
             "staged_writes": staged_writes,
+            "output_rows": sum(done_rows.values()),
         }
-        prov.persist(
-            os.path.join(self.output_dir, f"_provenance_attempt{attempt}.json"),
-            output_data=summary,
+        fs, p = self._path(self.output_dir, f"_provenance_attempt{attempt}.json")
+        _write_text(
+            fs, p, json.dumps(prov.finish(summary), indent=2, sort_keys=True)
         )
         return summary
 

@@ -49,7 +49,7 @@ class EngineConfig:
     # 32-thread window stage); off-heap pages remove them. Standard
     # production setting for wide-window/shuffle-heavy jobs.
     offheap_size: str | None = "16g"
-    checkpoint_dir: str | None = None  # parquet _checkpoints table root
+    checkpoint_dir: str | None = None  # per-bucket JSON checkpoint records dir
 
     extra_conf: dict = field(default_factory=dict)
 

@@ -31,7 +31,7 @@ def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--input", required=True, help="transcript parquet/table path")
     ap.add_argument("--output", required=True, help="feature output root")
-    ap.add_argument("--checkpoints", required=True, help="_checkpoints table root")
+    ap.add_argument("--checkpoints", required=True, help="checkpoint records dir")
     ap.add_argument("--n-buckets", type=int, default=256)
     ap.add_argument("--entity-col", default="conv_id")
     ap.add_argument("--session-gap-seconds", type=float, default=1800.0)
@@ -71,9 +71,8 @@ def main(argv: list[str] | None = None) -> int:
         n_buckets=args.n_buckets,
         entity_col=args.entity_col,
     )
-    summary = runner.run(transcripts, pit_features)
-    out_rows = runner.result().count()
-    print(json.dumps({**summary, "output_rows": out_rows}))
+    # output_rows sums the done records' rows: no rescan of the output
+    print(json.dumps(runner.run(transcripts, pit_features)))
     return 0
 
 
