@@ -9,10 +9,9 @@ dane-visual-feature-extraction-worker) as a distributed Spark engine:
 - windowed features (lag/lead, rolling, backfill, sessionize) (reference
   precedent: misc/spectrogram_example2/get_sepectogram.py:22-55 anchored
   windows),
-- a D=32 feature kernel with two bit-identical physical strategies: a
-  pure-Catalyst window plan (default scale path, zero Python) and a
-  vectorized Arrow/pandas kernel in deterministic batches (reference:
-  feature_extraction.py:17-32 apply_model @ batch 256),
+- a D=32 feature kernel: a pure-Catalyst window plan (zero Python),
+  bit-identical to a vectorized numpy oracle (reference:
+  feature_extraction.py:17-32 apply_model),
 - checkpointed, resumable execution with per-partition lineage/metrics
   (reference: provenance.py, worker.py:84-89),
 - training-data-pipeline operators: dedup (exact/minhash/simhash/jaccard),

@@ -39,8 +39,6 @@ class EngineConfig:
     # batch-size-invariant, so default to 10k and keep 256 for tests
     # that mirror the reference shape.
     arrow_batch_size: int = 10_000
-    feature_dim: int = 32
-    session_gap_seconds: float = 1800.0
     max_partition_bytes: str = "128m"
     aqe: bool = True
     # Tungsten off-heap for sort/shuffle/window buffers: at high
@@ -60,10 +58,6 @@ class EngineConfig:
             raise ValueError("shuffle_partitions must be >= 1")
         if self.arrow_batch_size < 1:
             raise ValueError("arrow_batch_size must be >= 1")
-        if self.feature_dim < 1:
-            raise ValueError("feature_dim must be >= 1")
-        if self.session_gap_seconds <= 0:
-            raise ValueError("session_gap_seconds must be > 0")
 
     @property
     def resolved_master(self) -> str:
@@ -117,11 +111,18 @@ def validate_config_tree(tree: dict, validate_file_paths: bool = True) -> None:
         check_setting(eng.get("ARROW_BATCH_SIZE"), int),
         "ENGINE.ARROW_BATCH_SIZE",
     )
-    _require(check_setting(eng.get("FEATURE_DIM"), int), "ENGINE.FEATURE_DIM")
-    _require(
-        check_setting(eng.get("SESSION_GAP_SECONDS"), float),
-        "ENGINE.SESSION_GAP_SECONDS",
+    # The kernel fixes these two; a config may only restate them.
+    from dane_visual_feature_extraction_worker_spark.kernel import (
+        FEATURE_DIM,
+        SESSION_GAP_S,
     )
+
+    for key, fixed in (
+        ("FEATURE_DIM", FEATURE_DIM),
+        ("SESSION_GAP_SECONDS", SESSION_GAP_S),
+    ):
+        v = eng.get(key)
+        _require(v is None or (check_setting(v, float) and v == fixed), f"ENGINE.{key}")
     _require(
         check_setting(eng.get("MAX_PARTITION_BYTES"), str),
         "ENGINE.MAX_PARTITION_BYTES",
@@ -196,8 +197,6 @@ def load_yaml_config(
         master=eng.get("MASTER"),
         shuffle_partitions=eng["SHUFFLE_PARTITIONS"],
         arrow_batch_size=eng["ARROW_BATCH_SIZE"],
-        feature_dim=eng["FEATURE_DIM"],
-        session_gap_seconds=float(eng["SESSION_GAP_SECONDS"]),
         max_partition_bytes=eng["MAX_PARTITION_BYTES"],
         aqe=eng["AQE"],
         offheap_size=eng.get("OFFHEAP_SIZE"),

@@ -1,4 +1,4 @@
-"""Vectorized feature kernel — the Spark analogue of ``apply_model``.
+"""Feature kernel: 32 point-in-time features per transcript turn.
 
 The reference's kernel consumes deterministic batches of 256 items in
 key order, runs a vectorized forward pass, and emits a positional row
@@ -8,18 +8,20 @@ key order, runs a vectorized forward pass, and emits a positional row
 by tests/unit/feature_extraction_test.py:56-60).
 
 Ours replaces the torch forward pass with deterministic, model-free
-numpy feature math (FIXTURES.md §5) so golden fixtures reproduce on any
-machine, while keeping the *execution shape* identical:
+feature math (FIXTURES.md §5) so golden fixtures reproduce on any
+machine. There is one engine implementation and one oracle:
 
-- grouped ``applyInPandas`` over the entity key → each conversation
-  arrives as one Arrow-backed pandas frame (the reference's
-  one-entity-per-job unit, worker.py:66-90, becomes one *group* per
-  task),
-- rows sorted by (ts, turn_idx) inside the kernel (reference sorts its
-  key list, data_handling.py:33),
-- all features at row i read ONLY rows [0..i] — prefix sums / cumulative
-  stats — the zero-temporal-leakage contract,
-- absent inputs zero-filled (reference: data_handling.py:93-99).
+- ``feature_vectors_windows``: the engine. A pure-Catalyst plan —
+  text features packed map-side, ONE hash exchange on the entity key,
+  running-window prefix aggregates over (conv_id ORDER BY ts,
+  turn_idx), no Python stage;
+- ``compute_features_numeric``: the numpy oracle over
+  ``with_text_features`` rows. It runs the same sequential double
+  arithmetic, so the engine must match it bit for bit
+  (tests/test_kernel.py, pitbench's ``pandas_twin`` gate).
+
+Both read only rows [0..i] for the features of row i — prefix sums and
+running stats — which is the zero-temporal-leakage contract.
 
 Feature vector (D = 32 float32), per (conv_id, ts) anchor, from history
 rows with ts <= anchor:
@@ -51,137 +53,27 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from dane_visual_feature_extraction_worker_spark.functions import ts_seconds_pd
-
 FEATURE_DIM = 32
 SESSION_GAP_S = 1800.0
-# default entity-bucket count for grouped-pandas kernels: bounds per-task
-# pandas memory and amortizes per-group overhead; ~4-15k rows/bucket at
-# the bench scales measured best (buckets with no data cost nothing)
-DEFAULT_KERNEL_BUCKETS = 2048
 _ROLE_IDX = {"user": 0, "assistant": 1, "tool": 2, "system": 3}
 _HASH_BUCKETS = 16
-# small odd multiplier polynomial-hash; deterministic across platforms
-_POLY = 1_000_003
-_MOD = 2**31 - 1
-
-FEATURE_SCHEMA = (
-    "conv_id string, turn_idx int, ts timestamp, "
-    "session_id bigint, features array<float>"
-)
-
-# numeric engine path: flat f0..f31 feature columns + per-session bounds
-# (computed inside the kernel — whole conversation in memory, no extra
-# shuffle). Flat columns instead of array<float>: parquet encodes flat
-# floats ~3x faster and downstream readers can prune single features;
-# use ``with_feature_array`` to recover the array form.
-_FCOLS = ", ".join(f"f{i} float" for i in range(FEATURE_DIM))
-FEATURE_SCHEMA_FULL = (
-    "conv_id string, turn_idx int, ts timestamp, session_id bigint, "
-    f"session_start timestamp, session_end timestamp, {_FCOLS}"
-)
 
 
-_TOKEN_CACHE: dict[str, int] = {}
-
-
-def _token_hash_bucket(tok: str) -> int:
-    """Token -> bag bucket: crc32(utf8(token)) mod 16. The JVM
-    (F.crc32), Python (zlib.crc32) and the DuckDB oracle (table-driven
-    CRC-32 list_reduce, driver_queries._CRC32_SQL) agree bit-for-bit —
-    and crc32 beats md5 by ~30% of flagship wall (r5 interleaved A/B,
-    220M tokens: 14.06s vs 18.17s at 32 threads)."""
-    import zlib
-
-    b = _TOKEN_CACHE.get(tok)
-    if b is None:
-        b = zlib.crc32(tok.encode("utf-8")) % _HASH_BUCKETS
-        if len(_TOKEN_CACHE) < 1_000_000:  # bound worker memory
-            _TOKEN_CACHE[tok] = b
-    return b
-
-
-def with_text_features(
-    transcripts: DataFrame, passthrough: tuple[str, ...] = ()
-) -> DataFrame:
+def with_text_features(transcripts: DataFrame) -> DataFrame:
     """JVM-side text features: chars, words, l2-normalized 16-bucket
-    token bag (bag0..bag15), role_code, has_tool.
+    token bag (bag0..bag15), role_code, has_tool — one row per turn,
+    the input of ``compute_features_numeric``.
 
-    Whole-stage-codegen'd column expressions — Python never touches the
-    text, which is what keeps the kernel memory-light and scalable (text
-    handling in the Python workers was the measured scaling ceiling).
-    Staged selects materialize toks/hashes so project-collapse cannot
-    re-inline the regex split / md5 per reference (see dedup.py).
-
-    ``passthrough``: extra columns carried through unchanged (e.g. a
-    pre-computed shuffle/sort key)."""
-    pt = list(passthrough)
-    roles = (
-        F.when(F.col("role") == "user", 0)
-        .when(F.col("role") == "assistant", 1)
-        .when(F.col("role") == "tool", 2)
-        .when(F.col("role") == "system", 3)
-        .otherwise(-1)
-    )
-    s1 = transcripts.select(
-        *pt,
-        "conv_id",
-        "turn_idx",
-        "ts",
-        roles.alias("role_code"),
-        F.col("tool").isNotNull().cast("int").alias("has_tool"),
-        F.length(F.coalesce(F.col("text"), F.lit(""))).cast("double").alias("chars"),
-        # (?U): Unicode-aware \s so the JVM tokenizer agrees with the
-        # Python oracle's str.split() on NBSP & friends (ADVICE r1).
-        # (Residual edge: U+001C..1F separators — Python isspace() true,
-        # Unicode White_Space false — are not treated as spaces here.)
-        F.filter(
-            F.split(F.coalesce(F.col("text"), F.lit("")), r"(?U)\s+"),
-            lambda t: t != "",
-        ).alias("__toks"),
-    )
-    s2 = s1.select(
-        *pt,
-        "conv_id",
-        "turn_idx",
-        "ts",
-        "role_code",
-        "has_tool",
-        "chars",
-        F.size("__toks").cast("double").alias("words"),
-        F.transform(
-            F.col("__toks"), lambda t: F.pmod(F.crc32(t), F.lit(_HASH_BUCKETS))
-        ).alias("__h"),
-    )
-    raw = [
-        F.size(F.filter(F.col("__h"), lambda h: h == b)).cast("double").alias(f"__c{b}")
-        for b in range(_HASH_BUCKETS)
-    ]
-    s3 = s2.select(
-        *pt, "conv_id", "turn_idx", "ts", "role_code", "has_tool", "chars",
-        "words", *raw
-    )
-    norm_sq = None
-    for b in range(_HASH_BUCKETS):
-        t = F.col(f"__c{b}") * F.col(f"__c{b}")
-        norm_sq = t if norm_sq is None else norm_sq + t
-    s4 = s3.withColumn("__norm", F.sqrt(norm_sq))
-    bags = [
-        F.when(F.col("__norm") > 0, F.col(f"__c{b}") / F.col("__norm"))
-        .otherwise(F.lit(0.0))
-        .alias(f"bag{b}")
-        for b in range(_HASH_BUCKETS)
-    ]
-    return s4.select(
-        *pt, "conv_id", "turn_idx", "ts", "role_code", "has_tool", "chars",
-        "words", *bags
-    )
+    The engine's own packed projection, unpacked in place, so the
+    oracle twin reads the exact values the window plan computes."""
+    return _unpack_text_features(_packed_text_features(transcripts)).drop("__ck")
 
 
 def compute_features_numeric(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Numeric-only bucket kernel over ``with_text_features`` output:
-    pure float prefix ops per conversation slice — no strings cross the
-    Arrow boundary."""
+    """The numpy oracle: the 32 features plus per-session bounds from
+    ``with_text_features`` rows, as prefix ops over each conversation's
+    slice of one (conv_id, ts, turn_idx) sort. Same output columns as
+    ``feature_vectors_windows``."""
     pdf = pdf.sort_values(["conv_id", "ts", "turn_idx"], kind="mergesort").reset_index(
         drop=True
     )
@@ -267,230 +159,18 @@ def compute_features_numeric(pdf: pd.DataFrame) -> pd.DataFrame:
     return pd.DataFrame(cols)
 
 
-def compute_features_pd(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Pure-pandas kernel for ONE conversation (also the test oracle's
-    building block — tests/reference_impl.py wraps the same math in a
-    plain pandas groupby to produce golden fixtures)."""
-    pdf = pdf.sort_values(["ts", "turn_idx"], kind="mergesort").reset_index(
-        drop=True
-    )
-    n = len(pdf)
-    text = pdf["text"].fillna("").to_numpy(dtype=object)
-    role = pdf["role"].fillna("").to_numpy(dtype=object)
-    tool = pdf["tool"].to_numpy(dtype=object)
-    ts_s = ts_seconds_pd(pdf["ts"]).to_numpy()  # epoch seconds
-
-    chars = np.array([len(t) for t in text], dtype=np.float64)
-    words = np.array([len(t.split()) if t else 0 for t in text], dtype=np.float64)
-    gaps = np.diff(ts_s, prepend=ts_s[0] if n else 0.0)
-    if n:
-        gaps[0] = 0.0
-
-    idx1 = np.arange(1, n + 1, dtype=np.float64)
-    cum_chars = np.cumsum(chars)
-    mean_chars = cum_chars / idx1
-    # exact mean gap: telescoping sum in integer microseconds
-    ts_us = pdf["ts"].to_numpy().astype("datetime64[us]").astype("int64")
-    cum_gap_s = (
-        (ts_us - (ts_us[0] if n else 0)).astype(np.float64) / 1e6
-        if n
-        else np.zeros(0)
-    )
-    mean_gap = cum_gap_s / idx1
-    max_gap = np.maximum.accumulate(gaps)
-
-    new_sess = (gaps > SESSION_GAP_S).astype(np.int64)
-    if n:
-        new_sess[0] = 1
-    sess_id = np.cumsum(new_sess) - 1  # 0-based
-    # turns in current session / seconds since session start (vectorized:
-    # propagate the index of the last session boundary forward)
-    idx = np.arange(n)
-    sess_start_turn = np.maximum.accumulate(np.where(new_sess == 1, idx, 0))
-    sess_start_ts = ts_s[sess_start_turn] if n else np.zeros(0)
-    turns_in_sess = idx - sess_start_turn + 1
-    sec_in_sess = ts_s - sess_start_ts
-
-    role_oh = np.zeros((n, 4), dtype=np.float64)
-    for r, j in _ROLE_IDX.items():
-        role_oh[:, j] = np.cumsum(role == r)
-    cum_tools = np.cumsum(pd.notna(tool).astype(np.float64))
-
-    bag = np.zeros((n, _HASH_BUCKETS), dtype=np.float64)
-    for i, t in enumerate(text):
-        if not t:
-            continue
-        for tok in t.split():
-            bag[i, _token_hash_bucket(tok)] += 1.0
-        norm = np.sqrt((bag[i] ** 2).sum())
-        if norm > 0:
-            bag[i] /= norm
-
-    feats = np.column_stack(
-        [
-            idx1,
-            cum_chars,
-            mean_chars,
-            chars,
-            gaps,
-            mean_gap,
-            max_gap,
-            sess_id.astype(np.float64),
-            role_oh,
-            cum_tools,
-            turns_in_sess.astype(np.float64),
-            sec_in_sess,
-            words,
-            bag,
-        ]
-    ).astype(np.float32)
-    assert feats.shape[1] == FEATURE_DIM
-
-    return pd.DataFrame(
-        {
-            "conv_id": pdf["conv_id"],
-            "turn_idx": pdf["turn_idx"].astype("int32"),
-            "ts": pdf["ts"],
-            "session_id": sess_id,
-            "features": list(feats),
-        }
-    )
-
-
-def compute_features_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Whole-bucket kernel: one sort + numpy slice loop per conversation.
-
-    Produces byte-identical output to per-conv ``compute_features_pd``
-    (same formulas, same float32 ops) but skips pandas per-group
-    plumbing (~3 ms/group → ~30 µs/group): shared columns are converted
-    to numpy ONCE, conversations become index slices.
-    """
-    pdf = pdf.sort_values(["conv_id", "ts", "turn_idx"], kind="mergesort").reset_index(
-        drop=True
-    )
-    n = len(pdf)
-    if n == 0:
-        return pd.DataFrame(
-            {
-                "conv_id": pd.Series(dtype=object),
-                "turn_idx": pd.Series(dtype="int32"),
-                "ts": pd.Series(dtype="datetime64[us]"),
-                "session_id": pd.Series(dtype="int64"),
-                "features": pd.Series(dtype=object),
-            }
-        )
-    text = pdf["text"].fillna("").to_numpy(dtype=object)
-    role = pdf["role"].fillna("").to_numpy(dtype=object)
-    tool_notna = pd.notna(pdf["tool"].to_numpy(dtype=object)).astype(np.float64)
-    ts_s = ts_seconds_pd(pdf["ts"]).to_numpy()
-    ts_us = pdf["ts"].to_numpy().astype("datetime64[us]").astype("int64")
-
-    chars = np.fromiter((len(t) for t in text), dtype=np.float64, count=n)
-    tok_lists = [t.split() if t else [] for t in text]
-    words = np.fromiter((len(tl) for tl in tok_lists), dtype=np.float64, count=n)
-    bag = np.zeros((n, _HASH_BUCKETS), dtype=np.float64)
-    for i, tl in enumerate(tok_lists):
-        if not tl:
-            continue
-        row = bag[i]
-        for tok in tl:
-            row[_token_hash_bucket(tok)] += 1.0
-        norm = np.sqrt((row**2).sum())
-        if norm > 0:
-            row /= norm
-
-    codes, _ = pd.factorize(pdf["conv_id"], sort=False)
-    starts = np.flatnonzero(np.r_[True, codes[1:] != codes[:-1]])
-    ends = np.r_[starts[1:], n]
-
-    feats = np.empty((n, FEATURE_DIM), dtype=np.float64)
-    sess_all = np.empty(n, dtype=np.int64)
-    role_eq = {r: (role == r).astype(np.float64) for r in _ROLE_IDX}
-    for a, b in zip(starts, ends):
-        m = b - a
-        tss = ts_s[a:b]
-        gaps = np.diff(tss, prepend=tss[0])
-        gaps[0] = 0.0
-        idx1 = np.arange(1, m + 1, dtype=np.float64)
-        cum_chars = np.cumsum(chars[a:b])
-        cum_gap_s = (ts_us[a:b] - ts_us[a]).astype(np.float64) / 1e6
-        new_sess = (gaps > SESSION_GAP_S).astype(np.int64)
-        new_sess[0] = 1
-        sess_id = np.cumsum(new_sess) - 1
-        idx = np.arange(m)
-        sess_start = np.maximum.accumulate(np.where(new_sess == 1, idx, 0))
-        out = feats[a:b]
-        out[:, 0] = idx1
-        out[:, 1] = cum_chars
-        out[:, 2] = cum_chars / idx1
-        out[:, 3] = chars[a:b]
-        out[:, 4] = gaps
-        out[:, 5] = cum_gap_s / idx1
-        out[:, 6] = np.maximum.accumulate(gaps)
-        out[:, 7] = sess_id
-        for r, j in _ROLE_IDX.items():
-            out[:, 8 + j] = np.cumsum(role_eq[r][a:b])
-        out[:, 12] = np.cumsum(tool_notna[a:b])
-        out[:, 13] = idx - sess_start + 1
-        out[:, 14] = tss - tss[sess_start]
-        out[:, 15] = words[a:b]
-        out[:, 16:] = bag[a:b]
-        sess_all[a:b] = sess_id
-
-    f32 = feats.astype(np.float32)
-    return pd.DataFrame(
-        {
-            "conv_id": pdf["conv_id"],
-            "turn_idx": pdf["turn_idx"].astype("int32"),
-            "ts": pdf["ts"],
-            "session_id": sess_all,
-            "features": list(f32),
-        }
-    )
-
-
 def with_feature_array(df: DataFrame) -> DataFrame:
     """Collapse flat f0..f31 back into ``features array<float>``
-    (fixture/golden-comparison form, FIXTURES.md §5)."""
+    (fixture/golden-comparison form, FIXTURES.md §5). The kernel emits
+    flat columns: parquet encodes flat floats ~3x faster and readers
+    can prune single features."""
     arr = F.array(*[F.col(f"f{i}") for i in range(FEATURE_DIM)]).alias("features")
     keep = [c for c in df.columns if not (c.startswith("f") and c[1:].isdigit())]
     return df.select(*keep, arr)
 
 
-def feature_vectors(transcripts: DataFrame, n_buckets: int | None = None) -> DataFrame:
-    """Distributed kernel: bucket-grouped applyInPandas.
-
-    One shuffle on bucket(conv_id); per bucket the kernel iterates
-    conversations with a pandas groupby (sub-millisecond per group)
-    instead of one Spark group per conversation (~20-50 ms per group of
-    grouped-pandas overhead — ruinous at millions of conversations).
-    Bucket count bounds per-task memory and scales with the corpus;
-    conversations never split across buckets.
-    """
-    if n_buckets is None:
-        # parallelism-derived default (see asof_join_sorted): fixed 2048
-        # buckets over-paid per-group setup at small SF; explicit counts
-        # bound per-task memory at corpus scale
-        sp = int(
-            transcripts.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
-        n_buckets = max(4 * sp, DEFAULT_KERNEL_BUCKETS // 8)
-    cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-
-    def per_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        return compute_features_numeric(pdf)
-
-    b = F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_buckets))
-    return (
-        with_text_features(transcripts.select(*cols))
-        .withColumn("__b", b)
-        .groupBy("__b")
-        .applyInPandas(per_bucket, schema=FEATURE_SCHEMA_FULL)
-    )
-
-
 def _packed_text_features(transcripts: DataFrame) -> DataFrame:
-    """Map-side projection for the narrow-shuffle window plan: every
+    """Map-side projection of the window plan: every
     per-row text derivation reduced to 10 fixed-width bigints BEFORE
     the exchange, so the shuffle + sort move ~96 fixed bytes/row
     instead of the raw text/role/tool strings (~2.5x fewer sorted
@@ -506,6 +186,10 @@ def _packed_text_features(transcripts: DataFrame) -> DataFrame:
       bucket, so words == sum of the 16 counts, recovered lane-side.
     l2 normalization happens post-shuffle from the exact integer
     counts — bit-identical to normalizing map-side."""
+    # (?U): Unicode-aware \s so the JVM tokenizer agrees with the
+    # Python oracle's str.split() on NBSP & friends (ADVICE r1).
+    # (Residual edge: U+001C..1F separators — Python isspace() true,
+    # Unicode White_Space false — are not treated as spaces here.)
     toks = F.filter(
         F.split(F.coalesce(F.col("text"), F.lit("")), r"(?U)\s+"),
         lambda t: t != "",
@@ -548,8 +232,7 @@ def _packed_text_features(transcripts: DataFrame) -> DataFrame:
 def _unpack_text_features(df: DataFrame) -> DataFrame:
     """Inverse of ``_packed_text_features`` (post-shuffle): rebuild
     role_code/has_tool/chars/words and the l2-normalized bag columns
-    with the exact expressions ``with_text_features`` uses, from the
-    exact integer counts."""
+    from the exact integer counts."""
     cs = []
     for k in range(_HASH_BUCKETS // 2):
         cs.append(F.shiftright(F.col(f"__p{k}"), 32).cast("double"))
@@ -597,11 +280,9 @@ def _unpack_text_features(df: DataFrame) -> DataFrame:
     )
 
 
-def feature_vectors_windows(
-    transcripts: DataFrame, narrow_shuffle: bool = True
-) -> DataFrame:
-    """Pure-Catalyst physical strategy: the same 32 features as window
-    expressions — NO Python stage at all.
+def feature_vectors_windows(transcripts: DataFrame) -> DataFrame:
+    """The engine kernel: the 32 features as window expressions — NO
+    Python stage at all.
 
     Every f0..f15 is a per-conversation prefix op (cumsum / running
     max / last-ignorenulls) over rows sorted by (ts, turn_idx); the bag
@@ -618,13 +299,11 @@ def feature_vectors_windows(
     transfer + Python workers is what lifts multi-core scaling
     efficiency (BENCH/BASELINE.md): whole-stage codegen end to end.
 
-    ``narrow_shuffle=True`` (default, r5): tokenize/count map-side and
-    move 10 packed bigints per row through the exchange + sort instead
-    of the raw text/role/tool strings (``_packed_text_features``) —
-    bytes through the shuffle and the sort working set are the
-    memory-bus lever the r4 scaling analysis identified. ``False``
-    keeps the r2-r4 raw-rows-first plan (A/B twin; bit-identical
-    output, asserted in tests).
+    Text is tokenized and counted map-side, so 10 packed bigints per
+    row move through the exchange + sort instead of the raw
+    text/role/tool strings (``_packed_text_features``) — bytes through
+    the shuffle and the sort working set are the memory-bus lever the
+    r4 scaling analysis identified.
 
     ``__ck`` = xxhash64(conv_id) leads every sort key: string conv_ids
     share long prefixes, which defeats the radix/prefix comparator — a
@@ -637,18 +316,11 @@ def feature_vectors_windows(
     from dane_visual_feature_extraction_worker_spark.functions import epoch_seconds
 
     cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-    if narrow_shuffle:
-        packed = _packed_text_features(transcripts.select(*cols))
-        shuffled = packed.repartition("__ck").sortWithinPartitions(
-            "__ck", "conv_id", "ts", "turn_idx"
-        )
-        tf = _unpack_text_features(shuffled)
-    else:
-        raw = transcripts.select(*cols).withColumn("__ck", F.xxhash64("conv_id"))
-        raw = raw.repartition("__ck").sortWithinPartitions(
-            "__ck", "conv_id", "ts", "turn_idx"
-        )
-        tf = with_text_features(raw, passthrough=("__ck",))
+    packed = _packed_text_features(transcripts.select(*cols))
+    shuffled = packed.repartition("__ck").sortWithinPartitions(
+        "__ck", "conv_id", "ts", "turn_idx"
+    )
+    tf = _unpack_text_features(shuffled)
 
     w = Window.partitionBy("__ck", "conv_id").orderBy("ts", "turn_idx")
     wrun = w.rowsBetween(Window.unboundedPreceding, 0)

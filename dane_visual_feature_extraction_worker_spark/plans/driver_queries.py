@@ -2901,8 +2901,8 @@ def pit_features_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     entry()/bench exercise. Gated columns: ALL 32 features + session
     bounds (r5 closed the last two r4 exclusions: f5 now averages the
     telescoping gap sum in exact integer microseconds, and the f16-31
-    bag hash is the low md5 nibble — both computable bit-identically by
-    the JVM, numpy and DuckDB). The oracle tokenizes with an explicit
+    bag hash is crc32 mod 16 — both computable bit-identically by the
+    JVM, numpy and DuckDB). The oracle tokenizes with an explicit
     Unicode White_Space character class, the exact set Java's (?U)\\s
     matches — RE2 has no (?U) flag and its bare \\s is ASCII-only
     (ADVICE r4); the one residual divergence is U+001C..001F, which

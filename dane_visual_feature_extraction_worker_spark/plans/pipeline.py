@@ -8,17 +8,12 @@ reference's ``[timestamp, shot_start, shot_end, features...]`` matrix
 ``(conv_id, turn_idx, ts, session_id, session_start, session_end,
 features)``.
 
-Two physical strategies, identical output (bit-for-bit, asserted in
-tests/test_kernel.py):
-
-- ``windows`` (default, the scale path): pure-Catalyst window plan —
-  read → JVM text features (narrow) → window prefix aggregates over
-  (conv_id ORDER BY ts, turn_idx) → sink. ONE shuffle, zero Python:
-  whole-stage codegen end to end, so throughput scales with cores
-  (no Python-worker memory-bandwidth ceiling — BENCH/BASELINE.md).
-- ``pandas``: bucket-grouped applyInPandas Arrow kernel (the
-  reference-shaped vectorized batch kernel; also the fixture oracle).
-  read → JVM text features → groupBy(bucket) applyInPandas → sink.
+One physical plan: read → text features packed map-side → ONE
+entity-key shuffle → window prefix aggregates over (conv_id ORDER BY
+ts, turn_idx) → sink. No Python stage: whole-stage codegen end to end,
+so throughput scales with cores (BENCH/BASELINE.md). Its output is
+bit-identical to the numpy oracle ``kernel.compute_features_numeric``
+(tests/test_kernel.py).
 """
 
 from __future__ import annotations
@@ -26,35 +21,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from dane_visual_feature_extraction_worker_spark.kernel import (
-    feature_vectors,
     feature_vectors_windows,
+    with_feature_array,
 )
 
 
-def pit_features(
-    transcripts: DataFrame,
-    n_buckets: int | None = None,
-    strategy: str = "windows",
-) -> DataFrame:
-    """Features + per-session bounds for every (conv_id, ts) anchor.
-
-    ``strategy``: 'windows' (pure-JVM Catalyst plan, default) or
-    'pandas' (Arrow kernel; ``n_buckets`` sizes its pandas buckets —
-    pick so one bucket ≈ corpus/n_buckets rows fits executor memory)."""
-    if strategy == "windows":
-        return feature_vectors_windows(transcripts)
-    if strategy == "pandas":
-        return feature_vectors(transcripts, n_buckets=n_buckets)
-    raise ValueError(f"unknown strategy: {strategy!r}")
+def pit_features(transcripts: DataFrame) -> DataFrame:
+    """Features + per-session bounds for every (conv_id, ts) anchor."""
+    return feature_vectors_windows(transcripts)
 
 
-def pit_features_array(
-    transcripts: DataFrame, n_buckets: int | None = None
-) -> DataFrame:
+def pit_features_array(transcripts: DataFrame) -> DataFrame:
     """Array-form output (fixture schema); flat form is the scale sink."""
-    from dane_visual_feature_extraction_worker_spark.kernel import with_feature_array
-
-    return with_feature_array(pit_features(transcripts, n_buckets))
+    return with_feature_array(pit_features(transcripts))
 
 
 def write_features(

@@ -34,7 +34,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--checkpoints", required=True, help="checkpoint records dir")
     ap.add_argument("--n-buckets", type=int, default=256)
     ap.add_argument("--entity-col", default="conv_id")
-    ap.add_argument("--session-gap-seconds", type=float, default=1800.0)
     ap.add_argument(
         "--config",
         action="append",
@@ -45,23 +44,20 @@ def main(argv: list[str] | None = None) -> int:
     )
     args = ap.parse_args(argv)
 
-    # session comes from spark-submit's conf; only runtime knobs here
-    spark = SparkSession.builder.appName("pit-feature-pipeline").getOrCreate()
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    if args.config:
-        from dane_visual_feature_extraction_worker_spark.config import load_yaml_config
-
-        cfg = load_yaml_config(*args.config)
-        spark.conf.set(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            str(cfg.arrow_batch_size),
-        )
-        for k, v in cfg.extra_conf.items():
-            spark.conf.set(k, v)
-
     from dane_visual_feature_extraction_worker_spark.checkpoint import CheckpointedRunner
+    from dane_visual_feature_extraction_worker_spark.config import (
+        EngineConfig,
+        load_yaml_config,
+    )
     from dane_visual_feature_extraction_worker_spark.plans.pipeline import pit_features
+    from dane_visual_feature_extraction_worker_spark.session import tune_for_session
+
+    # session comes from spark-submit's conf; only runtime knobs here
+    cfg = load_yaml_config(*args.config) if args.config else EngineConfig()
+    spark = SparkSession.builder.appName("pit-feature-pipeline").getOrCreate()
+    tune_for_session(spark, cfg)
+    for k, v in cfg.extra_conf.items():
+        spark.conf.set(k, v)
 
     transcripts = spark.read.parquet(args.input)
     runner = CheckpointedRunner(

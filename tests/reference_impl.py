@@ -10,6 +10,8 @@ keys, allclose on float features).
 
 from __future__ import annotations
 
+import zlib
+
 import numpy as np
 import pandas as pd
 
@@ -68,13 +70,42 @@ def sessionize_ref(t: pd.DataFrame, gap_s: float = SESSION_GAP_S) -> pd.DataFram
     return pd.concat(out).reset_index(drop=True)
 
 
-def features_ref(t: pd.DataFrame) -> pd.DataFrame:
-    """Golden feature vectors: deliberately reuses the kernel's pure-
-    pandas math (engine code path = applyInPandas wrapper around the
-    same function, so this checks the *distributed execution*, while
-    kernel-math correctness is pinned separately by hand-computed cases
-    in test_kernel.py)."""
-    from dane_visual_feature_extraction_worker_spark.kernel import compute_features_pd
+def text_features_ref(t: pd.DataFrame) -> pd.DataFrame:
+    """Per-turn text features in plain Python — ``str.split`` tokens,
+    ``crc32(utf8) % 16`` bag l2-normalized, chars, role code, has_tool —
+    the columns ``kernel.with_text_features`` computes in the JVM."""
+    text = t["text"].fillna("").to_numpy(dtype=object)
+    bag = np.zeros((len(t), 16))
+    for i, s in enumerate(text):
+        for tok in s.split():
+            bag[i, zlib.crc32(tok.encode("utf-8")) % 16] += 1.0
+    words = bag.sum(axis=1)
+    norm = np.sqrt((bag * bag).sum(axis=1, keepdims=True))
+    bag = np.divide(bag, norm, out=np.zeros_like(bag), where=norm > 0)
+    roles = {"user": 0, "assistant": 1, "tool": 2, "system": 3}
+    out = pd.DataFrame(
+        {
+            "conv_id": t["conv_id"].to_numpy(),
+            "turn_idx": t["turn_idx"].to_numpy(),
+            "ts": t["ts"].to_numpy(),
+            "role_code": [roles.get(r, -1) for r in t["role"]],
+            "has_tool": t["tool"].notna().astype(int).to_numpy(),
+            "chars": [float(len(s)) for s in text],
+            "words": words,
+        }
+    )
+    for b in range(16):
+        out[f"bag{b}"] = bag[:, b]
+    return out
 
-    out = [compute_features_pd(g) for _, g in t.groupby("conv_id", sort=True)]
-    return pd.concat(out).reset_index(drop=True)
+
+def features_ref(t: pd.DataFrame) -> pd.DataFrame:
+    """Golden feature vectors: the Python text step above feeding the
+    kernel's numpy oracle ``compute_features_numeric``, so the oracle's
+    tokenizer is independent of the JVM. Kernel-math correctness is
+    pinned separately by hand-computed cases in test_kernel.py."""
+    from dane_visual_feature_extraction_worker_spark.kernel import (
+        compute_features_numeric,
+    )
+
+    return compute_features_numeric(text_features_ref(t))

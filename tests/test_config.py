@@ -51,7 +51,7 @@ def test_load_valid_yaml(tmp_path):
     assert isinstance(cfg, EngineConfig)
     assert cfg.app_name == "yaml-engine"
     assert cfg.shuffle_partitions == 16
-    assert cfg.session_gap_seconds == 1800.0  # int YAML -> float knob
+    assert cfg.arrow_batch_size == 256
     assert cfg.aqe is True
     assert cfg.master is None  # optional key absent
     assert cfg.checkpoint_dir == str(ckpt)
@@ -99,6 +99,53 @@ def test_validation_failure_names_exact_key(tmp_path, mutation, key):
     with pytest.raises(ConfigValidationError) as ei:
         validate_config_tree(tree, validate_file_paths=False)
     assert key in str(ei.value)
+
+
+@pytest.mark.parametrize(
+    "key, value",
+    [
+        ("SESSION_GAP_SECONDS", "900"),
+        ("SESSION_GAP_SECONDS", "'1800'"),
+        ("FEATURE_DIM", "64"),
+    ],
+)
+def test_kernel_constant_keys_must_match_the_kernel(tmp_path, key, value):
+    """The kernel hard-codes the session gap and the feature width; a
+    config that sets another value fails at load, naming the key."""
+    import re
+
+    body = re.sub(rf"{key}: \S+", f"{key}: {value}", VALID.format(ckpt=tmp_path / "c"))
+    with pytest.raises(ConfigValidationError) as ei:
+        load_yaml_config(_write(tmp_path, "c.yml", body))
+    assert f"ENGINE.{key}" in str(ei.value)
+
+
+def test_kernel_constant_keys_are_optional(tmp_path):
+    body = "\n".join(
+        ln
+        for ln in VALID.format(ckpt=tmp_path / "c").splitlines()
+        if "FEATURE_DIM" not in ln and "SESSION_GAP_SECONDS" not in ln
+    )
+    cfg = load_yaml_config(_write(tmp_path, "c.yml", body))
+    assert cfg.app_name == "yaml-engine"
+
+
+def test_run_pipeline_refuses_session_gap_flag(tmp_path):
+    """``--session-gap-seconds`` did nothing, so the job no longer
+    accepts it."""
+    import importlib.util as iu
+    import os
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = iu.spec_from_file_location(
+        "run_pipeline", os.path.join(repo, "jobs", "run_pipeline.py")
+    )
+    job = iu.module_from_spec(spec)
+    spec.loader.exec_module(job)
+    argv = ["--input", f"{tmp_path}/in", "--output", f"{tmp_path}/out",
+            "--checkpoints", f"{tmp_path}/cp", "--session-gap-seconds", "900"]
+    with pytest.raises(SystemExit):
+        job.main(argv)
 
 
 def test_checkpoint_parent_dir_must_exist(tmp_path):

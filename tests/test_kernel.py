@@ -6,12 +6,14 @@ import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 
-from dane_visual_feature_extraction_worker_spark.kernel import (
-    FEATURE_DIM,
-    compute_features_pd,
+from dane_visual_feature_extraction_worker_spark.kernel import FEATURE_DIM
+from dane_visual_feature_extraction_worker_spark.plans.pipeline import (
+    pit_features,
+    pit_features_array,
 )
-from dane_visual_feature_extraction_worker_spark.plans.pipeline import pit_features_array as pit_features
 from tests.reference_impl import features_ref, sort_transcripts
+
+FCOLS = [f"f{i}" for i in range(FEATURE_DIM)]
 
 
 def _tiny_conv() -> pd.DataFrame:
@@ -30,9 +32,8 @@ def _tiny_conv() -> pd.DataFrame:
     )
 
 
-def test_kernel_hand_computed():
-    out = compute_features_pd(_tiny_conv())
-    f = np.stack(out["features"].to_numpy())
+def _assert_hand_computed(out: pd.DataFrame) -> None:
+    f = out[FCOLS].to_numpy()
     assert f.shape == (3, FEATURE_DIM)
     # f0: turns so far
     assert list(f[:, 0]) == [1.0, 2.0, 3.0]
@@ -50,20 +51,30 @@ def test_kernel_hand_computed():
     # turns in session f13 = 1,2,1 ; secs in session f14 = 0,10,0
     assert list(f[:, 13]) == [1.0, 2.0, 1.0]
     assert list(f[:, 14]) == [0.0, 10.0, 0.0]
+    # words this turn f15 = 2,0,1
+    assert list(f[:, 15]) == [2.0, 0.0, 1.0]
     # hashed bag is l2-normalized when text nonempty
     assert abs(np.linalg.norm(f[0, 16:]) - 1.0) < 1e-6
     assert np.linalg.norm(f[1, 16:]) == 0.0
+    # session bounds: [00:00:00, 00:00:10] then the lone 01:00:00 turn
+    t0, t1, t2 = _tiny_conv()["ts"]
+    assert list(out["session_start"]) == [t0, t0, t2]
+    assert list(out["session_end"]) == [t1, t1, t2]
+
+
+def test_kernel_hand_computed(spark):
+    """The same hand-computed values from the oracle and the engine."""
+    _assert_hand_computed(features_ref(_tiny_conv()))
+    got = pit_features(spark.createDataFrame(_tiny_conv())).toPandas()
+    _assert_hand_computed(got.sort_values("turn_idx").reset_index(drop=True))
 
 
 def test_kernel_distributed_matches_reference(transcripts, transcripts_pd):
-    got = pit_features(transcripts).toPandas()
+    got = pit_features_array(transcripts).toPandas()
     got = got.sort_values(["conv_id", "ts", "turn_idx"], kind="mergesort").reset_index(
         drop=True
     )
     ref = features_ref(sort_transcripts(transcripts_pd))
-    ref = ref.sort_values(["conv_id", "ts", "turn_idx"], kind="mergesort").reset_index(
-        drop=True
-    )
     # keys + text-order invariants: exact (feature_extraction_test.py:56)
     pd.testing.assert_series_equal(got["conv_id"], ref["conv_id"])
     pd.testing.assert_series_equal(
@@ -72,7 +83,7 @@ def test_kernel_distributed_matches_reference(transcripts, transcripts_pd):
     assert (got["session_id"].to_numpy() == ref["session_id"].to_numpy()).all()
     # features: allclose (feature_extraction_test.py:58-60)
     gf = np.stack(got["features"].to_numpy())
-    rf = np.stack(ref["features"].to_numpy())
+    rf = ref[FCOLS].to_numpy()
     assert gf.shape == rf.shape == (len(ref), FEATURE_DIM)
     assert np.allclose(gf, rf, rtol=1e-6, atol=1e-6)
     # kernel-computed session bounds == groupby min/max of ts
@@ -94,11 +105,11 @@ def test_zero_temporal_leakage(spark, transcripts, transcripts_pd):
     g = t[t["conv_id"] == conv]
     anchor = g["ts"].iloc[len(g) // 2]
 
-    full = compute_features_pd(g)
-    truncated = compute_features_pd(g[g["ts"] <= anchor])
+    full = features_ref(g)
+    truncated = features_ref(g[g["ts"] <= anchor])
     n = len(truncated)
-    ff = np.stack(full["features"].to_numpy())[:n]
-    tf = np.stack(truncated["features"].to_numpy())
+    ff = full[FCOLS].to_numpy()[:n]
+    tf = truncated[FCOLS].to_numpy()
     assert (ff == tf).all()  # bit-identical, not just allclose
 
     # and through the distributed path: mutate future rows wildly
@@ -125,9 +136,7 @@ def test_zero_temporal_leakage(spark, transcripts, transcripts_pd):
         .sort_values(["ts", "turn_idx"])
         .reset_index(drop=True)
     )
-    bf = np.stack(base["features"].to_numpy())
-    mf = np.stack(mut["features"].to_numpy())
-    assert (bf == mf).all()
+    assert (base[FCOLS].to_numpy() == mut[FCOLS].to_numpy()).all()
 
 
 def test_per_turn_text_equality_under_stable_order(transcripts, transcripts_pd):
@@ -144,41 +153,60 @@ def test_per_turn_text_equality_under_stable_order(transcripts, transcripts_pd):
     pd.testing.assert_frame_equal(got, ref)
 
 
-def test_window_strategy_bit_identical_and_pure_jvm(transcripts):
-    """The pure-Catalyst window plan (r2 scale path) must reproduce the
-    Arrow kernel's float32 output BIT-FOR-BIT (same sequential double
-    arithmetic in the same order) with zero Python stages and one
-    exchange."""
+def _edge_rows(spark, schema):
+    """Exotic whitespace, null text, unknown/null roles, a tie on ts
+    and a session break, as rows of the transcript schema."""
+    t0 = pd.Timestamp("2024-03-01 12:00:00")
+    rows = [
+        ("edge_a", 0, "user", "nbsp\u00a0separated\u00a0tokens", None, 0),
+        ("edge_a", 1, "assistant", "line\u2028sep and\u2029para", "calc", 5),
+        ("edge_a", 2, "bot", "ideographic\u3000space\u3000here", None, 5),
+        ("edge_a", 3, None, "nel\u0085break tab\tmix", None, 4000),
+        ("edge_a", 4, "tool", None, "search", 4010),
+        ("edge_b", 0, "system", " \u00a0\u3000", None, 0),
+        ("edge_b", 1, None, None, None, 60),
+        ("edge_b", 2, "user", "plain ascii words", None, 61),
+    ]
+    pdf = pd.DataFrame(
+        [(c, i, r, x, tl, t0 + pd.Timedelta(seconds=d)) for c, i, r, x, tl, d in rows],
+        columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"],
+    )
+    return spark.createDataFrame(pdf).select(
+        *[F.col(f.name).cast(f.dataType) for f in schema]
+    )
+
+
+def test_window_strategy_bit_identical_and_pure_jvm(spark, transcripts):
+    """The pure-Catalyst window plan must reproduce the numpy oracle
+    ``compute_features_numeric`` BIT-FOR-BIT on every output column
+    (same sequential double arithmetic in the same order), both over
+    the JVM text features and over the Python text step of
+    ``features_ref``, with zero Python stages and one exchange."""
     import re
 
-    from dane_visual_feature_extraction_worker_spark.plans.pipeline import (
-        pit_features,
+    from dane_visual_feature_extraction_worker_spark.kernel import (
+        compute_features_numeric,
+        with_text_features,
     )
 
-    a = (
-        pit_features(transcripts, strategy="pandas")
+    t = transcripts.unionByName(_edge_rows(spark, transcripts.schema))
+    keys = ["conv_id", "ts", "turn_idx"]
+    got = (
+        pit_features(t)
         .toPandas()
-        .sort_values(["conv_id", "ts", "turn_idx"], kind="mergesort")
+        .sort_values(keys, kind="mergesort")
         .reset_index(drop=True)
     )
-    b = (
-        pit_features(transcripts, strategy="windows")
-        .toPandas()
-        .sort_values(["conv_id", "ts", "turn_idx"], kind="mergesort")
-        .reset_index(drop=True)
-    )
-    assert list(a.columns) == list(b.columns)
-    for c in a.columns:
-        av, bv = a[c].to_numpy(), b[c].to_numpy()
-        assert (av == bv).all(), f"column {c} differs"
+    oracle = compute_features_numeric(with_text_features(t).toPandas())
+    python_text = features_ref(t.toPandas())
+    for want in (oracle, python_text):
+        assert list(got.columns) == list(want.columns)
+        for c in got.columns:
+            gv, wv = got[c].to_numpy(), want[c].to_numpy()
+            assert (gv == wv).all(), f"column {c} differs"
 
-    src = transcripts.localCheckpoint(eager=True)
-    plan = (
-        pit_features(src, strategy="windows")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    src = t.localCheckpoint(eager=True)
+    plan = pit_features(src)._jdf.queryExecution().executedPlan().toString()
     assert not re.search(r"Pandas|Python", plan)
     assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1
 
@@ -188,7 +216,7 @@ def test_unicode_whitespace_tokenizer_matches_sql_oracle(spark):
     DuckDB oracle spells the same set as an explicit Unicode
     White_Space class (RE2 \\s is ASCII-only). Exotic-whitespace text -
     NBSP, LINE SEPARATOR, IDEOGRAPHIC SPACE, NEL - must produce
-    identical f15 (words) and f16-31 (md5-nibble bag) on both engines,
+    identical f15 (words) and f16-31 (crc32 bag) on both engines,
     not just on the ASCII testdata."""
     import duckdb
 

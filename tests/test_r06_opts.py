@@ -33,9 +33,15 @@ def test_fan_is_identity_when_scan_is_wide_enough(spark):
     # df handed in — a wide frame must come back unchanged (no extra
     # exchange at production split counts).
     key = (tuple(sorted(wide.inputFiles())), spark.sparkContext.defaultParallelism)
-    dq._SCAN_PARTS.pop(key, None)
-    dq._SCAN_PARTS[key] = wide.rdd.getNumPartitions()
-    assert dq._fan(wide) is wide
+    # the memo key is the file set, shared with the raw scan: restore it
+    # so later tests of the narrow scan still see their own entry
+    saved = dict(dq._SCAN_PARTS)
+    try:
+        dq._SCAN_PARTS[key] = wide.rdd.getNumPartitions()
+        assert dq._fan(wide) is wide
+    finally:
+        dq._SCAN_PARTS.clear()
+        dq._SCAN_PARTS.update(saved)
 
 
 def test_fan_off_switch_restores_plain_scan(spark):
