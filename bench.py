@@ -28,7 +28,6 @@ sys.path.insert(0, REPO)
 
 HEADLINE = [
     "asof_join",
-    "asof_join_pandas",
     "feature_vector_udf",
     "rolling_agg",
     "backfill_pit",
@@ -88,8 +87,6 @@ HEADLINE = [
     "snapshot_diff",
     "skew_report",
     "streaming_enrich",
-    "asof_join_salted",
-    "asof_join_routed",
     "promo_revenue",
     "supplier_balance",
     "funnel_conversion",

@@ -8,22 +8,20 @@ left anchor row, the single latest right row with ``right.ts <=
 left.ts`` within the same entity. Strict ``<=`` is the zero-temporal-
 leakage rule (BASELINE.json north_rule).
 
-Two physical strategies, same semantics:
+One engine path and one oracle, same semantics:
 
-1. ``asof_join_rangejoin`` — declarative Catalyst plan: inequality join +
-   window dedup. Oracle-checkable, good when the right side per entity is
-   small or the join is broadcastable. At scale an unconstrained range
-   join can explode (anchor × all-earlier-rows), so it is the
-   *correctness* path.
+1. ``asof_join_union`` — the engine path: union the tagged sides and
+   take a running ``last(ignorenulls)`` per entity. One shuffle on the
+   entity key, one sort, all whole-stage codegen, no Python stage.
+   ``asof_join_nearest`` and ``asof_join_forward`` share its plan.
 
-2. ``asof_join_sorted`` — the scale path: cogrouped ``applyInPandas``
-   over the entity key running ``pandas.merge_asof`` per group. One
-   shuffle on the entity key for each side, then a linear merge per
-   group (Arrow-batched, vectorized — the analogue of the reference's
-   batched vectorized kernel, feature_extraction.py:17-32). Spark never
-   splits one group across tasks, so no partition-boundary state is
-   needed; skew is handled by AQE for the shuffle and (for pathological
-   single-entity skew) the salted pre-aggregation in joins.py.
+2. ``asof_join_rangejoin`` — the oracle: declarative Catalyst plan,
+   inequality join + window dedup. An unconstrained range join can
+   explode at scale (anchor × all-earlier-rows), so it is the
+   *correctness* path the engine is checked against.
+
+Null keys follow SQL equality on every path: a null-key anchor
+matches nothing and is emitted with null right columns.
 
 Tie-break: among right rows sharing the max ts <= anchor, the one with
 the greatest ``right_order`` column wins (deterministic, mirrors the
@@ -35,7 +33,6 @@ from __future__ import annotations
 
 from typing import Sequence
 
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
@@ -78,90 +75,6 @@ def asof_join_rangejoin(
     )
 
 
-def asof_join_sorted(
-    left: DataFrame,
-    right: DataFrame,
-    on: str = "conv_id",
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    right_order: str | None = None,
-    n_buckets: int | None = None,
-) -> DataFrame:
-    """Scale-path as-of join: bucket-cogrouped ``pandas.merge_asof``.
-
-    Entities are hashed into ``n_buckets`` buckets and the cogroup runs
-    per BUCKET, not per entity: pyspark's grouped-pandas machinery costs
-    ~20-50 ms per group in serialization/setup, so grouping by raw
-    entity key (millions of small groups at corpus scale) drowns the
-    actual merge. Per bucket, ``merge_asof(by=on)`` does the per-entity
-    as-of matching vectorized in one call. Bucket count bounds per-task
-    memory (bucket ≈ corpus/n_buckets); entity groups never split across
-    buckets, so no partition-boundary state is needed.
-
-    Zero leakage: direction='backward' + allow_exact_matches=True ⇒
-    matched_ts <= anchor ts, strictly nothing after the anchor.
-    Tie-break: among equal matched_ts within an entity the greatest
-    ``right_order`` wins (rows sorted ascending; merge_asof takes the
-    last positioned match).
-    """
-    if n_buckets is None:
-        # size buckets from the session's parallelism, not a constant:
-        # r1's fixed 2048 buckets paid ~2048x cogroup/pandas setup at
-        # small SF (bench-dominant, VERDICT r1). 4x shuffle partitions
-        # balances skew while keeping per-group overhead amortized;
-        # callers with huge corpora pass an explicit count to bound
-        # per-task memory instead.
-        sp = int(left.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
-        n_buckets = max(4 * sp, 64)
-    l_cols = left.columns
-    r_extra = [c for c in right.columns if c not in (on, right_ts)]
-    lb = left.withColumn("__b", F.pmod(F.xxhash64(F.col(on)), F.lit(n_buckets)))
-    # fresh key name on the right avoids self-join lineage ambiguity when
-    # left was derived from right (common: anchors = agg of transcripts)
-    r = right.select(
-        F.col(on).alias("__r_on"),
-        F.col(right_ts).alias("matched_ts"),
-        *[F.col(c) for c in r_extra],
-    ).withColumn("__b", F.pmod(F.xxhash64(F.col("__r_on")), F.lit(n_buckets)))
-    out_schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in left.schema.fields]
-        + ["`matched_ts` timestamp"]
-        + [
-            f"`{f.name}` {f.dataType.simpleString()}"
-            for f in r.schema.fields
-            if f.name not in ("__r_on", "matched_ts", "__b")
-        ]
-    )
-    order_cols = ["matched_ts"] + ([right_order] if right_order else [])
-
-    def merge(ldf: pd.DataFrame, rdf: pd.DataFrame) -> pd.DataFrame:
-        ldf = ldf.sort_values(left_ts, kind="mergesort").reset_index(drop=True)
-        if rdf.empty:
-            out = ldf.copy()
-            out["matched_ts"] = pd.NaT
-            for c in r_extra:
-                out[c] = None
-            return out[l_cols + ["matched_ts"] + r_extra]
-        # stable sort by ts (merge_asof contract), tie-break column last
-        # so the LAST positioned row among equal ts is the winner
-        rdf = rdf.sort_values(order_cols, kind="mergesort").reset_index(drop=True)
-        out = pd.merge_asof(
-            ldf,
-            rdf.drop(columns=["__b"]),
-            left_on=left_ts,
-            right_on="matched_ts",
-            left_by=on,
-            right_by="__r_on",
-            direction="backward",  # matched_ts <= ts: zero leakage
-            allow_exact_matches=True,
-        )
-        return out[l_cols + ["matched_ts"] + r_extra]
-
-    return lb.groupBy("__b").cogroup(r.groupBy("__b")).applyInPandas(
-        merge, schema=out_schema
-    )
-
-
 def _tagged_union(
     left: DataFrame,
     right: DataFrame,
@@ -175,8 +88,10 @@ def _tagged_union(
     1, unioned, with an xxhash64 numeric key prefix (distinct 8-byte
     prefixes restore the sorter's prefix comparator on string keys —
     measured sort drag at 30M+ rows; the raw key stays in the
-    partition spec so hash collisions cannot merge entities). Returns
-    ``(unioned, left_cols, right_payload_cols)``."""
+    partition spec so hash collisions cannot merge entities). Null-key
+    right rows are dropped: under SQL equality they match no anchor,
+    and kept they would share one window partition with null-key
+    anchors. Returns ``(unioned, left_cols, right_payload_cols)``."""
     l_cols = list(left.columns)
     r_extra = [c for c in right.columns if c not in (on, right_ts)]
     ordcol = (
@@ -184,7 +99,7 @@ def _tagged_union(
         if right_order
         else F.lit(0).cast("bigint")
     )
-    r_side = right.select(
+    r_side = right.where(F.col(on).isNotNull()).select(
         F.col(on).alias("__k"),
         F.col(right_ts).alias("__ts"),
         F.lit(0).alias("__tag"),
@@ -237,13 +152,12 @@ def asof_join_union(
     the tie; zero temporal leakage by construction).
 
     ONE shuffle (hash on the entity key) + one sort, all whole-stage
-    codegen — no Python, no Arrow transfer. This is the default scale
-    path; ``asof_join_sorted`` (cogrouped merge_asof) and
-    ``asof_join_rangejoin`` are the verified alternatives. Skew: a hot
-    entity is one sort run inside a partition (linear scan), and AQE
-    skew-split handles oversized shuffle blocks.
+    codegen — no Python, no Arrow transfer. This is the engine path;
+    ``asof_join_rangejoin`` is its oracle. Skew: a hot entity is one
+    sort run inside a partition (linear scan), and AQE skew-split
+    handles oversized shuffle blocks.
 
-    Output schema matches the other two paths: left columns +
+    Output schema matches ``asof_join_rangejoin``: left columns +
     ``matched_ts`` + right payload columns.
     """
     u, l_cols, r_extra = _tagged_union(
@@ -440,132 +354,6 @@ def asof_join_forward(
         F.col("__m.matched_ts").alias("matched_ts"),
         *[F.col(f"__m.{c}").alias(c) for c in r_extra],
     )
-
-
-def asof_join_salted(
-    left: DataFrame,
-    right: DataFrame,
-    on: str = "conv_id",
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    right_order: str | None = None,
-    block_seconds: float = 86_400.0,
-) -> DataFrame:
-    """Skew-safe as-of join: the hot-conversation twin of
-    ``asof_join_union`` (north rule: salted-key skew mitigation). The
-    plain union-window plan serializes each entity into ONE task's
-    sort+scan — a conversation with 10^8 turns is a straggler no
-    matter the cluster size (AQE cannot split a window partition).
-    Same time-block decomposition as ``salted_running_sum``:
-
-    1. salt by TIME RANGE (``block = floor(epoch(ts)/block_seconds)``)
-       and run the running-last match within each (entity, block)
-       partition — parallel across blocks of the same entity;
-    2. one summary row per (entity, block): the last right payload of
-       the block (``max_by`` over right rows only — anchors excluded
-       by a null ordering key, so empty blocks yield null);
-    3. a tiny window over block summaries carries the latest match
-       across STRICTLY earlier blocks; anchors whose block has no
-       earlier right row coalesce to the carry-in.
-
-    Output is row-identical to ``asof_join_union`` (asserted in tests
-    and by sharing its oracle): the in-block match IS the global match
-    whenever the block contains any right row at or before the
-    anchor, and otherwise the carry-in is exactly the latest right row
-    of all earlier blocks. Choose ``block_seconds`` so a hot entity's
-    densest block fits a task (blocks ≈ entity span / block_seconds);
-    cold entities pay one extra tiny join — route on a count rollup
-    (``skew_report``) exactly like ``auto_salt_prefix_features``.
-    """
-    u, l_cols, r_extra = _tagged_union(
-        left, right, on, left_ts, right_ts, right_order
-    )
-    from dane_visual_feature_extraction_worker_spark.functions import (
-        epoch_seconds,
-    )
-
-    u = u.withColumn(
-        "__blk",
-        F.floor(epoch_seconds("__ts") / F.lit(float(block_seconds))).cast(
-            "bigint"
-        ),
-    )
-    w_in = (
-        Window.partitionBy("__kh", "__k", "__blk")
-        .orderBy("__ts", "__tag", "__ord")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    intra = u.withColumn("__m_in", F.last("__r", ignorenulls=True).over(w_in))
-    # right-rows-only argmax per block: a null ordering key makes
-    # max_by skip anchor rows entirely
-    right_ord = F.when(
-        F.col("__tag") == 0, F.struct(F.col("__ts"), F.col("__ord"))
-    )
-    summaries = u.groupBy("__kh", "__k", "__blk").agg(
-        F.max_by("__r", right_ord).alias("__blk_last")
-    )
-    w_blk = (
-        Window.partitionBy("__kh", "__k")
-        .orderBy("__blk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carry = summaries.withColumn(
-        "__carry", F.last("__blk_last", ignorenulls=True).over(w_blk)
-    ).select("__kh", "__k", "__blk", "__carry")
-    anchors = (
-        intra.where(F.col("__tag") == 1)
-        .join(carry, ["__kh", "__k", "__blk"])
-        .withColumn("__m", F.coalesce(F.col("__m_in"), F.col("__carry")))
-    )
-    return anchors.select(
-        *[F.col(f"__l_{c}").alias(c) for c in l_cols],
-        F.col("__m.matched_ts").alias("matched_ts"),
-        *[F.col(f"__m.{c}").alias(c) for c in r_extra],
-    )
-
-
-def asof_join_routed(
-    left: DataFrame,
-    right: DataFrame,
-    on: str = "conv_id",
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    right_order: str | None = None,
-    hot_threshold: int = 1_000_000,
-    block_seconds: float = 86_400.0,
-) -> DataFrame:
-    """Count-routed as-of: plain union-window for the cold majority,
-    time-block salted twin for entities whose COMBINED (left + right)
-    row count reaches ``hot_threshold`` — the same wired routing rule
-    as ``auto_salt_prefix_features`` (r4 VERDICT precedent), applied
-    to the flagship join. One cheap map-side-combined count per side
-    finds the hot set (≤ rows/threshold entities, always
-    broadcastable); the split is broadcast semi/anti, the slices run
-    their own plans, and the union is exact because salted is
-    row-identical to plain (``asof_join_salted`` docstring)."""
-    counts = (
-        left.select(F.col(on).alias("__e"))
-        .unionAll(right.select(F.col(on).alias("__e")))
-        .groupBy("__e")
-        .agg(F.count(F.lit(1)).alias("__n"))
-    )
-    hot_keys = counts.where(F.col("__n") >= hot_threshold).select(
-        F.col("__e").alias(on)
-    )
-    kw = dict(on=on, left_ts=left_ts, right_ts=right_ts,
-              right_order=right_order)
-    cold = asof_join_union(
-        left.join(F.broadcast(hot_keys), on, "left_anti"),
-        right.join(F.broadcast(hot_keys), on, "left_anti"),
-        **kw,
-    )
-    hot = asof_join_salted(
-        left.join(F.broadcast(hot_keys), on, "left_semi"),
-        right.join(F.broadcast(hot_keys), on, "left_semi"),
-        block_seconds=block_seconds,
-        **kw,
-    ).select(*cold.columns)
-    return cold.unionByName(hot)
 
 
 def resample_ffill(

@@ -3099,8 +3099,8 @@ def isotonic_calibration(
     ``calibration_bins`` — and the output maps every x to the PAV-
     pooled mean, the classic post-hoc calibrator when Platt's sigmoid
     shape doesn't fit.  PAV is inherently sequential in x, so this is
-    a legitimate ``applyInPandas`` stage (the asof_join_pandas
-    precedent): per-GROUP sequential, across-group parallel, with the
+    a legitimate ``applyInPandas`` stage: per-GROUP sequential,
+    across-group parallel, with the
     bin rollup having already collapsed the corpus — the Python path
     touches |bins| rows, never events.
 

@@ -27,7 +27,6 @@ from dane_visual_feature_extraction_worker_spark.functions import (
     epoch_seconds,
     ts_seconds_pd,
 )
-from dane_visual_feature_extraction_worker_spark.operators.asof import asof_join_sorted
 from dane_visual_feature_extraction_worker_spark.operators.intervals import interval_join
 from dane_visual_feature_extraction_worker_spark.operators.joins import outer_merge, salted_join
 from dane_visual_feature_extraction_worker_spark.operators.sessionize import session_stats
@@ -274,17 +273,6 @@ def asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     purchases, clicks = _asof_sides(spark, sf_dir)
     return asof_join_union(
-        purchases, clicks, on="user_id", left_ts="ts", right_ts="ts",
-        right_order="click_id",
-    )
-
-
-def asof_join_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow physical path of the same as-of semantics: bucket-cogrouped
-    ``pandas.merge_asof`` (the reference-shaped vectorized batch kernel).
-    Verified against the identical oracle as ``asof_join``."""
-    purchases, clicks = _asof_sides(spark, sf_dir)
-    return asof_join_sorted(
         purchases, clicks, on="user_id", left_ts="ts", right_ts="ts",
         right_order="click_id",
     )
@@ -1596,7 +1584,6 @@ def rolling_time_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLES.update(
     {
         "asof_join_range": ORACLES["asof_join"],
-        "asof_join_pandas": ORACLES["asof_join"],
         "salted_running_sum": """
             SELECT event_id, user_id, ts,
                    CAST(sum(CAST(round(value * 100) AS BIGINT)) OVER w
@@ -1664,7 +1651,6 @@ ORACLES.update(
 QUERIES.update(
     {
         "asof_join_range": asof_join_range,
-        "asof_join_pandas": asof_join_pandas,
         "dependency_lookup": dependency_lookup,
         "salted_running_sum": salted_running_sum_q,
         "streaming_sessionize": streaming_sessionize,
@@ -4070,48 +4056,6 @@ ORACLES["streaming_enrich"] = """
           FROM events GROUP BY user_id) d USING (user_id)
 """
 QUERIES["streaming_enrich"] = streaming_enrich_q
-
-
-def asof_join_salted_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skew-safe as-of twin (operators/asof.asof_join_salted):
-    time-block decomposition parallelizes a hot conversation across
-    (entity, block) partitions; block summaries + a tiny carry window
-    restore the exact global match. Row-identical to `asof_join` —
-    shares its oracle (6-hour blocks so the sf tables span many)."""
-    from dane_visual_feature_extraction_worker_spark.operators.asof import (
-        asof_join_salted,
-    )
-
-    purchases, clicks = _asof_sides(spark, sf_dir)
-    return asof_join_salted(
-        purchases, clicks, on="user_id", left_ts="ts", right_ts="ts",
-        right_order="click_id", block_seconds=6 * 3600.0,
-    )
-
-
-ORACLES["asof_join_salted"] = ORACLES["asof_join"]
-QUERIES["asof_join_salted"] = asof_join_salted_q
-
-
-def asof_join_routed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-routed as-of (operators/asof.asof_join_routed): the
-    threshold sits at the sf0.01 per-user median so BOTH the plain and
-    salted paths execute under the gate; same oracle as asof_join
-    (routing is purely physical)."""
-    from dane_visual_feature_extraction_worker_spark.operators.asof import (
-        asof_join_routed,
-    )
-
-    purchases, clicks = _asof_sides(spark, sf_dir)
-    return asof_join_routed(
-        purchases, clicks, on="user_id", left_ts="ts", right_ts="ts",
-        right_order="click_id", hot_threshold=30,
-        block_seconds=6 * 3600.0,
-    )
-
-
-ORACLES["asof_join_routed"] = ORACLES["asof_join"]
-QUERIES["asof_join_routed"] = asof_join_routed_q
 
 
 def promo_revenue_q(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,15 +1,18 @@
-"""As-of join: both physical paths vs the brute-force pandas oracle,
-including ties, empty right sides, and anchors before any event."""
+"""As-of join: the union-window engine path and its range-join oracle
+vs the brute-force pandas reference, including ties, null keys, empty
+right sides, and anchors before any event."""
 
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 import pyspark.sql.functions as F
 
 from dane_visual_feature_extraction_worker_spark.datagen import gen_anchors, gen_transcripts
 from dane_visual_feature_extraction_worker_spark.operators.asof import (
+    asof_join_forward,
+    asof_join_nearest,
     asof_join_rangejoin,
-    asof_join_sorted,
     asof_join_union,
 )
 from tests.reference_impl import asof_join_ref
@@ -24,9 +27,6 @@ def test_asof_paths_match_bruteforce(spark, transcripts, transcripts_pd):
     anchors = gen_anchors(spark, transcripts, per_conv=6)
     right = transcripts.select("conv_id", "ts", "turn_idx", "role")
 
-    got_sorted = asof_join_sorted(
-        anchors, right, on="conv_id", left_ts="anchor_ts", right_order="turn_idx"
-    ).toPandas()
     got_union = asof_join_union(
         anchors, right, on="conv_id", left_ts="anchor_ts", right_order="turn_idx"
     ).toPandas()
@@ -48,7 +48,7 @@ def test_asof_paths_match_bruteforce(spark, transcripts, transcripts_pd):
         right_order="turn_idx",
     )
     ref["turn_idx"] = ref["turn_idx"].astype("float64")
-    for got in (got_sorted, got_range, got_union):
+    for got in (got_range, got_union):
         g = _canon(got)
         g["turn_idx"] = g["turn_idx"].astype("float64")
         r = _canon(ref)[g.columns]
@@ -60,7 +60,7 @@ def test_asof_paths_match_bruteforce(spark, transcripts, transcripts_pd):
 def test_asof_zero_leakage(spark, transcripts):
     """No matched_ts may exceed its anchor — strict <= (north rule)."""
     anchors = gen_anchors(spark, transcripts, per_conv=6)
-    out = asof_join_sorted(
+    out = asof_join_union(
         anchors,
         transcripts.select("conv_id", "ts", "turn_idx"),
         on="conv_id",
@@ -68,17 +68,6 @@ def test_asof_zero_leakage(spark, transcripts):
         right_order="turn_idx",
     )
     assert out.where(F.col("matched_ts") > F.col("anchor_ts")).count() == 0
-
-
-def test_asof_empty_right_side(spark, transcripts):
-    anchors = gen_anchors(spark, transcripts, per_conv=3)
-    empty = transcripts.where(F.lit(False)).select("conv_id", "ts", "turn_idx")
-    out = asof_join_sorted(
-        anchors, empty, on="conv_id", left_ts="anchor_ts", right_order="turn_idx"
-    )
-    pdf = out.toPandas()
-    assert len(pdf) == anchors.count()
-    assert pdf["matched_ts"].isna().all()
 
 
 def test_asof_tie_break_latest_order_wins(spark):
@@ -91,7 +80,6 @@ def test_asof_tie_break_latest_order_wins(spark):
         "conv_id string, ts long, turn_idx int, v string",
     ).select("conv_id", F.timestamp_seconds("ts").alias("ts"), "turn_idx", "v")
     for fn, kw in (
-        (asof_join_sorted, {}),
         (asof_join_union, {}),
         (asof_join_rangejoin, {"left_keys": ["conv_id", "anchor_ts"]}),
     ):
@@ -99,6 +87,35 @@ def test_asof_tie_break_latest_order_wins(spark):
             left, right, on="conv_id", left_ts="anchor_ts", right_order="turn_idx", **kw
         ).collect()[0]
         assert row["v"] == "b" and row["turn_idx"] == 2
+
+
+@pytest.mark.parametrize(
+    "fn, kw, want_a",
+    [
+        (asof_join_union, {}, (50, 1)),
+        (asof_join_union, {"tolerance_seconds": 1000.0}, (50, 1)),
+        (asof_join_nearest, {}, (120, 4)),
+        (asof_join_forward, {}, (120, 4)),
+        (asof_join_rangejoin, {"left_keys": ["k", "ts"]}, (50, 1)),
+    ],
+    ids=["union", "union_tolerance", "nearest", "forward", "rangejoin"],
+)
+def test_asof_null_key_anchor_matches_nothing(spark, fn, kw, want_a):
+    """SQL equality on every as-of path: a null-key anchor is emitted
+    with null right columns, never matched to null-keyed right rows
+    (which sit both before and after it here)."""
+    left = spark.createDataFrame(
+        [("a", 100), (None, 100)], "k string, sec long"
+    ).select("k", F.timestamp_seconds("sec").alias("ts"))
+    right = spark.createDataFrame(
+        [("a", 50, 1), ("a", 120, 4), (None, 50, 2), (None, 150, 3)],
+        "k string, sec long, o int",
+    ).select("k", F.timestamp_seconds("sec").alias("ts"), "o")
+    rows = fn(left, right, on="k", right_order="o", **kw).collect()
+    out = {r["k"]: r for r in rows}
+    assert len(rows) == 2 and set(out) == {"a", None}
+    assert (int(out["a"]["matched_ts"].timestamp()), out["a"]["o"]) == want_a
+    assert out[None]["matched_ts"] is None and out[None]["o"] is None
 
 
 def test_asof_union_empty_right_and_pure_jvm_plan(spark, transcripts):
@@ -236,77 +253,3 @@ def test_asof_forward_strict_and_tolerance(spark):
     assert out[2]["rid"] == 20
     assert out[3]["rid"] is None
     assert out[4]["rid"] is None
-
-
-def test_asof_salted_identical_to_plain_incl_empty_blocks(spark):
-    """Block decomposition is invisible: identical rows to the plain
-    union-window plan, including anchors whose own block has no right
-    row (carry-in across an arbitrary gap of empty blocks) and ties
-    inside one block."""
-    import pyspark.sql.functions as F
-
-    from dane_visual_feature_extraction_worker_spark.operators.asof import (
-        asof_join_salted,
-        asof_join_union,
-    )
-
-    # right rows only in block 0; anchors stretch blocks 0..9 with a
-    # long empty-block gap; duplicate right ts exercises the ord tie
-    left = spark.createDataFrame(
-        [(1, s) for s in (5, 50, 450, 900)] + [(2, 100)],
-        "k long, sec long",
-    ).select("k", F.timestamp_seconds("sec").alias("ts"))
-    right = spark.createDataFrame(
-        [(1, 10, 1), (1, 10, 2), (1, 40, 3)],
-        "k long, sec long, rid long",
-    ).select("k", F.timestamp_seconds("sec").alias("ts"), "rid")
-    plain = sorted(
-        map(tuple, asof_join_union(left, right, on="k", right_order="rid").collect())
-    )
-    salted = sorted(
-        map(
-            tuple,
-            asof_join_salted(
-                left, right, on="k", right_order="rid", block_seconds=100.0
-            ).collect(),
-        )
-    )
-    assert plain == salted
-    by_sec = {int(r[1].timestamp()): r for r in salted}
-    assert by_sec[5][3] is None           # before any right row
-    assert by_sec[50][3] == 3             # in-block latest
-    assert by_sec[450][3] == 3            # carry across empty blocks
-    assert by_sec[900][3] == 3
-    assert by_sec[100][3] is None         # other entity: no rights
-
-
-def test_asof_routed_identical_both_paths(spark):
-    """Routed == plain on a mix where one entity crosses the threshold
-    (salted path) and the rest stay cold (plain path)."""
-    import pyspark.sql.functions as F
-
-    from dane_visual_feature_extraction_worker_spark.operators.asof import (
-        asof_join_routed,
-        asof_join_union,
-    )
-
-    left = spark.range(600).select(
-        F.when(F.col("id") < 500, 1).otherwise(F.col("id") % 5 + 2).alias("k"),
-        F.timestamp_seconds(F.col("id") * 7).alias("ts"),
-    )
-    right = spark.range(200).select(
-        F.when(F.col("id") < 150, 1).otherwise(F.col("id") % 5 + 2).alias("k"),
-        F.timestamp_seconds(F.col("id") * 11 + 1).alias("ts"),
-        F.col("id").alias("rid"),
-    )
-    plain = sorted(map(tuple, asof_join_union(left, right, on="k", right_order="rid").collect()))
-    routed = sorted(
-        map(
-            tuple,
-            asof_join_routed(
-                left, right, on="k", right_order="rid",
-                hot_threshold=100, block_seconds=500.0,
-            ).collect(),
-        )
-    )
-    assert plain == routed and len(plain) == 600

@@ -71,51 +71,71 @@ def test_read_parquet_memoized_schema_matches_inference(spark):
 
 def test_textstats_has_no_eager_collect():
     """VERDICT r5 #4 done-criterion: the LM scorers route their corpus
-    totals through lazy broadcast scalars — no `.collect()` barrier
-    anywhere in operators/textstats.py."""
+    totals through lazy broadcast scalars — no eager action
+    (``collect``/``toPandas``/``first``/``head``) anywhere in
+    operators/textstats.py. Scans the syntax tree, so prose in a
+    docstring or comment cannot trip it; ``F.first`` is the lazy
+    aggregate, not the action."""
+    import ast
     import inspect
 
     from dane_visual_feature_extraction_worker_spark.operators import textstats
 
-    src = inspect.getsource(textstats)
-    assert ".collect(" not in src
+    eager = [
+        f"{node.func.attr} (line {node.lineno})"
+        for node in ast.walk(ast.parse(inspect.getsource(textstats)))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in {"collect", "toPandas", "first", "head"}
+        and not (isinstance(node.func.value, ast.Name) and node.func.value.id == "F")
+    ]
+    assert eager == []
 
 
-def test_lean_projection_order_matches_turn_idx(spark):
+def test_lean_projection_order_matches_turn_idx(spark, monkeypatch):
     """The `_tr_proj_lean` contract: within a conversation, ordering by
     (ts, turn_ord=event_id) is exactly the full projection's turn_idx
     order — so operators that only ORDER by turn_idx are result-
-    identical on the lean frame (no corpus rank window)."""
+    identical on the lean frame (no corpus rank window).
+
+    Checked row by row on (conv_id, ts, event_id). The events are
+    coarsened to whole days so ts ties exist and the tie-break is
+    exercised, and each row's event_id rides in ``props`` (the full
+    projection's ``text``) so the full side keeps its identity."""
+    from pyspark.sql import Window
+
     from dane_visual_feature_extraction_worker_spark.plans import driver_queries as dq
 
-    full = dq._tr_proj(spark, SF).select("conv_id", "turn_idx", "ts")
+    events = dq._events
+
+    def tied_events(spark, sf_dir):
+        return events(spark, sf_dir).select(
+            "event_id",
+            F.date_trunc("day", "ts").alias("ts"),
+            "user_id",
+            "event_type",
+            "value",
+            F.col("event_id").cast("string").alias("props"),
+        )
+
+    monkeypatch.setattr(dq, "_events", tied_events)
+    full = dq._tr_proj(spark, SF).select(
+        "conv_id", "ts", F.col("text").cast("long").alias("event_id"), "turn_idx"
+    )
     lean = dq._tr_proj_lean(spark, SF)
-    from pyspark.sql import Window
+    assert lean.groupBy("conv_id", "ts").count().where("count > 1").count() > 0
 
     w = Window.partitionBy("conv_id").orderBy("ts", "turn_ord")
     rederived = lean.select(
         "conv_id",
-        (F.row_number().over(w) - 1).cast("int").alias("turn_idx2"),
         "ts",
-        "turn_ord",
+        F.col("turn_ord").alias("event_id"),
+        (F.row_number().over(w) - 1).cast("int").alias("turn_idx2"),
     )
-    joined = full.join(
-        rederived,
-        on=["conv_id", "ts"],
-        how="full_outer",
-    )
-    # every (conv, ts) pairing carries equal rank sets; compare the
-    # multisets per conversation to be tie-safe
-    bad = (
-        joined.groupBy("conv_id")
-        .agg(
-            F.sort_array(F.collect_list("turn_idx")).alias("a"),
-            F.sort_array(F.collect_list("turn_idx2")).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .count()
-    )
-    assert bad == 0
+    joined = full.join(rederived, on=["conv_id", "ts", "event_id"], how="full_outer")
+    n = full.count()
+    assert n > 0 and rederived.count() == n and joined.count() == n
+    assert joined.where(~F.col("turn_idx").eqNullSafe(F.col("turn_idx2"))).count() == 0
     # and the lean plan really has no Window node
     plan = lean._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan
