@@ -7,7 +7,9 @@ Generalizes the reference's control plane:
 - per-step timed Provenance records persisted as JSON
   (models.py:19-43, provenance.py:19-43) → here: one small JSON record
   per bucket in ``checkpoint_dir`` with rows/bytes/ms/status + a JSON
-  lineage blob;
+  lineage blob, plus one ``_provenance_attempt<n>.json`` per successful
+  attempt in ``output_dir`` holding the summary ``run()`` returns (no
+  separate provenance tracker);
 - result registration in an index (worker.py:93-114 save_to_dane_index)
   → here: the checkpoint record IS the registration.
 
@@ -42,7 +44,7 @@ from typing import Callable
 
 import pyspark.sql.functions as F
 from py4j.protocol import Py4JJavaError
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 
 CHECKPOINT_SCHEMA = (
     "bucket int, status string, rows bigint, bytes bigint, ms double, "
@@ -87,6 +89,8 @@ class CheckpointedRunner:
         n_buckets: int = 16,
         entity_col: str = "conv_id",
     ) -> None:
+        if n_buckets < 1:
+            raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
         self.spark = spark
         self.output_dir = output_dir
         self.checkpoint_dir = checkpoint_dir
@@ -150,9 +154,6 @@ class CheckpointedRunner:
             [tuple(r.values()) for r in self._records()], CHECKPOINT_SCHEMA
         )
 
-    def done_buckets(self) -> set[int]:
-        return {r["bucket"] for r in self._records() if r["status"] == "done"}
-
     def _record(self, row: dict) -> None:
         """Publish one record: write a ``_`` temp, rename it into place."""
         name = f"bucket={row['bucket']}-attempt={row['attempt']}.json"
@@ -169,29 +170,17 @@ class CheckpointedRunner:
         pipeline: Callable[[DataFrame], DataFrame],
         fail_after: int | None = None,
     ) -> dict:
-        """Process all pending buckets; returns summary.
+        """Process all pending buckets; returns the attempt summary, which
+        is also written to ``{output_dir}/_provenance_attempt<n>.json``.
 
         ``fail_after``: crash injection for resume tests — raises after
         N buckets complete (simulates a killed job).
         """
-        from dane_visual_feature_extraction_worker_spark.provenance import (
-            ProvenanceTracker,
-            observed_write,
-        )
-
+        t_run = time.monotonic()
         records = self._records()
         done_rows = {r["bucket"]: r["rows"] for r in records if r["status"] == "done"}
         pending = [b for b in range(self.n_buckets) if b not in done_rows]
         attempt = 1 + max((r["attempt"] for r in records), default=0)
-        prov = ProvenanceTracker(
-            "checkpointed_run",
-            params={
-                "n_buckets": self.n_buckets,
-                "entity_col": self.entity_col,
-                "attempt": attempt,
-                "pending": len(pending),
-            },
-        )
         # Stage the pending input ONCE, hive-partitioned by bucket: one
         # scan + one write of the source per attempt, then every
         # per-bucket read prunes on the partition column (PartitionFilters
@@ -214,12 +203,22 @@ class CheckpointedRunner:
                 # (ADVICE r3): a source bucketed with a different
                 # n_buckets (e.g. 0..511 against a 256-bucket runner)
                 # would silently drop every row whose bucket is out of
-                # range while the run reports success. One cheap agg —
-                # for a hive ``__bucket=`` layout this reads partition
-                # values from the file listing, no data scan.
-                lo, hi = source.agg(
-                    F.min("__bucket"), F.max("__bucket")
+                # range while the run reports success, and a null
+                # ``__bucket`` row matches no bucket (min/max skip
+                # nulls, so they need their own count). One cheap agg —
+                # for a hive ``__bucket=`` layout it reads partition
+                # values, no data column.
+                lo, hi, nulls = source.agg(
+                    F.min("__bucket"),
+                    F.max("__bucket"),
+                    F.count(F.when(F.col("__bucket").isNull(), 1)),
                 ).collect()[0]
+                if nulls:
+                    raise ValueError(
+                        f"pre-bucketed source has {nulls} rows with a null "
+                        f"__bucket, which no bucket would process; assign "
+                        f"them a bucket in 0..{self.n_buckets - 1}"
+                    )
                 if lo is not None and (lo < 0 or hi >= self.n_buckets):
                     raise ValueError(
                         f"pre-bucketed source has __bucket range "
@@ -249,12 +248,12 @@ class CheckpointedRunner:
             part = staged.where(F.col("__bucket") == b).drop("__bucket")
             out = pipeline(part)
             path = os.path.join(self.output_dir, f"bucket={b}")
-            with prov.step("bucket", bucket=b) as ps:
-                # rows observed DURING the sink write (Observation) —
-                # the old write-then-read-back-count() re-scanned every
-                # bucket's output, a full second pass at 100 TB
-                rows = int(observed_write(out, path)["rows"])
-                ps.output_data = {"rows": rows, "path": path}
+            # rows observed DURING the sink write: counting before or
+            # after the write would be a second pass over the bucket
+            obs = Observation()
+            out = out.observe(obs, F.count(F.lit(1)).alias("rows"))
+            out.write.mode("overwrite").parquet(path)
+            rows = int(obs.get["rows"])
             ms = (time.monotonic() - t0) * 1000.0
             fs, p = self._path(path)
             self._record(
@@ -292,11 +291,10 @@ class CheckpointedRunner:
             "source_scans": 1,
             "staged_writes": staged_writes,
             "output_rows": sum(done_rows.values()),
+            "ms": (time.monotonic() - t_run) * 1000.0,
         }
         fs, p = self._path(self.output_dir, f"_provenance_attempt{attempt}.json")
-        _write_text(
-            fs, p, json.dumps(prov.finish(summary), indent=2, sort_keys=True)
-        )
+        _write_text(fs, p, json.dumps(summary, indent=2, sort_keys=True))
         return summary
 
     def result(self) -> DataFrame:

@@ -358,10 +358,14 @@ def _lm_score(toks: DataFrame, id_col: str, vocab_k: int) -> DataFrame:
 
     The corpus-total N rides along as a LAZY broadcast scalar (the
     psi_drift/time_travel precedent) instead of an eager ``collect``:
-    one plan, no mid-plan driver barrier, and the counts exchange is
-    reusable between the total and the top-K vocab within that single
-    job.  N < 2^53 keeps every cast-to-double exact, so ln(N/n) and
-    ln(2N) are bit-identical to the former Python-literal form."""
+    one plan, no mid-plan driver barrier.  ``tot`` is broadcast twice
+    (under ``vocab`` and under ``scored``) and ``counts``/``tot`` are
+    not persisted, so the counts exchange runs once only because
+    Spark's ``ReusedExchange`` matches the two identical broadcast
+    subtrees; if they diverge (e.g. a hint added to one), the reuse
+    breaks and the counts are computed twice.  N < 2^53 keeps every
+    cast-to-double exact, so ln(N/n) and ln(2N) are bit-identical to the
+    former Python-literal form."""
     counts = toks.groupBy("term").agg(F.count(F.lit(1)).alias("n"))
     tot = counts.agg(F.sum("n").alias("__N"))  # 1 row, stays lazy
     vocab = (

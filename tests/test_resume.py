@@ -31,7 +31,7 @@ def test_resume_skips_done_work_and_output_identical(spark, transcripts, tmp_pat
     crash = _runner(spark, tmp, "crash")
     with pytest.raises(RuntimeError, match="injected failure"):
         crash.run(transcripts, pit_features, fail_after=2)
-    assert len(crash.done_buckets()) == 2
+    assert crash.load_checkpoints().where("status = 'done'").count() == 2
 
     # resume: only the remaining 4 buckets are computed
     s2 = crash.run(transcripts, pit_features)
@@ -84,6 +84,32 @@ def test_source_scanned_once_per_attempt(spark, transcripts, tmp_path):
     assert acc.value == n_rows, (
         f"source scanned {acc.value / n_rows:.1f}x, expected exactly once"
     )
+    assert r.result().count() == n_rows
+
+
+def test_runner_counts_rows_in_the_write_pass(spark, transcripts, tmp_path):
+    """``output_rows`` comes from an ``Observation`` on each bucket's
+    write: a tick-UDF accumulator in the pipeline proves every bucket's
+    output is computed exactly once (no count before or after the write).
+    The UDF sits in a filter so that a ``count()`` cannot prune it."""
+    import pyspark.sql.functions as F
+    from pyspark.sql.types import LongType
+
+    acc = spark.sparkContext.accumulator(0)
+
+    def tick(x):
+        acc.add(1)
+        return x
+
+    tick_udf = F.udf(tick, LongType())
+    n_rows = transcripts.count()
+    r = _runner(spark, str(tmp_path), "observe", n_buckets=3)
+    s = r.run(
+        transcripts,
+        lambda df: df.where(tick_udf(F.col("turn_idx").cast("long")) >= 0),
+    )
+    assert s["computed"] == 3 and s["output_rows"] == n_rows
+    assert acc.value == n_rows, f"pipeline ran {acc.value / n_rows:.1f}x"
     assert r.result().count() == n_rows
 
 
@@ -192,6 +218,34 @@ def test_restart_with_other_bucket_count_is_refused(spark, transcripts, tmp_path
         wrong_key.run(transcripts, pit_features)
 
 
+def test_prebucketed_source_rejects_null_buckets(spark, transcripts, tmp_path):
+    """A hive ``__bucket=`` source with null-bucket rows used to report
+    success without them: min/max skip nulls and ``__bucket == b``
+    selects none of them."""
+    import pyspark.sql.functions as F
+
+    from dane_visual_feature_extraction_worker_spark.checkpoint import bucket_of
+
+    pre_dir = f"{tmp_path}/nullbucket"
+    b = bucket_of("conv_id", 4)
+    transcripts.withColumn(
+        "__bucket", F.when(b != 0, b)
+    ).write.partitionBy("__bucket").parquet(pre_dir)
+    pre = spark.read.parquet(pre_dir)
+    nulls = pre.where(F.col("__bucket").isNull()).count()
+    assert 0 < nulls < transcripts.count()
+    r = _runner(spark, str(tmp_path), "nullb", n_buckets=4)
+    with pytest.raises(ValueError, match=f"{nulls} rows with a null __bucket"):
+        r.run(pre, lambda df: df)
+
+
+@pytest.mark.parametrize("n_buckets", [0, -1])
+def test_runner_refuses_fewer_than_one_bucket(spark, tmp_path, n_buckets):
+    """``n_buckets=0`` used to report success over an empty table."""
+    with pytest.raises(ValueError, match="n_buckets must be >= 1"):
+        _runner(spark, str(tmp_path), "nobuckets", n_buckets=n_buckets)
+
+
 @pytest.mark.parametrize(
     "damage", ["garbled_record", "checksum_mismatch", "old_parquet_part"]
 )
@@ -227,7 +281,9 @@ def test_unreadable_checkpoint_dir_raises_naming_the_file(
 def test_runner_on_file_uris(spark, transcripts, tmp_path):
     """Every filesystem call goes through Hadoop FileSystem, so a
     ``file://`` URI behaves like a plain path: bytes are measured,
-    staging is cleaned up and the provenance record is written."""
+    staging is cleaned up and the attempt summary is written: one
+    ``_provenance_attempt1.json`` equal to what ``run()`` returned."""
+    import json
     import os
 
     tmp = str(tmp_path)
@@ -239,7 +295,11 @@ def test_runner_on_file_uris(spark, transcripts, tmp_path):
     cps = r.load_checkpoints().toPandas()
     assert len(cps) == 3 and (cps["bytes"] > 0).all()
     assert not os.path.exists(f"{tmp}/out/_staged")
-    assert os.path.exists(f"{tmp}/out/_provenance_attempt1.json")
+    assert [n for n in os.listdir(f"{tmp}/out") if n.startswith("_provenance")] == [
+        "_provenance_attempt1.json"
+    ]
+    with open(f"{tmp}/out/_provenance_attempt1.json") as f:
+        assert s["ms"] > 0 and json.load(f) == s
 
 
 def _in_job_group(sc, group: str, fn):
