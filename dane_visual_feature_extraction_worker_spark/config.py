@@ -7,7 +7,7 @@ types of every key before any work starts). Two entry points:
 - :class:`EngineConfig` — the typed dataclass every engine component
   consumes; its ``__post_init__`` re-checks invariants.
 - :func:`load_yaml_config` — the reference-shaped path: a layered YAML
-  tree (``ENGINE`` / ``PATHS`` / ``SPARK`` sections) is loaded,
+  tree (``ENGINE`` / ``SPARK`` sections) is loaded,
   validated key-by-key with the reference's assert-style checks
   (``check_setting(cfg.SECTION.KEY, type)`` → failure names the exact
   key, base_util.py:33-117), and materialized into the dataclass.
@@ -47,7 +47,6 @@ class EngineConfig:
     # 32-thread window stage); off-heap pages remove them. Standard
     # production setting for wide-window/shuffle-heavy jobs.
     offheap_size: str | None = "16g"
-    checkpoint_dir: str | None = None  # per-bucket JSON checkpoint records dir
 
     extra_conf: dict = field(default_factory=dict)
 
@@ -90,13 +89,11 @@ def _require(cond: bool, key: str) -> None:
         raise ConfigValidationError(f"Configuration error: {key}")
 
 
-def validate_config_tree(tree: dict, validate_file_paths: bool = True) -> None:
+def validate_config_tree(tree: dict) -> None:
     """Assert-style validation of the YAML tree BEFORE materialization.
 
     Mirrors the reference's validate_config walk (base_util.py:21-131):
-    every key is presence- and type-checked, failures name the key; the
-    optional file-path pass checks that parent dirs of path-valued keys
-    exist (base_util.py:154-175 __validate_parent_dirs analogue).
+    every key is presence- and type-checked, failures name the key.
     """
     _require(isinstance(tree, dict) and bool(tree), "<root>")
     eng = tree.get("ENGINE")
@@ -134,9 +131,11 @@ def validate_config_tree(tree: dict, validate_file_paths: bool = True) -> None:
     )
     paths = tree.get("PATHS", {})
     _require(isinstance(paths, dict), "PATHS")
+    # The job takes its checkpoint dir from --checkpoints only.
     _require(
-        check_setting(paths.get("CHECKPOINT_DIR"), str, True),
-        "PATHS.CHECKPOINT_DIR",
+        "CHECKPOINT_DIR" not in paths,
+        "PATHS.CHECKPOINT_DIR is not a config key; pass --checkpoints "
+        "to jobs/run_pipeline.py",
     )
     spark = tree.get("SPARK", {})
     _require(isinstance(spark, dict), "SPARK")
@@ -147,11 +146,6 @@ def validate_config_tree(tree: dict, validate_file_paths: bool = True) -> None:
             isinstance(k, str) and isinstance(v, (str, int, bool)),
             f"SPARK.EXTRA_CONF.{k}",
         )
-    if validate_file_paths and paths.get("CHECKPOINT_DIR"):
-        parent = os.path.dirname(
-            os.path.abspath(str(paths["CHECKPOINT_DIR"]).rstrip("/"))
-        )
-        _require(os.path.isdir(parent), "PATHS.CHECKPOINT_DIR (parent dir)")
 
 
 def layer_trees(*trees: dict) -> dict:
@@ -169,9 +163,7 @@ def layer_trees(*trees: dict) -> dict:
     return out
 
 
-def load_yaml_config(
-    *paths: str, validate_file_paths: bool = True
-) -> EngineConfig:
+def load_yaml_config(*paths: str) -> EngineConfig:
     """Load + validate an :class:`EngineConfig` from layered YAML files.
 
     ``paths`` are applied in order, later files overriding earlier —
@@ -186,9 +178,8 @@ def load_yaml_config(
         with open(p, "r") as f:
             layers.append(yaml.safe_load(f) or {})
     tree = layer_trees(*layers)
-    validate_config_tree(tree, validate_file_paths=validate_file_paths)
+    validate_config_tree(tree)
     eng = tree["ENGINE"]
-    paths_sec = tree.get("PATHS", {})
     extra = {
         k: str(v) for k, v in tree.get("SPARK", {}).get("EXTRA_CONF", {}).items()
     }
@@ -200,6 +191,5 @@ def load_yaml_config(
         max_partition_bytes=eng["MAX_PARTITION_BYTES"],
         aqe=eng["AQE"],
         offheap_size=eng.get("OFFHEAP_SIZE"),
-        checkpoint_dir=paths_sec.get("CHECKPOINT_DIR"),
         extra_conf=extra,
     )

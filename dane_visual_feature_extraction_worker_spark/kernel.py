@@ -12,7 +12,8 @@ feature math (FIXTURES.md §5) so golden fixtures reproduce on any
 machine. There is one engine implementation and one oracle:
 
 - ``feature_vectors_windows``: the engine. A pure-Catalyst plan —
-  text features packed map-side, ONE hash exchange on the entity key,
+  text features computed map-side (``_text_features``: plain columns
+  and an ``array<float>`` bag), ONE hash exchange on the entity key,
   running-window prefix aggregates over (conv_id ORDER BY ts,
   turn_idx), no Python stage;
 - ``compute_features_numeric``: the numpy oracle over
@@ -21,7 +22,9 @@ machine. There is one engine implementation and one oracle:
   (tests/test_kernel.py, pitbench's ``pandas_twin`` gate).
 
 Both read only rows [0..i] for the features of row i — prefix sums and
-running stats — which is the zero-temporal-leakage contract.
+running stats — which is the zero-temporal-leakage contract. Both
+refuse a null ``conv_id``: the engine with a Spark runtime error from
+its map-side projection, the oracle with ``ValueError``.
 
 Feature vector (D = 32 float32), per (conv_id, ts) anchor, from history
 rows with ts <= anchor:
@@ -64,16 +67,23 @@ def with_text_features(transcripts: DataFrame) -> DataFrame:
     token bag (bag0..bag15), role_code, has_tool — one row per turn,
     the input of ``compute_features_numeric``.
 
-    The engine's own packed projection, unpacked in place, so the
-    oracle twin reads the exact values the window plan computes."""
-    return _unpack_text_features(_packed_text_features(transcripts)).drop("__ck")
+    The engine's own map-side projection with ``__bag`` expanded, so
+    the oracle twin reads the exact values the window plan computes."""
+    tf = _text_features(transcripts)
+    return tf.select(
+        *[c for c in tf.columns if c not in ("__ck", "__bag")],
+        *[F.col("__bag")[b].alias(f"bag{b}") for b in range(_HASH_BUCKETS)],
+    )
 
 
 def compute_features_numeric(pdf: pd.DataFrame) -> pd.DataFrame:
     """The numpy oracle: the 32 features plus per-session bounds from
     ``with_text_features`` rows, as prefix ops over each conversation's
     slice of one (conv_id, ts, turn_idx) sort. Same output columns as
-    ``feature_vectors_windows``."""
+    ``feature_vectors_windows``, and the same refusal of a null
+    ``conv_id``."""
+    if pdf["conv_id"].isna().any():
+        raise ValueError("compute_features_numeric: null conv_id in the input")
     pdf = pdf.sort_values(["conv_id", "ts", "turn_idx"], kind="mergesort").reset_index(
         drop=True
     )
@@ -169,31 +179,27 @@ def with_feature_array(df: DataFrame) -> DataFrame:
     return df.select(*keep, arr)
 
 
-def _packed_text_features(transcripts: DataFrame) -> DataFrame:
-    """Map-side projection of the window plan: every
-    per-row text derivation reduced to 10 fixed-width bigints BEFORE
-    the exchange, so the shuffle + sort move ~96 fixed bytes/row
-    instead of the raw text/role/tool strings (~2.5x fewer sorted
-    bytes — the 32-thread phase of the scaling gate is memory-bus
-    bound, so bytes through the exchange are the lever, VERDICT r4).
+def _text_features(transcripts: DataFrame) -> DataFrame:
+    """The map-side projection of the window plan: every per-row text
+    derivation, done once per row before the exchange, as plain
+    columns plus the bag as one array, so the shuffle moves no
+    text/role/tool strings.
 
-    - ``__p0..__p7``: the 16 bag counts, two 32-bit lanes per bigint
-      (counts are exact small ints; a turn would need 2^31 tokens in
-      one bucket to overflow a lane).
-    - ``__meta``: chars*256 + (role_code+1)*32 + (has_tool+1) — single
-      bigint; chars < 2^45 stays exact.
-    - ``words`` is NOT shipped: every token lands in exactly one
-      bucket, so words == sum of the 16 counts, recovered lane-side.
-    l2 normalization happens post-shuffle from the exact integer
-    counts — bit-identical to normalizing map-side."""
+    - ``__ck`` = xxhash64(conv_id); a null ``conv_id`` raises here
+      (a lazy ``raise_error``, no extra Spark job) rather than joining
+      the other nulls as one conversation;
+    - ``chars`` (double), ``role_code`` (-1 for an unknown role),
+      ``has_tool``;
+    - ``words`` = the number of tokens, since every token lands in
+      exactly one bucket;
+    - ``__bag``: the 16 bucket counts, l2-normalized in double and
+      stored as ``array<float>``, the output precision."""
     # (?U): Unicode-aware \s so the JVM tokenizer agrees with the
     # Python oracle's str.split() on NBSP & friends (ADVICE r1).
     # (Residual edge: U+001C..1F separators — Python isspace() true,
     # Unicode White_Space false — are not treated as spaces here.)
-    toks = F.filter(
-        F.split(F.coalesce(F.col("text"), F.lit("")), r"(?U)\s+"),
-        lambda t: t != "",
-    )
+    text = F.coalesce(F.col("text"), F.lit(""))
+    toks = F.filter(F.split(text, r"(?U)\s+"), lambda t: t != "")
     roles = (
         F.when(F.col("role") == "user", 0)
         .when(F.col("role") == "assistant", 1)
@@ -201,82 +207,52 @@ def _packed_text_features(transcripts: DataFrame) -> DataFrame:
         .when(F.col("role") == "system", 3)
         .otherwise(-1)
     )
-    s1 = transcripts.select(
-        F.xxhash64("conv_id").alias("__ck"),
+    keys = ["__ck", "conv_id", "turn_idx", "ts", "role_code", "has_tool", "chars"]
+    hashed = transcripts.select(
+        F.when(
+            F.col("conv_id").isNull(),
+            F.raise_error(F.lit("pit_features: null conv_id in the input")),
+        )
+        .otherwise(F.xxhash64("conv_id"))
+        .alias("__ck"),
         "conv_id",
         "turn_idx",
         "ts",
-        (
-            F.length(F.coalesce(F.col("text"), F.lit(""))).cast("bigint") * 256
-            + (roles + 1).cast("bigint") * 32
-            + F.col("tool").isNotNull().cast("bigint")
-            + 1
-        ).alias("__meta"),
+        roles.alias("role_code"),
+        F.col("tool").isNotNull().cast("int").alias("has_tool"),
+        F.length(text).cast("double").alias("chars"),
+        F.transform(toks, lambda t: F.pmod(F.crc32(t), F.lit(_HASH_BUCKETS))).alias(
+            "__h"
+        ),
+    )
+    # One select per step: Catalyst does not collapse a Project whose
+    # non-trivial output the next one reads twice, so each array is
+    # built once per row.
+    buckets = F.array(*[F.lit(b) for b in range(_HASH_BUCKETS)])
+    counted = hashed.select(
+        *keys,
+        F.size("__h").cast("double").alias("words"),
         F.transform(
-            toks, lambda t: F.pmod(F.crc32(t), F.lit(_HASH_BUCKETS))
-        ).alias("__h"),
+            buckets,
+            lambda b: F.size(F.filter("__h", lambda h: h == b)).cast("double"),
+        ).alias("__c"),
     )
-    packs = [
-        (
-            F.size(F.filter(F.col("__h"), lambda h: h == 2 * k)).cast("bigint")
-            * F.lit(1 << 32)
-            + F.size(F.filter(F.col("__h"), lambda h: h == 2 * k + 1)).cast(
-                "bigint"
-            )
-        ).alias(f"__p{k}")
-        for k in range(_HASH_BUCKETS // 2)
-    ]
-    return s1.select("__ck", "conv_id", "turn_idx", "ts", "__meta", *packs)
-
-
-def _unpack_text_features(df: DataFrame) -> DataFrame:
-    """Inverse of ``_packed_text_features`` (post-shuffle): rebuild
-    role_code/has_tool/chars/words and the l2-normalized bag columns
-    from the exact integer counts."""
-    cs = []
-    for k in range(_HASH_BUCKETS // 2):
-        cs.append(F.shiftright(F.col(f"__p{k}"), 32).cast("double"))
-        cs.append(
-            (F.col(f"__p{k}") - F.shiftright(F.col(f"__p{k}"), 32) * F.lit(1 << 32))
-            .cast("double")
-        )
-    words = None
-    for c in cs:
-        words = c if words is None else words + c
-    s3 = df.select(
-        "__ck",
-        "conv_id",
-        "turn_idx",
-        "ts",
-        (F.shiftright(F.col("__meta"), 8)).cast("double").alias("chars"),
-        (
-            F.shiftright(F.col("__meta") - F.shiftright(F.col("__meta"), 8) * 256, 5)
-            - 1
-        )
-        .cast("int")
-        .alias("role_code"),
-        (
-            (F.col("__meta") - F.shiftright(F.col("__meta"), 5) * 32) - 1
-        )
-        .cast("int")
-        .alias("has_tool"),
-        words.alias("words"),
-        *[c.alias(f"__c{b}") for b, c in enumerate(cs)],
+    normed = counted.select(
+        *keys,
+        "words",
+        "__c",
+        F.sqrt(F.aggregate("__c", F.lit(0.0), lambda acc, c: acc + c * c)).alias(
+            "__norm"
+        ),
     )
-    norm_sq = None
-    for b in range(_HASH_BUCKETS):
-        t = F.col(f"__c{b}") * F.col(f"__c{b}")
-        norm_sq = t if norm_sq is None else norm_sq + t
-    s4 = s3.withColumn("__norm", F.sqrt(norm_sq))
-    bags = [
-        F.when(F.col("__norm") > 0, F.col(f"__c{b}") / F.col("__norm"))
-        .otherwise(F.lit(0.0))
-        .alias(f"bag{b}")
-        for b in range(_HASH_BUCKETS)
-    ]
-    return s4.select(
-        "__ck", "conv_id", "turn_idx", "ts", "role_code", "has_tool", "chars",
-        "words", *bags
+    norm = F.col("__norm")
+    return normed.select(
+        *keys,
+        "words",
+        F.transform(
+            "__c",
+            lambda c: F.when(norm > 0, c / norm).otherwise(F.lit(0.0)).cast("float"),
+        ).alias("__bag"),
     )
 
 
@@ -286,8 +262,8 @@ def feature_vectors_windows(transcripts: DataFrame) -> DataFrame:
 
     Every f0..f15 is a per-conversation prefix op (cumsum / running
     max / last-ignorenulls) over rows sorted by (ts, turn_idx); the bag
-    columns f16..f31 are already JVM-side. A running-frame window
-    aggregate accumulates rows one at a time in sort order — the SAME
+    columns f16..f31 are read straight from ``__bag[b]``. A running-frame
+    window aggregate accumulates rows one at a time in sort order — the SAME
     sequential double arithmetic as the numpy kernel's cumsum — so the
     float32 outputs are bit-identical to ``compute_features_numeric``
     (asserted in tests/test_kernel.py).
@@ -299,11 +275,11 @@ def feature_vectors_windows(transcripts: DataFrame) -> DataFrame:
     transfer + Python workers is what lifts multi-core scaling
     efficiency (BENCH/BASELINE.md): whole-stage codegen end to end.
 
-    Text is tokenized and counted map-side, so 10 packed bigints per
-    row move through the exchange + sort instead of the raw
-    text/role/tool strings (``_packed_text_features``) — bytes through
-    the shuffle and the sort working set are the memory-bus lever the
-    r4 scaling analysis identified.
+    Text is tokenized, counted and normalized map-side
+    (``_text_features``), so the exchange + sort move four plain
+    columns and the 16-float bag instead of the raw text/role/tool
+    strings. Every higher-order function runs once per row, before the
+    shuffle.
 
     ``__ck`` = xxhash64(conv_id) leads every sort key: string conv_ids
     share long prefixes, which defeats the radix/prefix comparator — a
@@ -316,11 +292,11 @@ def feature_vectors_windows(transcripts: DataFrame) -> DataFrame:
     from dane_visual_feature_extraction_worker_spark.functions import epoch_seconds
 
     cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-    packed = _packed_text_features(transcripts.select(*cols))
-    shuffled = packed.repartition("__ck").sortWithinPartitions(
-        "__ck", "conv_id", "ts", "turn_idx"
+    tf = (
+        _text_features(transcripts.select(*cols))
+        .repartition("__ck")
+        .sortWithinPartitions("__ck", "conv_id", "ts", "turn_idx")
     )
-    tf = _unpack_text_features(shuffled)
 
     w = Window.partitionBy("__ck", "conv_id").orderBy("ts", "turn_idx")
     wrun = w.rowsBetween(Window.unboundedPreceding, 0)
@@ -341,7 +317,7 @@ def feature_vectors_windows(transcripts: DataFrame) -> DataFrame:
         "has_tool",
         "chars",
         "words",
-        *[f"bag{b}" for b in range(_HASH_BUCKETS)],
+        "__bag",
         ts_s.alias("__ts_s"),
         F.unix_micros(F.col("ts").cast("timestamp")).alias("__ts_us"),
         gap.alias("__gap"),
@@ -393,7 +369,7 @@ def feature_vectors_windows(transcripts: DataFrame) -> DataFrame:
         (ff("__rn") - ff("__sess_rn") + 1).cast("float").alias("f13"),
         (ff("__ts_s") - ff("__sess_ts")).cast("float").alias("f14"),
         ff("words").cast("float").alias("f15"),
-        *[ff(f"bag{b}").cast("float").alias(f"f{16 + b}") for b in range(_HASH_BUCKETS)],
+        *[ff("__bag")[b].alias(f"f{16 + b}") for b in range(_HASH_BUCKETS)],
     ]
     return s2.select(
         "conv_id",

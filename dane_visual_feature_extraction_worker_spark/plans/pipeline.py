@@ -8,7 +8,7 @@ reference's ``[timestamp, shot_start, shot_end, features...]`` matrix
 ``(conv_id, turn_idx, ts, session_id, session_start, session_end,
 features)``.
 
-One physical plan: read → text features packed map-side → ONE
+One physical plan: read → text features computed map-side → ONE
 entity-key shuffle → window prefix aggregates over (conv_id ORDER BY
 ts, turn_idx) → sink. No Python stage: whole-stage codegen end to end,
 so throughput scales with cores (BENCH/BASELINE.md). Its output is
@@ -35,32 +35,3 @@ def pit_features_array(transcripts: DataFrame) -> DataFrame:
     """Array-form output (fixture schema); flat form is the scale sink."""
     return with_feature_array(pit_features(transcripts))
 
-
-def write_features(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by_day: bool = True,
-    ts_col: str = "ts",
-) -> None:
-    """Production feature sink: parquet partitioned by event date.
-
-    Day partitions give readers partition pruning on the time axis (a
-    backfill touching one week rewrites 7 partitions, not the table) —
-    with ``spark.sql.sources.partitionOverwriteMode=dynamic`` an
-    ``overwrite`` replaces only the partitions present in ``df``
-    (idempotent re-runs of a date range, the batch analogue of the
-    reference's per-job output replacement, io_util.py:182-203)."""
-    import pyspark.sql.functions as F
-
-    w = df
-    if partition_by_day:
-        w = df.withColumn("ds", F.to_date(F.col(ts_col)))
-        (
-            w.write.mode(mode)
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ds")
-            .parquet(path)
-        )
-    else:
-        w.write.mode(mode).parquet(path)

@@ -30,8 +30,7 @@ VALID = textwrap.dedent(
       SESSION_GAP_SECONDS: 1800
       MAX_PARTITION_BYTES: 128m
       AQE: true
-    PATHS:
-      CHECKPOINT_DIR: {ckpt}
+    PATHS: {}
     SPARK:
       EXTRA_CONF:
         spark.sql.session.timeZone: UTC
@@ -46,21 +45,19 @@ def _write(tmp_path, name, body):
 
 
 def test_load_valid_yaml(tmp_path):
-    ckpt = tmp_path / "ckpt"
-    cfg = load_yaml_config(_write(tmp_path, "c.yml", VALID.format(ckpt=ckpt)))
+    cfg = load_yaml_config(_write(tmp_path, "c.yml", VALID))
     assert isinstance(cfg, EngineConfig)
     assert cfg.app_name == "yaml-engine"
     assert cfg.shuffle_partitions == 16
     assert cfg.arrow_batch_size == 256
     assert cfg.aqe is True
     assert cfg.master is None  # optional key absent
-    assert cfg.checkpoint_dir == str(ckpt)
     assert cfg.extra_conf == {"spark.sql.session.timeZone": "UTC"}
 
 
 def test_layering_later_file_overrides(tmp_path):
     """base config then local config — the reference's precedence."""
-    base = _write(tmp_path, "base.yml", VALID.format(ckpt=tmp_path / "c"))
+    base = _write(tmp_path, "base.yml", VALID)
     local = _write(
         tmp_path,
         "local.yml",
@@ -84,6 +81,7 @@ def test_layering_later_file_overrides(tmp_path):
         # bool is not an int (YAML 'true' for a count is a config bug)
         ("tree['ENGINE']['ARROW_BATCH_SIZE'] = True", "ENGINE.ARROW_BATCH_SIZE"),
         ("tree['ENGINE']['AQE'] = 'yes please'", "ENGINE.AQE"),
+        # refused whatever its value: the job takes --checkpoints
         ("tree['PATHS']['CHECKPOINT_DIR'] = 7", "PATHS.CHECKPOINT_DIR"),
         (
             "tree['SPARK']['EXTRA_CONF'] = {'spark.x': ['no', 'lists']}",
@@ -94,10 +92,10 @@ def test_layering_later_file_overrides(tmp_path):
 def test_validation_failure_names_exact_key(tmp_path, mutation, key):
     import yaml
 
-    tree = yaml.safe_load(VALID.format(ckpt=tmp_path / "c"))
+    tree = yaml.safe_load(VALID)
     exec(mutation, {"tree": tree})
     with pytest.raises(ConfigValidationError) as ei:
-        validate_config_tree(tree, validate_file_paths=False)
+        validate_config_tree(tree)
     assert key in str(ei.value)
 
 
@@ -114,7 +112,7 @@ def test_kernel_constant_keys_must_match_the_kernel(tmp_path, key, value):
     config that sets another value fails at load, naming the key."""
     import re
 
-    body = re.sub(rf"{key}: \S+", f"{key}: {value}", VALID.format(ckpt=tmp_path / "c"))
+    body = re.sub(rf"{key}: \S+", f"{key}: {value}", VALID)
     with pytest.raises(ConfigValidationError) as ei:
         load_yaml_config(_write(tmp_path, "c.yml", body))
     assert f"ENGINE.{key}" in str(ei.value)
@@ -123,7 +121,7 @@ def test_kernel_constant_keys_must_match_the_kernel(tmp_path, key, value):
 def test_kernel_constant_keys_are_optional(tmp_path):
     body = "\n".join(
         ln
-        for ln in VALID.format(ckpt=tmp_path / "c").splitlines()
+        for ln in VALID.splitlines()
         if "FEATURE_DIM" not in ln and "SESSION_GAP_SECONDS" not in ln
     )
     cfg = load_yaml_config(_write(tmp_path, "c.yml", body))
@@ -148,17 +146,15 @@ def test_run_pipeline_refuses_session_gap_flag(tmp_path):
         job.main(argv)
 
 
-def test_checkpoint_parent_dir_must_exist(tmp_path):
-    p = _write(
-        tmp_path, "c.yml", VALID.format(ckpt="/nonexistent/deep/ckpt")
-    )
+def test_checkpoint_dir_key_is_refused(tmp_path):
+    """``PATHS.CHECKPOINT_DIR`` was parsed but never read: the job takes
+    its checkpoint dir from ``--checkpoints``. A config that still sets
+    it fails at load, naming the key and the flag."""
+    body = VALID.replace("PATHS: {}", "PATHS:\n  CHECKPOINT_DIR: /data/cp")
     with pytest.raises(ConfigValidationError) as ei:
-        load_yaml_config(p)
+        load_yaml_config(_write(tmp_path, "c.yml", body))
     assert "PATHS.CHECKPOINT_DIR" in str(ei.value)
-    # not-validating file paths (unit-test mode, reference
-    # validate_config(config, validate_file_paths=False)) passes
-    cfg = load_yaml_config(p, validate_file_paths=False)
-    assert cfg.checkpoint_dir == "/nonexistent/deep/ckpt"
+    assert "--checkpoints" in str(ei.value)
 
 
 def test_check_setting_semantics():
@@ -183,7 +179,7 @@ def test_dataclass_invariants_still_enforced(tmp_path):
     p = _write(
         tmp_path,
         "c.yml",
-        VALID.format(ckpt=tmp_path / "c").replace(
+        VALID.replace(
             "SHUFFLE_PARTITIONS: 16", "SHUFFLE_PARTITIONS: 0"
         ),
     )

@@ -5,6 +5,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
+import pytest
 
 from dane_visual_feature_extraction_worker_spark.kernel import FEATURE_DIM
 from dane_visual_feature_extraction_worker_spark.plans.pipeline import (
@@ -206,9 +207,57 @@ def test_window_strategy_bit_identical_and_pure_jvm(spark, transcripts):
             assert (gv == wv).all(), f"column {c} differs"
 
     src = t.localCheckpoint(eager=True)
-    plan = pit_features(src)._jdf.queryExecution().executedPlan().toString()
+    jplan = pit_features(src)._jdf.queryExecution().executedPlan()
+    plan = jplan.toString()
     assert not re.search(r"Pandas|Python", plan)
     assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1
+    # the text features are computed before the exchange: no raw
+    # text/role/tool string crosses it
+    shipped = set(re.findall(r"(\w+)#\d+", _exchange_output(jplan)))
+    assert "__bag" in shipped and not shipped & {"text", "role", "tool"}
+
+
+def _exchange_output(jplan) -> str:
+    """The output attributes of the one Exchange in a physical plan."""
+    stack, found = [jplan], []
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "AdaptiveSparkPlan":
+            node = node.executedPlan()
+        if node.nodeName() == "Exchange":
+            found.append(node.output().toString())
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    assert len(found) == 1, found
+    return found[0]
+
+
+def _null_key_turns() -> pd.DataFrame:
+    """Three turns of conversation "c" plus three with a null conv_id,
+    which used to come out as one conversation with f0 = 1, 2, 3."""
+    t = _tiny_conv()
+    return pd.concat([t, t.assign(conv_id=None)], ignore_index=True)
+
+
+def test_null_conv_id_is_refused(spark):
+    """A null conv_id fails where input enters the kernel: ValueError
+    from the oracle, a Spark runtime error from the engine, whose check
+    adds no exchange."""
+    import re
+
+    from pyspark.errors import SparkRuntimeException
+
+    with pytest.raises(ValueError, match="null conv_id"):
+        features_ref(_null_key_turns())
+    # a checkpointed source, so the optimizer cannot fold the check
+    # into a local relation at planning time
+    df = spark.createDataFrame(_null_key_turns()).localCheckpoint(eager=True)
+    out = pit_features(df)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1
+    with pytest.raises(SparkRuntimeException, match="null conv_id"):
+        out.collect()
+    assert len(pit_features(df.where(F.col("conv_id").isNotNull())).collect()) == 3
 
 
 def test_unicode_whitespace_tokenizer_matches_sql_oracle(spark):

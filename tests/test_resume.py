@@ -239,6 +239,25 @@ def test_prebucketed_source_rejects_null_buckets(spark, transcripts, tmp_path):
         r.run(pre, lambda df: df)
 
 
+def test_runner_refuses_null_conv_id(spark, transcripts, tmp_path):
+    """Null-``conv_id`` turns used to be written as one conversation and
+    their bucket recorded done; now the run raises at that bucket and
+    records nothing for it."""
+    import pyspark.sql.functions as F
+    from pyspark.errors import SparkRuntimeException
+
+    from dane_visual_feature_extraction_worker_spark.checkpoint import bucket_of
+
+    nulls = transcripts.limit(3).withColumn("conv_id", F.lit(None).cast("string"))
+    src = transcripts.unionByName(nulls)
+    b = src.where(F.col("conv_id").isNull()).select(bucket_of("conv_id", 4)).first()[0]
+    r = _runner(spark, str(tmp_path), "nullkey", n_buckets=4)
+    with pytest.raises(SparkRuntimeException, match="null conv_id"):
+        r.run(src, pit_features)
+    done = {row["bucket"] for row in r.load_checkpoints().where("status = 'done'").collect()}
+    assert b not in done and done == set(range(b))
+
+
 @pytest.mark.parametrize("n_buckets", [0, -1])
 def test_runner_refuses_fewer_than_one_bucket(spark, tmp_path, n_buckets):
     """``n_buckets=0`` used to report success over an empty table."""

@@ -131,36 +131,6 @@ def test_compact_swap_crash_recovery(spark, tmp_path):
     assert not os.path.exists(p + ".__old__")
 
 
-def test_write_features_day_partitions_dynamic_overwrite(spark, tmp_path):
-    """Day-partitioned sink + dynamic overwrite: rewriting one day must
-    not clobber other days' partitions."""
-    import pyspark.sql.functions as F
-
-    from dane_visual_feature_extraction_worker_spark.plans.pipeline import (
-        write_features,
-    )
-
-    p = str(tmp_path / "feat")
-    d1 = spark.createDataFrame(
-        [("a", 0, 1.0, "2024-01-01 10:00:00"), ("b", 0, 2.0, "2024-01-02 10:00:00")],
-        "conv_id string, turn_idx int, f0 double, t string",
-    ).select("conv_id", "turn_idx", "f0", F.to_timestamp("t").alias("ts"))
-    write_features(d1, p)
-    assert spark.read.parquet(p).count() == 2
-
-    # rewrite ONLY 2024-01-02 with new content
-    d2 = spark.createDataFrame(
-        [("c", 0, 9.0, "2024-01-02 11:00:00")],
-        "conv_id string, turn_idx int, f0 double, t string",
-    ).select("conv_id", "turn_idx", "f0", F.to_timestamp("t").alias("ts"))
-    write_features(d2, p)
-    out = spark.read.parquet(p)
-    days = {str(r["ds"]): r["conv_id"] for r in out.collect()}
-    assert days["2024-01-01"] == "a"      # survived the overwrite
-    assert days["2024-01-02"] == "c"      # replaced
-    assert out.count() == 2
-
-
 def test_bucketed_join_zero_exchange(spark, tmp_path):
     """write_bucketed twins joined on the bucket key: Catalyst reads
     the bucket spec as output partitioning — ZERO exchanges on either
