@@ -28,6 +28,11 @@ means nothing is done; an entry that is not a readable record, or a
 record written with another ``n_buckets`` or ``entity_col``, raises
 naming the file instead of producing a wrong table.
 
+Each attempt names its Spark jobs by their description: the staging
+write runs as ``pit:<attempt>:stage`` and each bucket's write as
+``pit:<attempt>:<bucket>``, in the Spark UI and its status store. The
+caller's own description is restored after each write.
+
 Scale notes: buckets are ``pmod(xxhash64(entity), n_buckets)`` so output
 partitioning is stable across cluster sizes and runs; each bucket's
 output is written to its own ``bucket=<i>`` subdir before its record is
@@ -36,6 +41,7 @@ published, whatever the output's table format (SURVEY.md §7c).
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import re
@@ -59,6 +65,19 @@ def bucket_of(entity_col: str, n_buckets: int) -> F.Column:
     """Stable entity→bucket assignment (hash precedent
     base_util.py:205-206)."""
     return F.pmod(F.xxhash64(F.col(entity_col)), F.lit(n_buckets)).cast("int")
+
+
+@contextlib.contextmanager
+def _job_description(spark: SparkSession, description: str):
+    """Name the Spark jobs started inside the block, then give back the
+    caller's description. No job group: a caller may be using its own."""
+    sc = spark.sparkContext
+    caller = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(description)
+    try:
+        yield
+    finally:
+        sc.setJobDescription(caller)
 
 
 def _write_text(fs, path, text: str) -> None:
@@ -234,9 +253,10 @@ class CheckpointedRunner:
                 )
                 if len(pending) < self.n_buckets:
                     src = src.where(F.col("__bucket").isin(pending))
-                src.write.mode("overwrite").partitionBy("__bucket").parquet(
-                    staged_dir
-                )
+                with _job_description(self.spark, f"pit:{attempt}:stage"):
+                    src.write.mode("overwrite").partitionBy("__bucket").parquet(
+                        staged_dir
+                    )
                 staged_writes = 1
                 # schema-providing read: a zero-row staged dir (empty
                 # source / empty pending buckets) has no part files to
@@ -252,7 +272,8 @@ class CheckpointedRunner:
             # after the write would be a second pass over the bucket
             obs = Observation()
             out = out.observe(obs, F.count(F.lit(1)).alias("rows"))
-            out.write.mode("overwrite").parquet(path)
+            with _job_description(self.spark, f"pit:{attempt}:{b}"):
+                out.write.mode("overwrite").parquet(path)
             rows = int(obs.get["rows"])
             ms = (time.monotonic() - t0) * 1000.0
             fs, p = self._path(path)

@@ -13,9 +13,13 @@ machine. There is one engine implementation and one oracle:
 
 - ``feature_vectors_windows``: the engine. A pure-Catalyst plan —
   text features computed map-side (``_text_features``: plain columns
-  and an ``array<float>`` bag), ONE hash exchange on the entity key,
-  running-window prefix aggregates over (conv_id ORDER BY ts,
-  turn_idx), no Python stage;
+  and an ``array<float>`` bag, from one interpreted pass over each
+  turn's tokens), ONE hash exchange on the entity key, running-window
+  prefix aggregates over (conv_id ORDER BY ts, turn_idx), no Python
+  stage, every other Project in whole-stage codegen. Its Columns do
+  not depend on the input, so they are built once per process
+  (``_text_columns``, ``_window_columns``) and a call only replays
+  the plan's ~11 DataFrame calls;
 - ``compute_features_numeric``: the numpy oracle over
   ``with_text_features`` rows. It runs the same sequential double
   arithmetic, so the engine must match it bit for bit
@@ -51,10 +55,12 @@ rows with ts <= anchor:
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 
 FEATURE_DIM = 32
 SESSION_GAP_S = 1800.0
@@ -67,8 +73,9 @@ def with_text_features(transcripts: DataFrame) -> DataFrame:
     token bag (bag0..bag15), role_code, has_tool — one row per turn,
     the input of ``compute_features_numeric``.
 
-    The engine's own map-side projection with ``__bag`` expanded, so
-    the oracle twin reads the exact values the window plan computes."""
+    The engine's own map-side projection (``_text_features``, the same
+    cached Columns) with ``__bag`` expanded, so the oracle twin reads
+    the exact values the window plan computes."""
     tf = _text_features(transcripts)
     return tf.select(
         *[c for c in tf.columns if c not in ("__ck", "__bag")],
@@ -179,27 +186,17 @@ def with_feature_array(df: DataFrame) -> DataFrame:
     return df.select(*keep, arr)
 
 
-def _text_features(transcripts: DataFrame) -> DataFrame:
-    """The map-side projection of the window plan: every per-row text
-    derivation, done once per row before the exchange, as plain
-    columns plus the bag as one array, so the shuffle moves no
-    text/role/tool strings.
-
-    - ``__ck`` = xxhash64(conv_id); a null ``conv_id`` raises here
-      (a lazy ``raise_error``, no extra Spark job) rather than joining
-      the other nulls as one conversation;
-    - ``chars`` (double), ``role_code`` (-1 for an unknown role),
-      ``has_tool``;
-    - ``words`` = the number of tokens, since every token lands in
-      exactly one bucket;
-    - ``__bag``: the 16 bucket counts, l2-normalized in double and
-      stored as ``array<float>``, the output precision."""
-    # (?U): Unicode-aware \s so the JVM tokenizer agrees with the
-    # Python oracle's str.split() on NBSP & friends (ADVICE r1).
-    # (Residual edge: U+001C..1F separators — Python isspace() true,
-    # Unicode White_Space false — are not treated as spaces here.)
+@functools.cache
+def _text_columns() -> tuple[tuple[Column | str, ...], ...]:
+    """The Columns of ``_text_features``' four selects, built once per
+    process: they are unresolved expressions that do not depend on the
+    input, and building them costs thousands of py4j round trips."""
+    # (?U): Unicode-aware \s, i.e. Unicode White_Space: NBSP & friends
+    # split tokens, U+001C..U+001F do not. The Python oracle
+    # (tests/reference_impl.py) and the DuckDB _WS_CLASS split on the
+    # same set.
     text = F.coalesce(F.col("text"), F.lit(""))
-    toks = F.filter(F.split(text, r"(?U)\s+"), lambda t: t != "")
+    toks = F.array_remove(F.split(text, r"(?U)\s+"), "")
     roles = (
         F.when(F.col("role") == "user", 0)
         .when(F.col("role") == "assistant", 1)
@@ -208,7 +205,7 @@ def _text_features(transcripts: DataFrame) -> DataFrame:
         .otherwise(-1)
     )
     keys = ["__ck", "conv_id", "turn_idx", "ts", "role_code", "has_tool", "chars"]
-    hashed = transcripts.select(
+    tokenized = [
         F.when(
             F.col("conv_id").isNull(),
             F.raise_error(F.lit("pit_features: null conv_id in the input")),
@@ -221,39 +218,72 @@ def _text_features(transcripts: DataFrame) -> DataFrame:
         roles.alias("role_code"),
         F.col("tool").isNotNull().cast("int").alias("has_tool"),
         F.length(text).cast("double").alias("chars"),
-        F.transform(toks, lambda t: F.pmod(F.crc32(t), F.lit(_HASH_BUCKETS))).alias(
-            "__h"
-        ),
-    )
-    # One select per step: Catalyst does not collapse a Project whose
-    # non-trivial output the next one reads twice, so each array is
-    # built once per row.
-    buckets = F.array(*[F.lit(b) for b in range(_HASH_BUCKETS)])
-    counted = hashed.select(
+        # the one interpreted pass: each token becomes the hex digit of
+        # its bucket, e.g. "3A03"
+        F.array_join(
+            F.transform(
+                toks, lambda t: F.hex(F.pmod(F.crc32(t), F.lit(_HASH_BUCKETS)))
+            ),
+            "",
+        ).alias("__d"),
+    ]
+    d = F.col("__d")
+    counts = [F.col(f"__c{b}") for b in range(_HASH_BUCKETS)]
+    counted = [
         *keys,
-        F.size("__h").cast("double").alias("words"),
-        F.transform(
-            buckets,
-            lambda b: F.size(F.filter("__h", lambda h: h == b)).cast("double"),
-        ).alias("__c"),
-    )
-    normed = counted.select(
-        *keys,
-        "words",
-        "__c",
-        F.sqrt(F.aggregate("__c", F.lit(0.0), lambda acc, c: acc + c * c)).alias(
-            "__norm"
-        ),
-    )
+        F.length(d).cast("double").alias("words"),
+        *[
+            (F.length(d) - F.length(F.replace(d, F.lit(f"{b:X}"), F.lit(""))))
+            .cast("double")
+            .alias(f"__c{b}")
+            for b in range(_HASH_BUCKETS)
+        ],
+    ]
+    # whole counts: the sum of squares is exact in double, so it equals
+    # the oracle's in any order
+    sq = F.lit(0.0)
+    for c in counts:
+        sq = sq + c * c
+    normed = [*keys, "words", *counts, F.sqrt(sq).alias("__norm")]
     norm = F.col("__norm")
-    return normed.select(
+    bagged = [
         *keys,
         "words",
-        F.transform(
-            "__c",
-            lambda c: F.when(norm > 0, c / norm).otherwise(F.lit(0.0)).cast("float"),
+        F.array(
+            *[
+                F.when(norm > 0, c / norm).otherwise(F.lit(0.0)).cast("float")
+                for c in counts
+            ]
         ).alias("__bag"),
-    )
+    ]
+    return tuple(map(tuple, (tokenized, counted, normed, bagged)))
+
+
+def _text_features(transcripts: DataFrame) -> DataFrame:
+    """The map-side projection of the window plan: every per-row text
+    derivation, done once per row before the exchange, as plain
+    columns plus the bag as one array, so the shuffle moves no
+    text/role/tool strings.
+
+    - ``__ck`` = xxhash64(conv_id); a null ``conv_id`` raises here
+      (a lazy ``raise_error``, no extra Spark job) rather than joining
+      the other nulls as one conversation;
+    - ``chars`` (double), ``role_code`` (-1 for an unknown role),
+      ``has_tool``;
+    - ``__d``: one hex digit per token, its crc32 bucket — the only
+      interpreted (higher-order) expression, one pass over the tokens;
+    - ``words`` = the length of ``__d``, and bucket b's count = how many
+      digits ``replace`` removes, both codegen'd string ops;
+    - ``__bag``: the 16 counts, l2-normalized in double and stored as
+      ``array<float>``, the output precision.
+
+    One select per step: Catalyst does not collapse a Project whose
+    non-trivial output the next one reads more than once, so ``__d``,
+    each count and the norm are computed once per row."""
+    df = transcripts
+    for cols in _text_columns():
+        df = df.select(*cols)
+    return df
 
 
 def feature_vectors_windows(transcripts: DataFrame) -> DataFrame:
@@ -278,8 +308,14 @@ def feature_vectors_windows(transcripts: DataFrame) -> DataFrame:
     Text is tokenized, counted and normalized map-side
     (``_text_features``), so the exchange + sort move four plain
     columns and the 16-float bag instead of the raw text/role/tool
-    strings. Every higher-order function runs once per row, before the
-    shuffle.
+    strings. The plan's one higher-order function, the token → bucket
+    digit ``transform``, runs once per row before the shuffle; every
+    other Project runs in whole-stage codegen (tests/test_kernel.py).
+
+    The Columns of every select come from ``_text_columns`` and
+    ``_window_columns``, built on the first call in a process; later
+    calls, on any input schema, reuse them and cost a few hundred py4j
+    round trips instead of thousands.
 
     ``__ck`` = xxhash64(conv_id) leads every sort key: string conv_ids
     share long prefixes, which defeats the radix/prefix comparator — a
@@ -287,16 +323,23 @@ def feature_vectors_windows(transcripts: DataFrame) -> DataFrame:
     partition spec, so a (astronomically unlikely) hash collision
     still cannot merge two conversations.
     """
-    from pyspark.sql import Window
-
-    from dane_visual_feature_extraction_worker_spark.functions import epoch_seconds
-
     cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+    s1, s2, out = _window_columns()
     tf = (
         _text_features(transcripts.select(*cols))
         .repartition("__ck")
         .sortWithinPartitions("__ck", "conv_id", "ts", "turn_idx")
     )
+    return tf.select(*s1).select(*s2).select(*out)
+
+
+@functools.cache
+def _window_columns() -> tuple[tuple[Column | str, ...], ...]:
+    """The Columns of ``feature_vectors_windows``' three window selects,
+    built once per process like ``_text_columns``."""
+    from pyspark.sql import Window
+
+    from dane_visual_feature_extraction_worker_spark.functions import epoch_seconds
 
     w = Window.partitionBy("__ck", "conv_id").orderBy("ts", "turn_idx")
     wrun = w.rowsBetween(Window.unboundedPreceding, 0)
@@ -308,7 +351,7 @@ def feature_vectors_windows(transcripts: DataFrame) -> DataFrame:
     gap = F.coalesce(ts_s - lag_ts, F.lit(0.0))
     rn = F.row_number().over(w).cast("double")
 
-    s1 = tf.select(
+    s1 = [
         "__ck",
         "conv_id",
         "turn_idx",
@@ -326,8 +369,8 @@ def feature_vectors_windows(transcripts: DataFrame) -> DataFrame:
         F.when(lag_ts.isNull() | (ts_s - lag_ts > SESSION_GAP_S), F.lit(1))
         .otherwise(F.lit(0))
         .alias("__new"),
-    )
-    s2 = s1.select(
+    ]
+    s2 = [
         "*",
         (F.sum("__new").over(wrun) - 1).cast("bigint").alias("session_id"),
         # index/ts of the most recent session boundary (running last)
@@ -346,7 +389,7 @@ def feature_vectors_windows(transcripts: DataFrame) -> DataFrame:
             for j in range(4)
         ],
         F.sum(F.col("has_tool").cast("double")).over(wrun).alias("__cum_tool"),
-    )
+    ]
     ws = Window.partitionBy("__ck", "conv_id", "session_id").rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )
@@ -371,7 +414,7 @@ def feature_vectors_windows(transcripts: DataFrame) -> DataFrame:
         ff("words").cast("float").alias("f15"),
         *[ff("__bag")[b].alias(f"f{16 + b}") for b in range(_HASH_BUCKETS)],
     ]
-    return s2.select(
+    out = [
         "conv_id",
         F.col("turn_idx").cast("int").alias("turn_idx"),
         "ts",
@@ -379,4 +422,5 @@ def feature_vectors_windows(transcripts: DataFrame) -> DataFrame:
         F.min("ts").over(ws).alias("session_start"),
         F.max("ts").over(ws).alias("session_end"),
         *feats,
-    )
+    ]
+    return tuple(map(tuple, (s1, s2, out)))

@@ -2891,9 +2891,9 @@ def pit_features_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     JVM, numpy and DuckDB). The oracle tokenizes with an explicit
     Unicode White_Space character class, the exact set Java's (?U)\\s
     matches — RE2 has no (?U) flag and its bare \\s is ASCII-only
-    (ADVICE r4); the one residual divergence is U+001C..001F, which
-    Java's isWhitespace()-based split does NOT treat as \\s either, so
-    the engines agree on every codepoint."""
+    (ADVICE r4). U+001C..001F are not White_Space, so neither engine
+    splits on them, and neither does the Python oracle in the tests
+    (``str.split()`` would): all three agree on every codepoint."""
     from dane_visual_feature_extraction_worker_spark.kernel import (
         feature_vectors_windows,
     )
@@ -2939,7 +2939,7 @@ def _f32(expr: str) -> str:
 
 # Java's (?U)\s == Unicode White_Space, spelled as an explicit RE2
 # class (RE2 \s is ASCII-only and RE2 has no (?U)); U+001C..1F are in
-# neither engine's set. One hex digit of md5 == the kernel's bag bucket.
+# neither engine's set.
 _WS_CLASS = (
     r"[\t\n\x0B\f\r \x{0085}\x{00A0}\x{1680}\x{2000}-\x{200A}"
     r"\x{2028}\x{2029}\x{202F}\x{205F}\x{3000}]+"

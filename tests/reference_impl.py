@@ -10,12 +10,18 @@ keys, allclose on float features).
 
 from __future__ import annotations
 
+import re
 import zlib
 
 import numpy as np
 import pandas as pd
 
 SESSION_GAP_S = 1800.0
+# Unicode White_Space, the set Java's (?U)\s matches. str.split() would
+# also split on U+001C..U+001F, which are not White_Space.
+_WHITE_SPACE = re.compile(
+    "[\t\n\x0b\x0c\r \x85\xa0\u1680\u2000-\u200a\u2028\u2029\u202f\u205f\u3000]+"
+)
 
 
 def sort_transcripts(t: pd.DataFrame) -> pd.DataFrame:
@@ -71,13 +77,14 @@ def sessionize_ref(t: pd.DataFrame, gap_s: float = SESSION_GAP_S) -> pd.DataFram
 
 
 def text_features_ref(t: pd.DataFrame) -> pd.DataFrame:
-    """Per-turn text features in plain Python — ``str.split`` tokens,
-    ``crc32(utf8) % 16`` bag l2-normalized, chars, role code, has_tool —
-    the columns ``kernel.with_text_features`` computes in the JVM."""
+    """Per-turn text features in plain Python — tokens split on Unicode
+    White_Space, ``crc32(utf8) % 16`` bag l2-normalized, chars, role
+    code, has_tool — the columns ``kernel.with_text_features`` computes
+    in the JVM."""
     text = t["text"].fillna("").to_numpy(dtype=object)
     bag = np.zeros((len(t), 16))
     for i, s in enumerate(text):
-        for tok in s.split():
+        for tok in filter(None, _WHITE_SPACE.split(s)):
             bag[i, zlib.crc32(tok.encode("utf-8")) % 16] += 1.0
     words = bag.sum(axis=1)
     norm = np.sqrt((bag * bag).sum(axis=1, keepdims=True))

@@ -155,8 +155,9 @@ def test_per_turn_text_equality_under_stable_order(transcripts, transcripts_pd):
 
 
 def _edge_rows(spark, schema):
-    """Exotic whitespace, null text, unknown/null roles, a tie on ts
-    and a session break, as rows of the transcript schema."""
+    """Exotic whitespace, separators that are not whitespace, null
+    text, unknown/null roles, a tie on ts and a session break, as rows
+    of the transcript schema."""
     t0 = pd.Timestamp("2024-03-01 12:00:00")
     rows = [
         ("edge_a", 0, "user", "nbsp\u00a0separated\u00a0tokens", None, 0),
@@ -167,6 +168,9 @@ def _edge_rows(spark, schema):
         ("edge_b", 0, "system", " \u00a0\u3000", None, 0),
         ("edge_b", 1, None, None, None, 60),
         ("edge_b", 2, "user", "plain ascii words", None, 61),
+        # U+001C..U+001F: str.isspace() is true, Unicode White_Space is not
+        ("edge_c", 0, "user", "a\x1cb c", None, 0),
+        ("edge_c", 1, "user", "x\x1fy", None, 10),
     ]
     pdf = pd.DataFrame(
         [(c, i, r, x, tl, t0 + pd.Timedelta(seconds=d)) for c, i, r, x, tl, d in rows],
@@ -217,19 +221,92 @@ def test_window_strategy_bit_identical_and_pure_jvm(spark, transcripts):
     assert "__bag" in shipped and not shipped & {"text", "role", "tool"}
 
 
+def _plan_nodes(jplan):
+    """(node, run by whole-stage codegen?) for every node of a physical
+    plan, through adaptive-plan wrappers and query stages. Codegen
+    stages show only in a plan that has run."""
+    stack = [(jplan, False)]
+    while stack:
+        node, in_codegen = stack.pop()
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            stack.append((node.executedPlan(), False))
+            continue
+        if name.endswith("QueryStage"):
+            stack.append((node.plan(), False))
+            continue
+        if name.startswith("WholeStageCodegen"):
+            in_codegen = True
+        elif name == "InputAdapter":
+            in_codegen = False
+        yield node, in_codegen
+        kids = node.children()
+        stack.extend((kids.apply(i), in_codegen) for i in range(kids.size()))
+
+
 def _exchange_output(jplan) -> str:
     """The output attributes of the one Exchange in a physical plan."""
-    stack, found = [jplan], []
-    while stack:
-        node = stack.pop()
-        if node.nodeName() == "AdaptiveSparkPlan":
-            node = node.executedPlan()
-        if node.nodeName() == "Exchange":
-            found.append(node.output().toString())
-        kids = node.children()
-        stack.extend(kids.apply(i) for i in range(kids.size()))
+    found = [
+        node.output().toString()
+        for node, _ in _plan_nodes(jplan)
+        if node.nodeName() == "Exchange"
+    ]
     assert len(found) == 1, found
     return found[0]
+
+
+def test_text_projection_is_the_only_interpreted_project(transcripts):
+    """Every Project of the executed kernel plan runs in whole-stage
+    codegen except the one that tokenizes: its ``transform`` over the
+    tokens is the kernel's only interpreted expression."""
+    out = pit_features(transcripts.localCheckpoint(eager=True))
+    out.collect()
+    interpreted = [
+        node.output().toString()
+        for node, in_codegen in _plan_nodes(out._jdf.queryExecution().executedPlan())
+        if node.nodeName() == "Project" and not in_codegen
+    ]
+    assert len(interpreted) <= 1, interpreted
+    assert all("__d#" in p for p in interpreted), interpreted
+
+
+def test_repeated_build_reuses_the_kernel_columns(
+    spark, transcripts, tmp_path, monkeypatch
+):
+    """The kernel's Columns do not depend on the input, so they are built
+    once per process: building ``pit_features`` again, over an input
+    with another schema (an extra column, ``ts`` read back from
+    parquet), only replays the DataFrame calls. Each py4j command this
+    thread sends is one round trip to the JVM; py4j's finalizer thread
+    detaches freed objects in the background and is not counted."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    pit_features(transcripts)
+    path = str(tmp_path / "extra")
+    transcripts.withColumn("extra", F.lit(1)).write.parquet(path)
+    src = spark.read.parquet(path)
+
+    sent = [0]
+    send = ClientServerConnection.send_command
+    this_thread = threading.get_ident()
+
+    def counting(self, command):
+        sent[0] += threading.get_ident() == this_thread
+        return send(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    out = pit_features(src)
+    monkeypatch.undo()
+    assert sent[0] < 1000, f"{sent[0]} py4j round trips"
+
+    keys = ["conv_id", "ts", "turn_idx"]
+    got = out.toPandas().sort_values(keys, kind="mergesort").reset_index(drop=True)
+    want = features_ref(src.toPandas())
+    assert list(got.columns) == list(want.columns)
+    for c in got.columns:
+        assert (got[c].to_numpy() == want[c].to_numpy()).all(), f"column {c} differs"
 
 
 def _null_key_turns() -> pd.DataFrame:

@@ -332,6 +332,37 @@ def _in_job_group(sc, group: str, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def test_runner_names_its_spark_jobs(spark, transcripts, tmp_path):
+    """Every Spark job of an attempt carries ``pit:<attempt>:stage`` or
+    ``pit:<attempt>:<bucket>`` as its description in the status store,
+    and the caller's own description is back in place afterwards."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+
+    def jobs():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        listed = store.jobsList(None)
+        out = {}
+        for j in (listed.apply(i) for i in range(listed.size())):
+            d = j.description()
+            out[j.jobId()] = d.get() if d.isDefined() else None
+        return out
+
+    before = set(jobs())
+    r = _runner(spark, str(tmp_path), "named", n_buckets=3)
+    sc.setJobDescription("caller")
+    try:
+        with pytest.raises(RuntimeError, match="injected failure"):
+            r.run(transcripts, pit_features, fail_after=2)
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setJobDescription(None)
+    r.run(transcripts, pit_features)
+    assert sc.getLocalProperty("spark.job.description") is None
+    named = {d for i, d in jobs().items() if i not in before}
+    assert named == {"pit:1:stage", "pit:1:0", "pit:1:1", "pit:2:stage", "pit:2:2"}
+
+
 def test_control_plane_launches_no_spark_job(spark, transcripts, tmp_path):
     """Rerunning a fully-done table only reads checkpoint records, which
     the driver does without a Spark job."""
