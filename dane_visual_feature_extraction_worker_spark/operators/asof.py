@@ -27,6 +27,15 @@ Tie-break: among right rows sharing the max ts <= anchor, the one with
 the greatest ``right_order`` column wins (deterministic, mirrors the
 reference's deterministic first-hit rule data_handling.py:124-126 but
 "latest state" oriented).
+
+The union-window family (union, nearest, forward) is built from three
+shared pieces: ``_tagged_union`` (the two sides tagged and unioned by
+name), ``_running_last`` (the running match, backward or — over the
+reverse order — forward) and ``_anchor_output`` (anchor rows, the one
+tolerance predicate ``|anchor − match| <= tolerance``, the output
+select). Both resamplers read ``_grid_union`` (events ∪ tick grid).
+Every running window in the module is a ``_running`` frame, whose
+docstring also says why none is an unbounded-FOLLOWING frame.
 """
 
 from __future__ import annotations
@@ -75,6 +84,39 @@ def asof_join_rangejoin(
     )
 
 
+def _running(partition, order, descending: bool = False):
+    """The running frame of this module: rows [unbounded preceding,
+    current row] per ``partition``, ordered by ``order`` (all columns
+    descending when ``descending``).
+
+    A "next row at or after" lookup is a running ``last(ignorenulls)``
+    over the REVERSE order, never ``first`` over a [current, unbounded
+    following] frame: Spark executes shrinking frames with
+    UnboundedFollowingWindowFunctionFrame, which re-aggregates the rest
+    of the partition for EVERY row — O(n²) per entity, measured
+    unfinishable at 200k rows/entity — while a running (growing) frame
+    accumulates in O(n). The reverse scan costs one extra in-partition
+    sort on the SAME exchange (Catalyst keeps a single Exchange)."""
+    keys = [F.desc(c) for c in order] if descending else list(order)
+    return (
+        Window.partitionBy(*partition)
+        .orderBy(*keys)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+
+
+def _running_last(descending: bool = False):
+    """Running ``last(ignorenulls)`` of the right payload per entity,
+    ordered by (ts, tag, order): the latest right row at or before each
+    row, or — ``descending`` — the earliest one after it."""
+    w = _running(("__kh", "__k"), ("__ts", "__tag", "__ord"), descending)
+    return F.last("__r", ignorenulls=True).over(w)
+
+
+def _us(c):
+    return F.unix_micros(c.cast("timestamp"))
+
+
 def _tagged_union(
     left: DataFrame,
     right: DataFrame,
@@ -84,14 +126,16 @@ def _tagged_union(
     right_order: str | None,
 ):
     """Shared construction for the union-window as-of family: right
-    rows tagged 0 with their payload struct, left (anchor) rows tagged
-    1, unioned, with an xxhash64 numeric key prefix (distinct 8-byte
-    prefixes restore the sorter's prefix comparator on string keys —
-    measured sort drag at 30M+ rows; the raw key stays in the
-    partition spec so hash collisions cannot merge entities). Null-key
-    right rows are dropped: under SQL equality they match no anchor,
-    and kept they would share one window partition with null-key
-    anchors. Returns ``(unioned, left_cols, right_payload_cols)``."""
+    rows tagged 0 with their payload struct ``__r``, left (anchor) rows
+    tagged 1 with their columns as ``__l_<name>``, unioned by name (each
+    side's missing columns are null), with an xxhash64 numeric key
+    prefix (distinct 8-byte prefixes restore the sorter's prefix
+    comparator on string keys — measured sort drag at 30M+ rows; the
+    raw key stays in the partition spec so hash collisions cannot merge
+    entities). Null-key right rows are dropped: under SQL equality they
+    match no anchor, and kept they would share one window partition
+    with null-key anchors. Returns ``(unioned, left_cols,
+    right_payload_cols)``."""
     l_cols = list(left.columns)
     r_extra = [c for c in right.columns if c not in (on, right_ts)]
     ordcol = (
@@ -108,20 +152,41 @@ def _tagged_union(
             F.col(right_ts).alias("matched_ts"),
             *[F.col(c) for c in r_extra],
         ).alias("__r"),
-        *[F.lit(None).cast(f.dataType).alias(f"__l_{f.name}") for f in left.schema.fields],
     )
     l_side = left.select(
         F.col(on).alias("__k"),
         F.col(left_ts).alias("__ts"),
         F.lit(1).alias("__tag"),
         F.lit(0).cast("bigint").alias("__ord"),
-        F.lit(None)
-        .cast(r_side.schema["__r"].dataType)
-        .alias("__r"),
         *[F.col(c).alias(f"__l_{c}") for c in l_cols],
     )
-    u = r_side.unionByName(l_side).withColumn("__kh", F.xxhash64("__k"))
-    return u, l_cols, r_extra
+    u = r_side.unionByName(l_side, allowMissingColumns=True)
+    return u.withColumn("__kh", F.xxhash64("__k")), l_cols, r_extra
+
+
+def _anchor_output(
+    matched: DataFrame,
+    l_cols: list,
+    r_extra: list,
+    tolerance_seconds: float | None = None,
+) -> DataFrame:
+    """Keep the anchor rows of ``matched`` (the tagged union carrying
+    the chosen right struct ``__m``), null a match farther than
+    ``tolerance_seconds`` from its anchor in either direction (exact
+    integer microseconds), and select left columns + ``matched_ts`` +
+    right payload columns."""
+    out = matched.where(F.col("__tag") == 1)
+    if tolerance_seconds is not None:
+        gap = F.abs(_us(F.col("__ts")) - _us(F.col("__m.matched_ts")))
+        near = F.col("__m").isNotNull() & (
+            gap <= int(tolerance_seconds * 1_000_000)
+        )
+        out = out.withColumn("__m", F.when(near, F.col("__m")))
+    return out.select(
+        *[F.col(f"__l_{c}").alias(c) for c in l_cols],
+        F.col("__m.matched_ts").alias("matched_ts"),
+        *[F.col(f"__m.{c}").alias(c) for c in r_extra],
+    )
 
 
 def asof_join_union(
@@ -163,26 +228,8 @@ def asof_join_union(
     u, l_cols, r_extra = _tagged_union(
         left, right, on, left_ts, right_ts, right_order
     )
-    w = (
-        Window.partitionBy("__kh", "__k")
-        .orderBy("__ts", "__tag", "__ord")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    matched = u.withColumn("__m", F.last("__r", ignorenulls=True).over(w)).where(
-        F.col("__tag") == 1
-    )
-    if tolerance_seconds is not None:
-        fresh = F.col("__m").isNotNull() & (
-            F.unix_micros(F.col("__ts").cast("timestamp"))
-            - F.unix_micros(F.col("__m.matched_ts").cast("timestamp"))
-            <= int(tolerance_seconds * 1_000_000)
-        )
-        matched = matched.withColumn("__m", F.when(fresh, F.col("__m")))
-    return matched.select(
-        *[F.col(f"__l_{c}").alias(c) for c in l_cols],
-        F.col("__m.matched_ts").alias("matched_ts"),
-        *[F.col(f"__m.{c}").alias(c) for c in r_extra],
-    )
+    matched = u.withColumn("__m", _running_last())
+    return _anchor_output(matched, l_cols, r_extra, tolerance_seconds)
 
 
 def pit_snapshot(
@@ -251,16 +298,13 @@ def asof_join_nearest(
     ascending order (backward) and ``last(ignorenulls)`` up to the
     anchor in DESCENDING order (forward — the next row in ascending
     time is the latest-seen row in a reverse scan). Both frames are
-    unbounded-PRECEDING running accumulators, i.e. O(n) per entity;
-    the naive forward formulation (``first`` over an
-    unbounded-FOLLOWING frame) looks equivalent but Spark recomputes
-    that frame from each row position — O(n²) per entity, measured
-    unfinishable at 200k rows/entity. Cost of the reverse scan is one
-    extra Sort reusing the same exchange. Same-ts right rows sort
-    after the anchor in the reverse order, so the forward candidate
-    is strictly later by construction — they'd lose to the gap-0
-    backward match anyway. The gap comparison is exact integer
-    microseconds.
+    unbounded-PRECEDING running accumulators, i.e. O(n) per entity
+    (``_running`` says why not an unbounded-FOLLOWING frame). Cost of
+    the reverse scan is one extra Sort reusing the same exchange.
+    Same-ts right rows sort after the anchor in the reverse order, so
+    the forward candidate is strictly later by construction — they'd
+    lose to the gap-0 backward match anyway. The gap comparison is
+    exact integer microseconds.
 
     Use where the anchor is an observation time rather than a feature
     cutoff (nearest-frame alignment, sensor fusion). NOT for training
@@ -269,36 +313,20 @@ def asof_join_nearest(
     u, l_cols, r_extra = _tagged_union(
         left, right, on, left_ts, right_ts, right_order
     )
-    w_back = (
-        Window.partitionBy("__kh", "__k")
-        .orderBy("__ts", "__tag", "__ord")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_fwd = (
-        Window.partitionBy("__kh", "__k")
-        .orderBy(F.desc("__ts"), F.desc("__tag"), F.desc("__ord"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    anchors = (
-        u.withColumn("__b", F.last("__r", ignorenulls=True).over(w_back))
-        .withColumn("__f", F.last("__r", ignorenulls=True).over(w_fwd))
-        .where(F.col("__tag") == 1)
-    )
-    us = lambda c: F.unix_micros(c.cast("timestamp"))  # noqa: E731
-    back_gap = us(F.col("__ts")) - us(F.col("__b.matched_ts"))
-    fwd_gap = us(F.col("__f.matched_ts")) - us(F.col("__ts"))
+    back_gap = _us(F.col("__ts")) - _us(F.col("__b.matched_ts"))
+    fwd_gap = _us(F.col("__f.matched_ts")) - _us(F.col("__ts"))
     pick = (
         F.when(F.col("__b").isNull(), F.col("__f"))
         .when(F.col("__f").isNull(), F.col("__b"))
         .when(back_gap <= fwd_gap, F.col("__b"))
         .otherwise(F.col("__f"))
     )
-    anchors = anchors.withColumn("__m", pick)
-    return anchors.select(
-        *[F.col(f"__l_{c}").alias(c) for c in l_cols],
-        F.col("__m.matched_ts").alias("matched_ts"),
-        *[F.col(f"__m.{c}").alias(c) for c in r_extra],
+    matched = (
+        u.withColumn("__b", _running_last())
+        .withColumn("__f", _running_last(descending=True))
+        .withColumn("__m", pick)
     )
+    return _anchor_output(matched, l_cols, r_extra)
 
 
 def asof_join_forward(
@@ -323,10 +351,7 @@ def asof_join_forward(
     Same physical shape as the whole union-window family: ONE shuffle,
     then a running ``last(ignorenulls)`` over the REVERSE time order —
     the next row in ascending time is the latest-seen row in a reverse
-    scan, an O(n) unbounded-preceding accumulator (the naive
-    ``first`` over an unbounded-FOLLOWING frame is O(n²) per entity in
-    Spark — recomputed from every row position — measured
-    unfinishable at 200k rows/entity; see ``asof_join_nearest``).
+    scan, an O(n) unbounded-preceding accumulator (see ``_running``).
     Same-ts right rows sort after the anchor in the reverse order, so
     the match is strictly later by construction. Exact
     integer-microsecond tolerance.
@@ -334,26 +359,48 @@ def asof_join_forward(
     u, l_cols, r_extra = _tagged_union(
         left, right, on, left_ts, right_ts, right_order
     )
-    w_fwd = (
-        Window.partitionBy("__kh", "__k")
-        .orderBy(F.desc("__ts"), F.desc("__tag"), F.desc("__ord"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    anchors = u.withColumn(
-        "__m", F.last("__r", ignorenulls=True).over(w_fwd)
-    ).where(F.col("__tag") == 1)
-    if tolerance_seconds is not None:
-        fresh = F.col("__m").isNotNull() & (
-            F.unix_micros(F.col("__m.matched_ts").cast("timestamp"))
-            - F.unix_micros(F.col("__ts").cast("timestamp"))
-            <= int(tolerance_seconds * 1_000_000)
+    matched = u.withColumn("__m", _running_last(descending=True))
+    return _anchor_output(matched, l_cols, r_extra, tolerance_seconds)
+
+
+def _grid_union(
+    df: DataFrame, entity_col: str, ts_col: str, value_col: str, step_seconds: int
+) -> DataFrame:
+    """Shared input of both resamplers (plan in ``resample_ffill``):
+    events collapsed to one value per (entity, whole second) —
+    deterministic max, as exact cents — tagged ``__is_grid`` 0, unioned
+    with each entity's epoch-aligned ticks between its first and last
+    event, tagged 1 with null cents. Columns: ``(entity, __ts, __cents,
+    __is_grid)``."""
+    if step_seconds <= 0:
+        raise ValueError("step_seconds must be positive")
+    sec = F.col(ts_col).cast("timestamp").cast("double")
+    ts_l = F.floor(sec).cast("bigint")
+    cents = (F.col(value_col).cast("decimal(18,2)") * 100).cast("bigint")
+    ev = (
+        df.select(
+            F.col(entity_col).alias("entity"),
+            ts_l.alias("__ts"),
+            cents.alias("__cents"),
         )
-        anchors = anchors.withColumn("__m", F.when(fresh, F.col("__m")))
-    return anchors.select(
-        *[F.col(f"__l_{c}").alias(c) for c in l_cols],
-        F.col("__m.matched_ts").alias("matched_ts"),
-        *[F.col(f"__m.{c}").alias(c) for c in r_extra],
+        .groupBy("entity", "__ts")
+        .agg(F.max("__cents").alias("__cents"))
     )
+    step = F.lit(step_seconds).cast("bigint")
+    bounds = ev.groupBy("entity").agg(
+        F.min("__ts").alias("__mn"), F.max("__ts").alias("__mx")
+    )
+    first_tick = (
+        F.expr(f"(__mn + {step_seconds} - 1) DIV {step_seconds}") * step
+    ).cast("bigint")
+    last_tick = (F.expr(f"__mx DIV {step_seconds}") * step).cast("bigint")
+    grid = bounds.where(last_tick >= first_tick).select(
+        "entity",
+        F.explode(F.sequence(first_tick, last_tick, step)).alias("__ts"),
+        F.lit(None).cast("bigint").alias("__cents"),
+        F.lit(1).alias("__is_grid"),
+    )
+    return ev.withColumn("__is_grid", F.lit(0)).unionByName(grid)
 
 
 def resample_ffill(
@@ -391,42 +438,8 @@ def resample_ffill(
     span/step stays O(10⁴) per entity at the target scale (the same
     contract a time-series store's downsampler imposes).
     """
-    if step_seconds <= 0:
-        raise ValueError("step_seconds must be positive")
-    sec = F.col(ts_col).cast("timestamp").cast("double")
-    ts_l = F.floor(sec).cast("bigint")
-    cents = (F.col(value_col).cast("decimal(18,2)") * 100).cast("bigint")
-    ev = (
-        df.select(
-            F.col(entity_col).alias("entity"),
-            ts_l.alias("__ts"),
-            cents.alias("__cents"),
-        )
-        .groupBy("entity", "__ts")
-        .agg(F.max("__cents").alias("__cents"))
-    )
-    step = F.lit(step_seconds).cast("bigint")
-    bounds = ev.groupBy("entity").agg(
-        F.min("__ts").alias("__mn"), F.max("__ts").alias("__mx")
-    )
-    first_tick = (
-        F.expr(f"(__mn + {step_seconds} - 1) DIV {step_seconds}") * step
-    ).cast("bigint")
-    last_tick = (F.expr(f"__mx DIV {step_seconds}") * step).cast("bigint")
-    grid = bounds.where(last_tick >= first_tick).select(
-        "entity",
-        F.explode(
-            F.sequence(first_tick, last_tick, step)
-        ).alias("__ts"),
-        F.lit(None).cast("bigint").alias("__cents"),
-        F.lit(1).alias("__is_grid"),
-    )
-    union = ev.withColumn("__is_grid", F.lit(0)).unionByName(grid)
-    w = (
-        Window.partitionBy("entity")
-        .orderBy("__ts", "__is_grid")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    union = _grid_union(df, entity_col, ts_col, value_col, step_seconds)
+    w = _running(("entity",), ("__ts", "__is_grid"))
     return (
         union.withColumn(
             "value_ffill_cents", F.last("__cents", ignorenulls=True).over(w)
@@ -466,56 +479,13 @@ def resample_linear(
     Interior ticks only by construction (first tick ≥ first event,
     last tick ≤ last event), so both neighbors always exist.
     """
-    if step_seconds <= 0:
-        raise ValueError("step_seconds must be positive")
-    sec = F.col(ts_col).cast("timestamp").cast("double")
-    ts_l = F.floor(sec).cast("bigint")
-    cents = (F.col(value_col).cast("decimal(18,2)") * 100).cast("bigint")
-    ev = (
-        df.select(
-            F.col(entity_col).alias("entity"),
-            ts_l.alias("__ts"),
-            cents.alias("__cents"),
-        )
-        .groupBy("entity", "__ts")
-        .agg(F.max("__cents").alias("__cents"))
-    )
-    step = F.lit(step_seconds).cast("bigint")
-    bounds = ev.groupBy("entity").agg(
-        F.min("__ts").alias("__mn"), F.max("__ts").alias("__mx")
-    )
-    first_tick = (
-        F.expr(f"(__mn + {step_seconds} - 1) DIV {step_seconds}") * step
-    ).cast("bigint")
-    last_tick = (F.expr(f"__mx DIV {step_seconds}") * step).cast("bigint")
-    grid = bounds.where(last_tick >= first_tick).select(
-        "entity",
-        F.explode(F.sequence(first_tick, last_tick, step)).alias("__ts"),
-        F.lit(None).cast("bigint").alias("__cents"),
-        F.lit(1).alias("__is_grid"),
-    )
-    union = ev.withColumn("__is_grid", F.lit(0)).unionByName(grid)
-    back = (
-        Window.partitionBy("entity")
-        .orderBy("__ts", "__is_grid")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    # Forward neighbors via a DESC-ordered *running* frame, not a
-    # [current, unbounded following] frame: Spark executes shrinking
-    # frames with UnboundedFollowingWindowFunctionFrame, which
-    # re-aggregates the remainder of the partition for EVERY row —
-    # O(n²) per entity — while a running (growing) frame accumulates
-    # in O(n).  last(ignorenulls) over (ts DESC, is_grid DESC) rows
-    # [start, current] is exactly first(ignorenulls) over
-    # (ts ASC, is_grid ASC) rows [current, end] — the same nearest
-    # at-or-after non-null, current row included.  Cost: one extra
-    # in-partition sort on the SAME entity exchange (Catalyst keeps a
-    # single Exchange; the second Window just re-sorts its partition).
-    fwd_rev = (
-        Window.partitionBy("entity")
-        .orderBy(F.col("__ts").desc(), F.col("__is_grid").desc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    union = _grid_union(df, entity_col, ts_col, value_col, step_seconds)
+    back = _running(("entity",), ("__ts", "__is_grid"))
+    # Forward neighbours: last(ignorenulls) over (ts DESC, is_grid DESC)
+    # rows [start, current] is first(ignorenulls) over (ts ASC, is_grid
+    # ASC) rows [current, end] — the nearest at-or-after non-null,
+    # current row included — in O(n) (see ``_running``).
+    fwd_rev = _running(("entity",), ("__ts", "__is_grid"), descending=True)
     annotated = (
         union.withColumn("__pv", F.last("__cents", ignorenulls=True).over(back))
         .withColumn(

@@ -22,14 +22,22 @@ from dane_visual_feature_extraction_worker_spark.config import EngineConfig
 _ACTIVE: dict[str, SparkSession] = {}
 
 
+def sql_conf(cfg: EngineConfig) -> dict[str, str]:
+    """The runtime SQL confs ``cfg`` sets: settable on a running
+    session as well as at build time."""
+    return {
+        "spark.sql.shuffle.partitions": str(cfg.shuffle_partitions),
+        "spark.sql.adaptive.enabled": str(cfg.aqe).lower(),
+        "spark.sql.files.maxPartitionBytes": cfg.max_partition_bytes,
+    }
+
+
 def get_spark(cfg: EngineConfig | None = None) -> SparkSession:
     """Build (or fetch) the engine SparkSession for ``cfg``."""
     cfg = cfg or EngineConfig()
     b = (
         SparkSession.builder.appName(cfg.app_name)
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", str(cfg.shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", str(cfg.aqe).lower())
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -37,7 +45,6 @@ def get_spark(cfg: EngineConfig | None = None) -> SparkSession:
             "spark.sql.execution.arrow.maxRecordsPerBatch",
             str(cfg.arrow_batch_size),
         )
-        .config("spark.sql.files.maxPartitionBytes", cfg.max_partition_bytes)
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         .config("spark.driver.memory", "8g")
     )
@@ -47,7 +54,7 @@ def get_spark(cfg: EngineConfig | None = None) -> SparkSession:
         )
     if cfg.master is not None or SparkSession.getActiveSession() is None:
         b = b.master(cfg.resolved_master)
-    for k, v in cfg.extra_conf.items():
+    for k, v in {**sql_conf(cfg), **cfg.extra_conf}.items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

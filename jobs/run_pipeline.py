@@ -33,14 +33,17 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--output", required=True, help="feature output root")
     ap.add_argument("--checkpoints", required=True, help="checkpoint records dir")
     ap.add_argument("--n-buckets", type=int, default=256)
-    ap.add_argument("--entity-col", default="conv_id")
     ap.add_argument(
         "--config",
         action="append",
         default=[],
         help="engine YAML config file(s); later files override earlier "
         "(the reference's home -> base -> local layering). Validated "
-        "eagerly — a malformed config fails at submit, naming the key.",
+        "eagerly — a malformed config fails at submit, naming the key. "
+        "ENGINE.SHUFFLE_PARTITIONS, AQE, MAX_PARTITION_BYTES, "
+        "ARROW_BATCH_SIZE and SPARK.EXTRA_CONF are set on the job's "
+        "session; APP_NAME, MASTER and OFFHEAP_SIZE cannot change a "
+        "running spark-submit session, so pass those to spark-submit.",
     )
     args = ap.parse_args(argv)
 
@@ -50,13 +53,18 @@ def main(argv: list[str] | None = None) -> int:
         load_yaml_config,
     )
     from dane_visual_feature_extraction_worker_spark.plans.pipeline import pit_features
-    from dane_visual_feature_extraction_worker_spark.session import tune_for_session
+    from dane_visual_feature_extraction_worker_spark.session import (
+        sql_conf,
+        tune_for_session,
+    )
 
-    # session comes from spark-submit's conf; only runtime knobs here
+    # session comes from spark-submit's conf; only runtime knobs here,
+    # and the engine defaults do not override spark-submit's own
     cfg = load_yaml_config(*args.config) if args.config else EngineConfig()
     spark = SparkSession.builder.appName("pit-feature-pipeline").getOrCreate()
     tune_for_session(spark, cfg)
-    for k, v in cfg.extra_conf.items():
+    runtime = sql_conf(cfg) if args.config else {}
+    for k, v in {**runtime, **cfg.extra_conf}.items():
         spark.conf.set(k, v)
 
     transcripts = spark.read.parquet(args.input)
@@ -65,7 +73,6 @@ def main(argv: list[str] | None = None) -> int:
         output_dir=args.output,
         checkpoint_dir=args.checkpoints,
         n_buckets=args.n_buckets,
-        entity_col=args.entity_col,
     )
     # output_rows sums the done records' rows: no rescan of the output
     print(json.dumps(runner.run(transcripts, pit_features)))

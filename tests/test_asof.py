@@ -253,3 +253,46 @@ def test_asof_forward_strict_and_tolerance(spark):
     assert out[2]["rid"] == 20
     assert out[3]["rid"] is None
     assert out[4]["rid"] is None
+
+
+def test_asof_over_unmaterialized_kernel_plans_fast_and_matches_two_jobs(
+    spark, tmp_path
+):
+    """An as-of straight over the feature kernel (no parquet in between)
+    once spent 8-10 s in the optimizer's constraint propagation; it now
+    optimizes in well under a second. The 3 s bound sits far from both
+    sides of that gap. The fused output equals the two-job path
+    (features → parquet → as-of)."""
+    import time
+
+    from dane_visual_feature_extraction_worker_spark.kernel import FEATURE_DIM
+    from dane_visual_feature_extraction_worker_spark.plans.pipeline import (
+        pit_features,
+    )
+
+    tmp = str(tmp_path)
+    gen_transcripts(spark, n_convs=50, seed=1).write.parquet(f"{tmp}/t")
+    t = spark.read.parquet(f"{tmp}/t")
+    gen_anchors(spark, t, per_conv=4, seed=1).write.parquet(f"{tmp}/a")
+    anchors = spark.read.parquet(f"{tmp}/a")
+    payload = ["conv_id", "ts"] + [f"f{i}" for i in range(FEATURE_DIM)]
+
+    fused = asof_join_union(
+        anchors, pit_features(t).select(*payload), left_ts="anchor_ts"
+    )
+    t0 = time.perf_counter()
+    fused._jdf.queryExecution().optimizedPlan()
+    assert time.perf_counter() - t0 < 3.0
+
+    pit_features(t).write.parquet(f"{tmp}/f")
+    two_job = asof_join_union(
+        anchors, spark.read.parquet(f"{tmp}/f").select(*payload),
+        left_ts="anchor_ts",
+    )
+
+    def digest(df):
+        h = F.xxhash64(*df.columns).cast("decimal(38,0)")
+        return df.agg(F.count("*"), F.sum(h)).first()
+
+    got = digest(fused)
+    assert got == digest(two_job) and got[0] == anchors.count()

@@ -128,9 +128,7 @@ def test_kernel_constant_keys_are_optional(tmp_path):
     assert cfg.app_name == "yaml-engine"
 
 
-def test_run_pipeline_refuses_session_gap_flag(tmp_path):
-    """``--session-gap-seconds`` did nothing, so the job no longer
-    accepts it."""
+def _run_pipeline_job():
     import importlib.util as iu
     import os
 
@@ -140,10 +138,49 @@ def test_run_pipeline_refuses_session_gap_flag(tmp_path):
     )
     job = iu.module_from_spec(spec)
     spec.loader.exec_module(job)
+    return job
+
+
+@pytest.mark.parametrize(
+    "flag",
+    [["--session-gap-seconds", "900"], ["--entity-col", "role"]],
+    ids=["session_gap", "entity_col"],
+)
+def test_run_pipeline_refuses_session_gap_flag(tmp_path, flag):
+    """``--session-gap-seconds`` did nothing, and the kernel always
+    groups by ``conv_id``, so any ``--entity-col`` but ``conv_id``
+    gave wrong features: the job accepts neither flag."""
     argv = ["--input", f"{tmp_path}/in", "--output", f"{tmp_path}/out",
-            "--checkpoints", f"{tmp_path}/cp", "--session-gap-seconds", "900"]
+            "--checkpoints", f"{tmp_path}/cp", *flag]
     with pytest.raises(SystemExit):
-        job.main(argv)
+        _run_pipeline_job().main(argv)
+
+
+def test_run_pipeline_config_sets_runtime_sql_conf(spark, transcripts, tmp_path):
+    """``--config`` sets SHUFFLE_PARTITIONS, AQE and MAX_PARTITION_BYTES
+    on the job's session, not only validates them."""
+    keys = {
+        "spark.sql.shuffle.partitions": "3",
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.files.maxPartitionBytes": "1m",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "256",
+    }
+    before = {k: spark.conf.get(k) for k in keys}
+    body = (
+        VALID.replace("SHUFFLE_PARTITIONS: 16", "SHUFFLE_PARTITIONS: 3")
+        .replace("AQE: true", "AQE: false")
+        .replace("MAX_PARTITION_BYTES: 128m", "MAX_PARTITION_BYTES: 1m")
+    )
+    transcripts.write.parquet(f"{tmp_path}/in")
+    argv = ["--input", f"{tmp_path}/in", "--output", f"{tmp_path}/out",
+            "--checkpoints", f"{tmp_path}/cp", "--n-buckets", "1",
+            "--config", _write(tmp_path, "c.yml", body)]
+    try:
+        assert _run_pipeline_job().main(argv) == 0
+        assert {k: spark.conf.get(k) for k in keys} == keys
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)
 
 
 def test_checkpoint_dir_key_is_refused(tmp_path):

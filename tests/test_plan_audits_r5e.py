@@ -8,6 +8,12 @@ from __future__ import annotations
 import datetime as dt
 
 import pyspark.sql.functions as F
+import pytest
+
+from dane_visual_feature_extraction_worker_spark.operators.asof import (
+    resample_ffill,
+    resample_linear,
+)
 
 
 def _plan(df) -> str:
@@ -76,14 +82,13 @@ def test_linear_attribution_two_exchanges_zero_joins(spark):
     assert "CartesianProduct" not in p, p
 
 
-def test_resample_ffill_two_entity_exchanges_no_join(spark):
-    from dane_visual_feature_extraction_worker_spark.operators.asof import (
-        resample_ffill,
-    )
-
+@pytest.mark.parametrize("resample", [resample_ffill, resample_linear],
+                         ids=["resample_ffill", "resample_linear"])
+def test_resample_ffill_two_entity_exchanges_no_join(spark, resample):
+    """Both resamplers share one events ∪ tick-grid plan."""
     p = _plan(
-        resample_ffill(_events(spark), entity_col="user_id", ts_col="ts",
-                       value_col="value", step_seconds=3600)
+        resample(_events(spark), entity_col="user_id", ts_col="ts",
+                 value_col="value", step_seconds=3600)
     )
     assert p.count("Exchange hashpartitioning") <= 3, p
     assert "Join" not in p, p

@@ -18,6 +18,7 @@ from dane_visual_feature_extraction_worker_spark.operators.sessionize import ses
 # ties, duplicates, null keys, empty-side and single-row corners
 _entities = st.sampled_from(["e1", "e2", "e3", None])
 _ts = st.integers(min_value=0, max_value=50)
+_tolerance = st.one_of(st.none(), st.integers(min_value=0, max_value=20))
 
 
 def _brute_asof(left: pd.DataFrame, right: pd.DataFrame) -> list:
@@ -36,8 +37,9 @@ def _brute_asof(left: pd.DataFrame, right: pd.DataFrame) -> list:
 @given(
     left=st.lists(st.tuples(_entities, _ts), min_size=1, max_size=12),
     right=st.lists(st.tuples(_entities, _ts, st.integers(0, 5)), max_size=15),
+    tol=_tolerance,
 )
-def test_asof_all_paths_match_bruteforce_random(spark, left, right):
+def test_asof_all_paths_match_bruteforce_random(spark, left, right, tol):
     lpd = pd.DataFrame(left, columns=["k", "t"]).drop_duplicates()
     rpd = pd.DataFrame(right, columns=["k", "t", "o"]).drop_duplicates()
     ldf = spark.createDataFrame(lpd, "k string, t long").select(
@@ -54,10 +56,12 @@ def test_asof_all_paths_match_bruteforce_random(spark, left, right):
     expect = _brute_asof(lpd2, rpd if len(rpd) else pd.DataFrame(columns=["k", "t", "o"]))
 
     for fn, kw in (
-        (asof_join_union, {}),
+        (asof_join_union, {"tolerance_seconds": tol}),
         (asof_join_rangejoin, {"left_keys": ["k", "t"]}),
     ):
         got = fn(ldf, rdf, on="k", left_ts="t", right_ts="t", right_order="o", **kw)
+        # the union's tolerance nulls a match older than tol seconds
+        max_age = tol if fn is asof_join_union and tol is not None else 10**9
         norm = [
             (
                 r["k"],
@@ -68,7 +72,9 @@ def test_asof_all_paths_match_bruteforce_random(spark, left, right):
             for r in got.collect()
         ]
         expect_n = [
-            (k, int(t), None if m is None else int(m), None if o is None else int(o))
+            (k, int(t), None, None)
+            if m is None or t - m > max_age
+            else (k, int(t), int(m), int(o))
             for (k, t, m, o) in expect
         ]
         assert sorted(norm, key=str) == sorted(expect_n, key=str), fn.__name__
@@ -382,11 +388,13 @@ def test_rolling_median_random_vs_numpy(spark, vals, window):
 @given(
     left=st.lists(st.tuples(_entities, _ts), min_size=1, max_size=12),
     right=st.lists(st.tuples(_entities, _ts, st.integers(0, 5)), max_size=15),
+    tol=_tolerance,
 )
-def test_asof_nearest_forward_match_bruteforce_random(spark, left, right):
+def test_asof_nearest_forward_match_bruteforce_random(spark, left, right, tol):
     """Random inputs: nearest picks the min-abs-gap candidate with
-    backward tie-break; forward picks the min strictly-later candidate
-    — each vs a python brute force."""
+    backward tie-break; forward picks the min strictly-later candidate,
+    null when it lies more than ``tol`` seconds ahead — each vs a
+    python brute force."""
     from dane_visual_feature_extraction_worker_spark.operators.asof import (
         asof_join_forward,
         asof_join_nearest,
@@ -415,6 +423,8 @@ def test_asof_nearest_forward_match_bruteforce_random(spark, left, right):
             if kind == "forward":
                 fut = [(rt, ro) for rt, ro in cands if rt > t]
                 pick = min(fut, key=lambda c: (c[0], c[1])) if fut else None
+                if pick and tol is not None and pick[0] - t > tol:
+                    pick = None
             else:  # nearest
                 if not cands:
                     pick = None
@@ -429,7 +439,10 @@ def test_asof_nearest_forward_match_bruteforce_random(spark, left, right):
             out[(k, t)] = pick
         return out
 
-    for kind, fn in (("nearest", asof_join_nearest), ("forward", asof_join_forward)):
+    for kind, fn, kw in (
+        ("nearest", asof_join_nearest, {}),
+        ("forward", asof_join_forward, {"tolerance_seconds": tol}),
+    ):
         got = {
             (r["k"], int(r["t"].timestamp())): (
                 None
@@ -437,7 +450,7 @@ def test_asof_nearest_forward_match_bruteforce_random(spark, left, right):
                 else (int(r["matched_ts"].timestamp()), r["o"])
             )
             for r in fn(ldf, rdf, on="k", left_ts="t", right_ts="t",
-                        right_order="o").collect()
+                        right_order="o", **kw).collect()
         }
         want = brute(kind)
         assert got == want, kind
