@@ -50,7 +50,7 @@ from typing import Callable
 
 import pyspark.sql.functions as F
 from py4j.protocol import Py4JJavaError
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 CHECKPOINT_SCHEMA = (
     "bucket int, status string, rows bigint, bytes bigint, ms double, "
@@ -321,26 +321,3 @@ class CheckpointedRunner:
     def result(self) -> DataFrame:
         return self.spark.read.parquet(self.output_dir)
 
-
-def lookup_upstream(
-    upstream: DataFrame,
-    entity_col: str = "conv_id",
-    order: list[str] | None = None,
-) -> DataFrame:
-    """A19 dependency lookup: the latest upstream result row per entity.
-
-    The reference fetches its dependency's stored result for the entity
-    it is about to process (io_util.py:288-295 fetch_upstream_result);
-    distributed, that per-entity point lookup becomes a bulk latest-row
-    extraction — window row_number over (entity ORDER BY order DESC),
-    one shuffle, then a (broadcastable when small) join into the
-    consuming pipeline. Consumers: ``df.join(lookup_upstream(up), on=
-    entity, how='left')`` with downstream sentinel fill.
-    """
-    order = order or ["ts"]
-    w = Window.partitionBy(entity_col).orderBy(*[F.col(c).desc() for c in order])
-    return (
-        upstream.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__rn")
-    )

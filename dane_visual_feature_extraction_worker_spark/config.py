@@ -11,6 +11,7 @@ types of every key before any work starts). Two entry points:
   validated key-by-key with the reference's assert-style checks
   (``check_setting(cfg.SECTION.KEY, type)`` → failure names the exact
   key, base_util.py:33-117), and materialized into the dataclass.
+  Both steps read the engine keys from one table, ``_ENGINE_KEYS``.
   Validation happens eagerly at load — a 100 TB job must die at submit
   time on a malformed config, not 4 hours in.
 """
@@ -84,6 +85,20 @@ class ConfigValidationError(ValueError):
     (base_util.py:33 ``assert check_setting(...), "RABBITMQ.HOST"``)."""
 
 
+# ENGINE key -> (EngineConfig field, type, optional): the one list of
+# engine keys, read by validate_config_tree and load_yaml_config. An
+# absent optional key loads as None.
+_ENGINE_KEYS = {
+    "APP_NAME": ("app_name", str, False),
+    "MASTER": ("master", str, True),
+    "SHUFFLE_PARTITIONS": ("shuffle_partitions", int, False),
+    "ARROW_BATCH_SIZE": ("arrow_batch_size", int, False),
+    "MAX_PARTITION_BYTES": ("max_partition_bytes", str, False),
+    "AQE": ("aqe", bool, False),
+    "OFFHEAP_SIZE": ("offheap_size", str, True),
+}
+
+
 def _require(cond: bool, key: str) -> None:
     if not cond:
         raise ConfigValidationError(f"Configuration error: {key}")
@@ -98,16 +113,8 @@ def validate_config_tree(tree: dict) -> None:
     _require(isinstance(tree, dict) and bool(tree), "<root>")
     eng = tree.get("ENGINE")
     _require(isinstance(eng, dict), "ENGINE")
-    _require(check_setting(eng.get("APP_NAME"), str), "ENGINE.APP_NAME")
-    _require(check_setting(eng.get("MASTER"), str, True), "ENGINE.MASTER")
-    _require(
-        check_setting(eng.get("SHUFFLE_PARTITIONS"), int),
-        "ENGINE.SHUFFLE_PARTITIONS",
-    )
-    _require(
-        check_setting(eng.get("ARROW_BATCH_SIZE"), int),
-        "ENGINE.ARROW_BATCH_SIZE",
-    )
+    for key, (_, t, optional) in _ENGINE_KEYS.items():
+        _require(check_setting(eng.get(key), t, optional), f"ENGINE.{key}")
     # The kernel fixes these two; a config may only restate them.
     from dane_visual_feature_extraction_worker_spark.kernel import (
         FEATURE_DIM,
@@ -120,15 +127,6 @@ def validate_config_tree(tree: dict) -> None:
     ):
         v = eng.get(key)
         _require(v is None or (check_setting(v, float) and v == fixed), f"ENGINE.{key}")
-    _require(
-        check_setting(eng.get("MAX_PARTITION_BYTES"), str),
-        "ENGINE.MAX_PARTITION_BYTES",
-    )
-    _require(check_setting(eng.get("AQE"), bool), "ENGINE.AQE")
-    _require(
-        check_setting(eng.get("OFFHEAP_SIZE"), str, True),
-        "ENGINE.OFFHEAP_SIZE",
-    )
     paths = tree.get("PATHS", {})
     _require(isinstance(paths, dict), "PATHS")
     # The job takes its checkpoint dir from --checkpoints only.
@@ -184,12 +182,6 @@ def load_yaml_config(*paths: str) -> EngineConfig:
         k: str(v) for k, v in tree.get("SPARK", {}).get("EXTRA_CONF", {}).items()
     }
     return EngineConfig(
-        app_name=eng["APP_NAME"],
-        master=eng.get("MASTER"),
-        shuffle_partitions=eng["SHUFFLE_PARTITIONS"],
-        arrow_batch_size=eng["ARROW_BATCH_SIZE"],
-        max_partition_bytes=eng["MAX_PARTITION_BYTES"],
-        aqe=eng["AQE"],
-        offheap_size=eng.get("OFFHEAP_SIZE"),
+        **{f: eng.get(key) for key, (f, _, _) in _ENGINE_KEYS.items()},
         extra_conf=extra,
     )

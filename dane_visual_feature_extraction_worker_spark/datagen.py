@@ -203,21 +203,3 @@ def gen_intervals(
         F.format_string("seg_%d", F.col("k")).alias("label"),
     )
 
-
-def gen_attributes(
-    spark: SparkSession, transcripts: DataFrame, rate: int = 5, seed: int = 42
-) -> DataFrame:
-    """Sparse point-updates for backfill (FIXTURES.md §4): ~1/rate of
-    turns carries an attribute observation."""
-    h = F.xxhash64(F.lit(seed), F.col("conv_id"), F.col("turn_idx"), F.lit(9))
-    return (
-        transcripts.where(F.pmod(h, F.lit(rate)) == 0)
-        .select(
-            "conv_id",
-            "ts",
-            F.when(F.pmod(h, F.lit(2)) == 0, F.lit("score"))
-            .otherwise(F.lit("budget"))
-            .alias("attr_name"),
-            (F.pmod(h, F.lit(10_000)).cast("double") / 100.0).alias("attr_value"),
-        )
-    )

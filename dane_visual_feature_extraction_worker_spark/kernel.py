@@ -15,11 +15,12 @@ machine. There is one engine implementation and one oracle:
   text features computed map-side (``_text_features``: plain columns
   and an ``array<float>`` bag, from one interpreted pass over each
   turn's tokens), ONE hash exchange on the entity key, running-window
-  prefix aggregates over (conv_id ORDER BY ts, turn_idx), no Python
-  stage, every other Project in whole-stage codegen. Its Columns do
-  not depend on the input, so they are built once per process
-  (``_text_columns``, ``_window_columns``) and a call only replays
-  the plan's ~11 DataFrame calls;
+  prefix aggregates over (conv_id ORDER BY ts, turn_idx), one session
+  window over (conv_id, session_id) that gives the session bounds, f13
+  and f14, no Python stage, every other Project in whole-stage
+  codegen. Its Columns do not depend on the input, so they are built
+  once per process (``_text_columns``, ``_window_columns``) and a
+  call only replays the plan's ~11 DataFrame calls;
 - ``compute_features_numeric``: the numpy oracle over
   ``with_text_features`` rows. It runs the same sequential double
   arithmetic, so the engine must match it bit for bit
@@ -290,16 +291,22 @@ def feature_vectors_windows(transcripts: DataFrame) -> DataFrame:
     """The engine kernel: the 32 features as window expressions — NO
     Python stage at all.
 
-    Every f0..f15 is a per-conversation prefix op (cumsum / running
-    max / last-ignorenulls) over rows sorted by (ts, turn_idx); the bag
-    columns f16..f31 are read straight from ``__bag[b]``. A running-frame
+    f0..f12 and f15 are per-conversation prefix ops (cumsum / running
+    max / first) over rows sorted by (ts, turn_idx); the bag columns
+    f16..f31 are read straight from ``__bag[b]``. The session window
+    (conv_id, session_id) gives the session bounds, f13 = ``__rn`` −
+    its min + 1 and f14 = ``__ts_s`` − its min: the session's first
+    row is its least row number and, rows being sorted by ts, its
+    least timestamp. ``lag`` runs once, in ``__gap``, which also
+    flags a session start (first row, or gap > SESSION_GAP_S) inside
+    the one running sum that numbers sessions. A running-frame
     window aggregate accumulates rows one at a time in sort order — the SAME
     sequential double arithmetic as the numpy kernel's cumsum — so the
     float32 outputs are bit-identical to ``compute_features_numeric``
     (asserted in tests/test_kernel.py).
 
     Plan: ONE shuffle (hash on conv_id) + one sort for the main window;
-    the session-bounds window partitions on (conv_id, session_id),
+    the session window partitions on (conv_id, session_id),
     which hash(conv_id) already clusters, so Catalyst adds only a
     partition-local re-sort, no second exchange. Removing the Arrow
     transfer + Python workers is what lifts multi-core scaling
@@ -347,8 +354,7 @@ def _window_columns() -> tuple[tuple[Column | str, ...], ...]:
     # (route via epoch_seconds: parquet reads give TIMESTAMP_NTZ, which
     # cannot cast to double directly)
     ts_s = epoch_seconds("ts")
-    lag_ts = F.lag(ts_s, 1).over(w)
-    gap = F.coalesce(ts_s - lag_ts, F.lit(0.0))
+    gap = F.coalesce(ts_s - F.lag(ts_s, 1).over(w), F.lit(0.0))
     rn = F.row_number().over(w).cast("double")
 
     s1 = [
@@ -365,21 +371,14 @@ def _window_columns() -> tuple[tuple[Column | str, ...], ...]:
         F.unix_micros(F.col("ts").cast("timestamp")).alias("__ts_us"),
         gap.alias("__gap"),
         rn.alias("__rn"),
-        # new-session flag: first row of the conv, or gap > threshold
-        F.when(lag_ts.isNull() | (ts_s - lag_ts > SESSION_GAP_S), F.lit(1))
-        .otherwise(F.lit(0))
-        .alias("__new"),
     ]
+    # a session starts at the conv's first row or after a gap > threshold
+    new_session = (F.col("__rn") == 1) | (F.col("__gap") > SESSION_GAP_S)
     s2 = [
         "*",
-        (F.sum("__new").over(wrun) - 1).cast("bigint").alias("session_id"),
-        # index/ts of the most recent session boundary (running last)
-        F.last(F.when(F.col("__new") == 1, F.col("__rn")), ignorenulls=True)
-        .over(wrun)
-        .alias("__sess_rn"),
-        F.last(F.when(F.col("__new") == 1, F.col("__ts_s")), ignorenulls=True)
-        .over(wrun)
-        .alias("__sess_ts"),
+        (F.sum(new_session.cast("int")).over(wrun) - 1)
+        .cast("bigint")
+        .alias("session_id"),
         F.sum("chars").over(wrun).alias("__cum_chars"),
         # f5 numerator: exact telescoping gap sum in integer micros
         F.first("__ts_us").over(wrun).alias("__ts0_us"),
@@ -409,8 +408,8 @@ def _window_columns() -> tuple[tuple[Column | str, ...], ...]:
         ff("session_id").cast("float").alias("f7"),
         *[ff(f"__r{j}").cast("float").alias(f"f{8 + j}") for j in range(4)],
         ff("__cum_tool").cast("float").alias("f12"),
-        (ff("__rn") - ff("__sess_rn") + 1).cast("float").alias("f13"),
-        (ff("__ts_s") - ff("__sess_ts")).cast("float").alias("f14"),
+        (ff("__rn") - F.min("__rn").over(ws) + 1).cast("float").alias("f13"),
+        (ff("__ts_s") - F.min("__ts_s").over(ws)).cast("float").alias("f14"),
         ff("words").cast("float").alias("f15"),
         *[ff("__bag")[b].alias(f"f{16 + b}") for b in range(_HASH_BUCKETS)],
     ]

@@ -33,9 +33,13 @@ shared pieces: ``_tagged_union`` (the two sides tagged and unioned by
 name), ``_running_last`` (the running match, backward or — over the
 reverse order — forward) and ``_anchor_output`` (anchor rows, the one
 tolerance predicate ``|anchor − match| <= tolerance``, the output
-select). Both resamplers read ``_grid_union`` (events ∪ tick grid).
-Every running window in the module is a ``_running`` frame, whose
-docstring also says why none is an unbounded-FOLLOWING frame.
+select). Both resamplers read ``_grid_union`` (events ∪ tick grid);
+``resample_linear`` carries each neighbour as one ``(t, v)`` struct
+per direction. Every running window in the module is a ``_running``
+frame, whose docstring also says why none is an unbounded-FOLLOWING
+frame. The latest row per entity — ``pit_snapshot`` and the A19
+dependency lookup ``lookup_upstream`` — is ``_latest``, one
+map-side-combined ``max_by`` aggregation.
 """
 
 from __future__ import annotations
@@ -263,18 +267,43 @@ def pit_snapshot(
     temporal leakage by construction: rows after cutoff never enter
     the plan).
     """
-    vals = [F.col(c) for c in value_cols]
-    pick = F.struct(F.col(ts_col), *vals)
-    return (
-        df.where(F.col(ts_col) <= cutoff)
-        .groupBy(entity_col)
-        .agg(F.max_by(pick, pick).alias("__r"))
-        .select(
-            entity_col,
-            F.col(f"__r.{ts_col}").alias(ts_col),
-            *[F.col(f"__r.{c}").alias(c) for c in value_cols],
-        )
-    )
+    order = (ts_col, *value_cols)
+    rows = df.where(F.col(ts_col) <= cutoff).select(entity_col, *order)
+    return _latest(rows, entity_col, order)
+
+
+def _latest(df: DataFrame, entity_col: str, order: Sequence[str]) -> DataFrame:
+    """The latest row per ``entity_col``: ONE partial+final
+    ``max_by(struct(<non-entity columns>), struct(<order>))``
+    aggregation around a single exchange, map-side combined, so the
+    shuffle carries one candidate row per (partition, entity). Only the
+    ``order`` struct is compared, so the other columns may be of any
+    type; ties on ``order`` pick an unspecified row. Columns keep their
+    input order."""
+    rest = [c for c in df.columns if c != entity_col]
+    pick = F.max_by(F.struct(*rest), F.struct(*order)).alias("__r")
+    out = df.groupBy(entity_col).agg(pick).select(entity_col, "__r.*")
+    return out.select(*df.columns)
+
+
+def lookup_upstream(
+    upstream: DataFrame,
+    entity_col: str = "conv_id",
+    order: list[str] | None = None,
+) -> DataFrame:
+    """A19 dependency lookup: the latest upstream result row per entity.
+
+    The reference fetches its dependency's stored result for the entity
+    it is about to process (io_util.py:288-295 fetch_upstream_result);
+    distributed, that per-entity point lookup becomes a bulk latest-row
+    extraction — ``_latest`` by ``order`` (default ``["ts"]``; a null
+    in an ``order`` column ranks below every value), one
+    map-side-combined ``max_by`` aggregation, then a (broadcastable when
+    small) join into the consuming pipeline. Consumers:
+    ``df.join(lookup_upstream(up), on=entity, how='left')`` with
+    downstream sentinel fill.
+    """
+    return _latest(upstream, entity_col, order or ["ts"])
 
 
 def asof_join_nearest(
@@ -472,44 +501,35 @@ def resample_linear(
     tick — engine-portable, ±1 cent flooring documented).
 
     Plan: identical shape to resample_ffill — bounds agg, narrow
-    ``sequence()`` grid, grid∪events union — plus ONE extra pair of
-    running windows (backward last + forward first, both ignorenulls,
-    over the SAME entity exchange; Catalyst shares the sort).  Two
+    ``sequence()`` grid, grid∪events union — plus ONE running window
+    per direction, each carrying its neighbour's (t, v) as one struct
+    (backward last + forward last over the reverse order, both
+    ignorenulls, over the SAME entity exchange).  Two
     entity exchanges total, zero joins, never a per-tick probe.
     Interior ticks only by construction (first tick ≥ first event,
     last tick ≤ last event), so both neighbors always exist.
     """
     union = _grid_union(df, entity_col, ts_col, value_col, step_seconds)
-    back = _running(("entity",), ("__ts", "__is_grid"))
-    # Forward neighbours: last(ignorenulls) over (ts DESC, is_grid DESC)
-    # rows [start, current] is first(ignorenulls) over (ts ASC, is_grid
-    # ASC) rows [current, end] — the nearest at-or-after non-null,
-    # current row included — in O(n) (see ``_running``).
-    fwd_rev = _running(("entity",), ("__ts", "__is_grid"), descending=True)
-    annotated = (
-        union.withColumn("__pv", F.last("__cents", ignorenulls=True).over(back))
-        .withColumn(
-            "__pt",
-            F.last(
-                F.when(F.col("__cents").isNotNull(), F.col("__ts")),
-                ignorenulls=True,
-            ).over(back),
-        )
-        .withColumn(
-            "__nv", F.last("__cents", ignorenulls=True).over(fwd_rev)
-        )
-        .withColumn(
-            "__nt",
-            F.last(
-                F.when(F.col("__cents").isNotNull(), F.col("__ts")),
-                ignorenulls=True,
-            ).over(fwd_rev),
-        )
+    # each neighbour is one (t, v) struct: the nearest event at or
+    # before the row, and — over the reverse order (see ``_running``) —
+    # the nearest event at or after it
+    event = F.when(
+        F.col("__cents").isNotNull(),
+        F.struct(F.col("__ts").alias("t"), F.col("__cents").alias("v")),
     )
-    interp = F.when(F.col("__nt") == F.col("__pt"), F.col("__pv")).otherwise(
+    order = ("__ts", "__is_grid")
+    annotated = union.withColumn(
+        "__p", F.last(event, ignorenulls=True).over(_running(("entity",), order))
+    ).withColumn(
+        "__n",
+        F.last(event, ignorenulls=True).over(
+            _running(("entity",), order, descending=True)
+        ),
+    )
+    interp = F.when(F.col("__n.t") == F.col("__p.t"), F.col("__p.v")).otherwise(
         F.expr(
-            "CAST(__pv + (__nv - __pv) * (__ts - __pt)"
-            " DIV (__nt - __pt) AS BIGINT)"
+            "CAST(__p.v + (__n.v - __p.v) * (__ts - __p.t)"
+            " DIV (__n.t - __p.t) AS BIGINT)"
         )
     )
     return (

@@ -41,28 +41,6 @@ def _lnm(c: F.Column) -> F.Column:
     return F.floor(F.log(c.cast("double")) * 1e6).cast("bigint")
 
 
-def doc_term_index(
-    docs: DataFrame,
-    tokens_col: F.Column,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Inverted-index postings: ``(doc_id, term, tf, dl)`` from a
-    tokenized corpus — one explode + one map-side-combined count, plus
-    a per-doc length carried through the same aggregation (dl counts
-    ALL tokens, not distinct terms)."""
-    toks = docs.select(
-        F.col(id_col), F.explode(tokens_col).alias("term")
-    )
-    return (
-        toks.groupBy(id_col, "term")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
-        .withColumn(
-            "dl",
-            F.sum("tf").over(Window.partitionBy(id_col)).cast("bigint"),
-        )
-    )
-
-
 def bm25_topk(
     docs: DataFrame,
     tokens_col: F.Column,

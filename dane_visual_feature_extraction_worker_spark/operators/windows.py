@@ -1,4 +1,4 @@
-"""Anchored window features: lag/lead, rolling, backfill, tumbling.
+"""Anchored window features: rolling, backfill, tumbling, prefix.
 
 The reference's own precedent for "feature at anchor t = aggregate over
 a time window anchored at t" is the spectrogram computation — the
@@ -21,26 +21,9 @@ from typing import Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
-from dane_visual_feature_extraction_worker_spark.functions import epoch_seconds
-
 
 def _w(entity: str, order: Sequence[str]):
     return Window.partitionBy(entity).orderBy(*order)
-
-
-def lag_lead(
-    df: DataFrame,
-    entity: str = "conv_id",
-    order: Sequence[str] = ("ts", "turn_idx"),
-    cols: Sequence[str] = ("ts",),
-) -> DataFrame:
-    """Offset features per entity (SURVEY A22 offset form)."""
-    w = _w(entity, order)
-    out = df
-    for c in cols:
-        out = out.withColumn(f"prev_{c}", F.lag(c, 1).over(w))
-        out = out.withColumn(f"next_{c}", F.lead(c, 1).over(w))
-    return out
 
 
 def rolling_agg(
@@ -61,28 +44,6 @@ def rolling_agg(
         .withColumn(f"{prefix}_avg", F.avg(v).over(w))
         .withColumn(f"{prefix}_min", F.min(v).over(w))
         .withColumn(f"{prefix}_max", F.max(v).over(w))
-    )
-
-
-def rolling_agg_time(
-    df: DataFrame,
-    value: Column | str,
-    seconds: float,
-    ts: str = "ts",
-    entity: str = "conv_id",
-    prefix: str = "troll",
-) -> DataFrame:
-    """Trailing time-range aggregates over ``[anchor - seconds, anchor]``
-    (``rangeBetween`` on the epoch-seconds cast)."""
-    v = F.col(value) if isinstance(value, str) else value
-    sec = epoch_seconds(ts)
-    w = (
-        Window.partitionBy(entity)
-        .orderBy(sec)
-        .rangeBetween(-seconds, 0)
-    )
-    return df.withColumn(f"{prefix}_cnt", F.count(v).over(w)).withColumn(
-        f"{prefix}_sum", F.sum(v).over(w)
     )
 
 

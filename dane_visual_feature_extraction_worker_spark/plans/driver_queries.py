@@ -1376,7 +1376,9 @@ def dependency_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     join it into the consuming job (reference io_util.py:288-295
     fetch_upstream_result). Upstream = latest click row per user;
     consumers = purchases; -1 sentinel when no upstream exists."""
-    from dane_visual_feature_extraction_worker_spark.checkpoint import lookup_upstream
+    from dane_visual_feature_extraction_worker_spark.operators.asof import (
+        lookup_upstream,
+    )
 
     e = _events(spark, sf_dir)
     upstream = lookup_upstream(

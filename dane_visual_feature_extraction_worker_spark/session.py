@@ -19,8 +19,6 @@ from pyspark.sql import SparkSession
 
 from dane_visual_feature_extraction_worker_spark.config import EngineConfig
 
-_ACTIVE: dict[str, SparkSession] = {}
-
 
 def sql_conf(cfg: EngineConfig) -> dict[str, str]:
     """The runtime SQL confs ``cfg`` sets: settable on a running

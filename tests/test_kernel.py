@@ -156,8 +156,8 @@ def test_per_turn_text_equality_under_stable_order(transcripts, transcripts_pd):
 
 def _edge_rows(spark, schema):
     """Exotic whitespace, separators that are not whitespace, null
-    text, unknown/null roles, a tie on ts and a session break, as rows
-    of the transcript schema."""
+    text, unknown/null roles, a tie on ts and session breaks at the
+    exact gap threshold, as rows of the transcript schema."""
     t0 = pd.Timestamp("2024-03-01 12:00:00")
     rows = [
         ("edge_a", 0, "user", "nbsp\u00a0separated\u00a0tokens", None, 0),
@@ -171,6 +171,14 @@ def _edge_rows(spark, schema):
         # U+001C..U+001F: str.isspace() is true, Unicode White_Space is not
         ("edge_c", 0, "user", "a\x1cb c", None, 0),
         ("edge_c", 1, "user", "x\x1fy", None, 10),
+        # a gap of exactly SESSION_GAP_S stays in the session; 1 µs more
+        # starts one, whose first ts is shared by the next turn
+        # (f13 = 1, 2; f14 = 0, 0)
+        ("edge_d", 0, "user", "start", None, 0),
+        ("edge_d", 1, "assistant", "same session", None, 1800),
+        ("edge_d", 2, "user", "new session", None, 3600.000001),
+        ("edge_d", 3, "assistant", "tied first ts", None, 3600.000001),
+        ("edge_d", 4, "user", "later", None, 3605),
     ]
     pdf = pd.DataFrame(
         [(c, i, r, x, tl, t0 + pd.Timedelta(seconds=d)) for c, i, r, x, tl, d in rows],
@@ -209,6 +217,10 @@ def test_window_strategy_bit_identical_and_pure_jvm(spark, transcripts):
         for c in got.columns:
             gv, wv = got[c].to_numpy(), want[c].to_numpy()
             assert (gv == wv).all(), f"column {c} differs"
+    d = got[got["conv_id"] == "edge_d"]
+    assert d["session_id"].tolist() == [0, 0, 1, 1, 1]
+    assert d["f13"].tolist()[:4] == [1, 2, 1, 2]
+    assert d["f14"].tolist()[:4] == [0, 1800, 0, 0]
 
     src = t.localCheckpoint(eager=True)
     jplan = pit_features(src)._jdf.queryExecution().executedPlan()

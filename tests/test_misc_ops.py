@@ -147,14 +147,17 @@ def test_user_injected_decoder_flows_through(spark):
 
 
 def test_lookup_upstream_latest_row(spark):
-    """A19 dependency lookup: one latest row per entity by (ts, idx)."""
+    """A19 dependency lookup: one latest row per entity by (ts, idx); a
+    row with a null ts never beats one with a ts."""
     import pyspark.sql.functions as F
 
-    from dane_visual_feature_extraction_worker_spark.checkpoint import lookup_upstream
+    from dane_visual_feature_extraction_worker_spark.operators.asof import (
+        lookup_upstream,
+    )
 
     rows = [
         ("a", 10, 1, 1.0), ("a", 20, 2, 2.0), ("a", 20, 1, 3.0),
-        ("b", 5, 9, 4.0),
+        ("a", None, 99, 5.0), ("b", 5, 9, 4.0),
     ]
     df = spark.createDataFrame(
         rows, "conv_id string, ts long, idx int, v double"

@@ -467,6 +467,23 @@ def test_pit_snapshot_one_exchange_sortagg(spark):
     assert "Window" not in plan, plan
 
 
+def test_dependency_lookup_is_an_aggregate_not_a_window(spark, events_parquet):
+    """dependency_lookup: the latest upstream row per user is the same
+    partial+final struct ``max_by`` aggregation as pit_snapshot — no
+    Window over the upstream history."""
+    import os
+
+    from dane_visual_feature_extraction_worker_spark.plans.driver_queries import (
+        QUERIES,
+    )
+
+    sf_dir = os.path.dirname(events_parquet)
+    plan = _plan(QUERIES["dependency_lookup"](spark, sf_dir))
+    assert "Window" not in plan, plan
+    assert plan.count("SortAggregate") == 2, plan
+    assert "max_by" in plan, plan
+
+
 def test_user_event_profile_two_phase_distinct(spark):
     """user_event_profile: Spark's two-phase exact-distinct plan (two
     exchanges) with collect_set in ObjectHashAggregate — both phases
