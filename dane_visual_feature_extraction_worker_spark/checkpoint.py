@@ -28,6 +28,21 @@ means nothing is done; an entry that is not a readable record, or a
 record written with another ``n_buckets`` or ``entity_col``, raises
 naming the file instead of producing a wrong table.
 
+The source is scanned once per job. The first attempt with pending
+work writes it, bucket-partitioned, to ``{output_dir}/_staged`` and then
+publishes ``_staged/_stage.json`` by the same temp-then-rename: the
+``n_buckets``/``entity_col`` lineage, the staged bucket list and
+``input_files_sha256``, a SHA-256 of the source's sorted input file list
+(``DataFrame.inputFiles``), computed in the JVM. A later attempt reads
+``_staged`` instead of the source when the marker's lineage matches and
+its buckets cover every pending bucket; otherwise it stages again. A
+restart refuses (``ValueError`` naming the file) a marker it cannot
+read, and a source whose input files differ from the staged ones: their
+mix would be two snapshots in one table. A source that lists no files
+(``createDataFrame``, an RDD) cannot be checked and reuses the snapshot
+as it is. A ``__bucket`` source is never staged (see ``run``). A
+successful attempt deletes ``_staged``.
+
 Each attempt names its Spark jobs by their description: the staging
 write runs as ``pit:<attempt>:stage`` and each bucket's write as
 ``pit:<attempt>:<bucket>``, in the Spark UI and its status store. The
@@ -59,6 +74,7 @@ CHECKPOINT_SCHEMA = (
 _FIELDS = [tuple(c.split()) for c in CHECKPOINT_SCHEMA.split(", ")]
 _CAST = {"int": int, "bigint": int, "double": float, "string": str}
 _RECORD_NAME = re.compile(r"bucket=\d+-attempt=\d+\.json")
+_STAGE_MARKER = "_stage.json"
 
 
 def bucket_of(entity_col: str, n_buckets: int) -> F.Column:
@@ -87,6 +103,32 @@ def _write_text(fs, path, text: str) -> None:
         out.write(text.encode())
     finally:
         out.close()
+
+
+def _input_files_sha256(df: DataFrame) -> str | None:
+    """SHA-256 of ``df``'s sorted input file list (as the Java list
+    string ``[a, b, ...]``), or None when it lists no files. The list
+    stays in the JVM: PySpark's ``inputFiles()`` makes one py4j round
+    trip per file, this a fixed number."""
+    jvm = df.sparkSession._jvm
+    found = df._jdf.inputFiles()
+    n = len(found)
+    if n == 0:
+        return None
+    # py4j passes a String[] only to a String[] or Object parameter, so
+    # copy it into an Object[] for Arrays.sort/asList
+    object_class = jvm.java.lang.Class.forName("java.lang.Object")
+    files = jvm.java.lang.reflect.Array.newInstance(object_class, n)
+    jvm.java.lang.System.arraycopy(found, 0, files, 0, n)
+    jvm.java.util.Arrays.sort(files)
+    md = jvm.java.security.MessageDigest.getInstance("SHA-256")
+    sink = jvm.java.security.DigestOutputStream(
+        jvm.java.io.OutputStream.nullOutputStream(), md
+    )
+    out = jvm.java.io.PrintStream(sink, False, "UTF-8")
+    out.print(jvm.java.util.Arrays.asList(files))
+    out.close()
+    return bytes(md.digest()).hex()
 
 
 class CheckpointedRunner:
@@ -124,6 +166,23 @@ class CheckpointedRunner:
             p = jvm.org.apache.hadoop.fs.Path(p, child)
         return p.getFileSystem(self.spark._jsc.hadoopConfiguration()), p
 
+    def _read_json(self, fs, path):
+        """The JSON document in the Hadoop ``path``."""
+        stream = fs.open(path)
+        try:
+            io = self.spark._jvm.org.apache.hadoop.io.IOUtils
+            return json.loads(bytes(io.readFullyToByteArray(stream)))
+        finally:
+            stream.close()
+
+    def _publish(self, parent: str, name: str, text: str) -> None:
+        """Write ``parent/name`` as a ``_`` temp, then rename it into place."""
+        fs, tmp = self._path(parent, "_" + name)
+        _write_text(fs, tmp, text)
+        final = self._path(parent, name)[1]
+        if not fs.rename(tmp, final):
+            raise OSError(f"could not rename {tmp.toString()} to {final.toString()}")
+
     # -- checkpoint records ----------------------------------------------
     def _records(self) -> list[dict]:
         """Every record in ``checkpoint_dir``, typed as CHECKPOINT_SCHEMA.
@@ -134,7 +193,6 @@ class CheckpointedRunner:
         fs, d = self._path(self.checkpoint_dir)
         if not fs.exists(d):
             return []
-        io = self.spark._jvm.org.apache.hadoop.io.IOUtils
         records = []
         for st in fs.listStatus(d):
             name = st.getPath().getName()
@@ -144,11 +202,7 @@ class CheckpointedRunner:
             try:
                 if not (st.isFile() and _RECORD_NAME.fullmatch(name)):
                     raise ValueError("not a checkpoint record")
-                stream = fs.open(st.getPath())
-                try:
-                    raw = json.loads(bytes(io.readFullyToByteArray(stream)))
-                finally:
-                    stream.close()
+                raw = self._read_json(fs, st.getPath())
                 rec = {k: _CAST[t](raw[k]) for k, t in _FIELDS}
                 lineage = json.loads(rec["lineage"])
                 ran_with = (lineage["n_buckets"], lineage["entity_col"])
@@ -174,13 +228,41 @@ class CheckpointedRunner:
         )
 
     def _record(self, row: dict) -> None:
-        """Publish one record: write a ``_`` temp, rename it into place."""
+        """Publish one record."""
         name = f"bucket={row['bucket']}-attempt={row['attempt']}.json"
-        fs, tmp = self._path(self.checkpoint_dir, "_" + name)
-        _write_text(fs, tmp, json.dumps(row) + "\n")
-        final = self._path(self.checkpoint_dir, name)[1]
-        if not fs.rename(tmp, final):
-            raise OSError(f"could not rename {tmp.toString()} to {final.toString()}")
+        self._publish(self.checkpoint_dir, name, json.dumps(row) + "\n")
+
+    # -- the staged snapshot ----------------------------------------------
+    def _staged_covers(
+        self, staged_dir: str, pending: list[int], files: str | None
+    ) -> bool:
+        """Whether ``staged_dir`` already holds every ``pending`` bucket of
+        this job's input, by its ``_stage.json`` marker.
+
+        Raises ``ValueError`` naming the marker when it is unreadable, or
+        when ``files`` (the source's input-file digest) differs from the
+        staged source's: the done buckets came from the staged input."""
+        fs, p = self._path(staged_dir, _STAGE_MARKER)
+        if not fs.exists(p):
+            return False
+        where = p.toString()
+        try:
+            m = self._read_json(fs, p)
+            ran_with = (m["n_buckets"], m["entity_col"])
+            staged = set(m["buckets"])
+            staged_files = m["input_files_sha256"]
+        except (ValueError, KeyError, TypeError, Py4JJavaError) as e:
+            raise ValueError(f"unreadable staging marker {where}: {e!r}") from e
+        if ran_with != (self.n_buckets, self.entity_col):
+            return False
+        if files is not None and files != staged_files:
+            raise ValueError(
+                f"staging marker {where} was written for other input files "
+                f"(sha256 {staged_files}) than this source lists (sha256 "
+                f"{files}); restart over the original input or use new "
+                f"output and checkpoint dirs"
+            )
+        return staged.issuperset(pending)
 
     # -- driver loop (the queue-consumer analogue) ------------------------
     def run(
@@ -190,7 +272,18 @@ class CheckpointedRunner:
         fail_after: int | None = None,
     ) -> dict:
         """Process all pending buckets; returns the attempt summary, which
-        is also written to ``{output_dir}/_provenance_attempt<n>.json``.
+        is also written to ``{output_dir}/_provenance_attempt<n>.json``:
+
+        - ``attempt``: this attempt's number, 1 + the highest recorded;
+        - ``skipped``: buckets already done before this attempt;
+        - ``computed``: buckets this attempt wrote and recorded;
+        - ``n_buckets``: the runner's bucket count;
+        - ``source_scans``: full scans of ``source`` this attempt made: 1
+          when it staged, 0 when it reused the staged snapshot, found the
+          source pre-bucketed or had nothing pending;
+        - ``staged_writes``: writes of ``_staged`` (0 or 1);
+        - ``output_rows``: rows over every done bucket, from the records;
+        - ``ms``: the attempt's wall time.
 
         ``fail_after``: crash injection for resume tests — raises after
         N buckets complete (simulates a killed job).
@@ -200,13 +293,16 @@ class CheckpointedRunner:
         done_rows = {r["bucket"]: r["rows"] for r in records if r["status"] == "done"}
         pending = [b for b in range(self.n_buckets) if b not in done_rows]
         attempt = 1 + max((r["attempt"] for r in records), default=0)
-        # Stage the pending input ONCE, hive-partitioned by bucket: one
-        # scan + one write of the source per attempt, then every
+        # Stage the pending input ONCE PER JOB, hive-partitioned by
+        # bucket: one scan + one write of the source, then every
         # per-bucket read prunes on the partition column (PartitionFilters
         # in the scan — no recompute of the bucket hash, no re-scan).
         # Without this, filtering a *computed* column per bucket costs
         # n_buckets full scans of the source — fatal at 100 TB (VERDICT
-        # r1). `_staged` starts with '_' so result() readers ignore it.
+        # r1). A restart whose ``_stage.json`` marker covers its pending
+        # buckets reads the crashed attempt's `_staged` and does not scan
+        # the source at all. `_staged` starts with '_' so result() readers
+        # ignore it.
         #
         # PRE-BUCKETED sources skip staging entirely (VERDICT r2: even
         # one extra full write per attempt is heavy at 100 TB): when the
@@ -251,13 +347,25 @@ class CheckpointedRunner:
                 src = source.withColumn(
                     "__bucket", bucket_of(self.entity_col, self.n_buckets)
                 )
-                if len(pending) < self.n_buckets:
-                    src = src.where(F.col("__bucket").isin(pending))
-                with _job_description(self.spark, f"pit:{attempt}:stage"):
-                    src.write.mode("overwrite").partitionBy("__bucket").parquet(
-                        staged_dir
-                    )
-                staged_writes = 1
+                files = _input_files_sha256(source)
+                if not self._staged_covers(staged_dir, pending, files):
+                    # no marker may outlive the snapshot it describes
+                    fs, p = self._path(staged_dir, _STAGE_MARKER)
+                    fs.delete(p, False)
+                    if len(pending) < self.n_buckets:
+                        src = src.where(F.col("__bucket").isin(pending))
+                    with _job_description(self.spark, f"pit:{attempt}:stage"):
+                        src.write.mode("overwrite").partitionBy("__bucket").parquet(
+                            staged_dir
+                        )
+                    marker = {
+                        "n_buckets": self.n_buckets,
+                        "entity_col": self.entity_col,
+                        "buckets": pending,
+                        "input_files_sha256": files,
+                    }
+                    self._publish(staged_dir, _STAGE_MARKER, json.dumps(marker))
+                    staged_writes = 1
                 # schema-providing read: a zero-row staged dir (empty
                 # source / empty pending buckets) has no part files to
                 # infer from and would raise (ADVICE r2)
@@ -300,8 +408,8 @@ class CheckpointedRunner:
             completed += 1
             if fail_after is not None and completed >= fail_after:
                 raise RuntimeError(f"injected failure after {completed} buckets")
-        # success: staging no longer needed (a crashed attempt leaves it;
-        # the next attempt re-stages only its own pending buckets)
+        # success: staging no longer needed (a crashed attempt leaves it
+        # and its marker for the next attempt to read)
         fs, p = self._path(staged_dir)
         fs.delete(p, True)
         summary = {
@@ -309,7 +417,7 @@ class CheckpointedRunner:
             "skipped": self.n_buckets - len(pending),
             "computed": completed,
             "n_buckets": self.n_buckets,
-            "source_scans": 1,
+            "source_scans": staged_writes,
             "staged_writes": staged_writes,
             "output_rows": sum(done_rows.values()),
             "ms": (time.monotonic() - t_run) * 1000.0,

@@ -87,6 +87,103 @@ def test_source_scanned_once_per_attempt(spark, transcripts, tmp_path):
     assert r.result().count() == n_rows
 
 
+def test_source_scanned_once_per_job(spark, transcripts, tmp_path):
+    """A restart reads the ``_staged`` snapshot its crashed first attempt
+    wrote instead of the source: over a crash and a restart the source
+    tick-UDF counts every row exactly once, and the restart stages
+    nothing. It used to re-scan and re-stage every pending row."""
+    import pyspark.sql.functions as F
+    from pyspark.sql.types import LongType
+
+    acc = spark.sparkContext.accumulator(0)
+
+    def tick(x):
+        acc.add(1)
+        return x
+
+    tick_udf = F.udf(tick, LongType())
+    n_rows = transcripts.count()
+    src = transcripts.withColumn("turn_idx", tick_udf(F.col("turn_idx").cast("long")))
+
+    r = _runner(spark, str(tmp_path), "scanjob", n_buckets=5)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        r.run(src, pit_features, fail_after=2)
+    s = r.run(src, pit_features)
+    assert s["skipped"] == 2 and s["computed"] == 3
+    assert s["staged_writes"] == 0 and s["source_scans"] == 0
+    assert acc.value == n_rows, (
+        f"source scanned {acc.value / n_rows:.2f}x over the job, expected once"
+    )
+    assert r.result().count() == n_rows
+
+
+def _sorted_features(runner):
+    key = ["conv_id", "ts", "turn_idx"]
+    pdf = runner.result().toPandas().sort_values(key).reset_index(drop=True)
+    return pdf[key], np.stack(pdf["features"].to_numpy())
+
+
+def test_restart_without_stage_marker_restages(spark, transcripts, tmp_path):
+    """``_staged`` is reused only under its ``_stage.json`` marker: with
+    the marker gone the restart stages its pending buckets again and the
+    table still equals a one-shot run."""
+    import os
+
+    tmp = str(tmp_path)
+    r = _runner(spark, tmp, "nomarker", n_buckets=4)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        r.run(transcripts, pit_features, fail_after=2)
+    os.remove(f"{tmp}/out_nomarker/_staged/_stage.json")
+    s = r.run(transcripts, pit_features)
+    assert s["computed"] == 2 and s["staged_writes"] == 1 and s["source_scans"] == 1
+    assert not os.path.exists(f"{tmp}/out_nomarker/_staged")
+
+    ref = _runner(spark, tmp, "nomarker_ref", n_buckets=4)
+    ref.run(transcripts, pit_features)
+    (ka, fa), (kb, fb) = _sorted_features(ref), _sorted_features(r)
+    assert ka.equals(kb) and (fa == fb).all()
+
+
+def test_restart_over_other_input_files_is_refused(spark, transcripts, tmp_path):
+    """A job killed over one parquet dir and restarted over a copy of it
+    at another path used to report success over a table mixing two
+    snapshots. The restart now raises naming the staging marker."""
+    import re
+    import shutil
+
+    tmp = str(tmp_path)
+    transcripts.write.parquet(f"{tmp}/in")
+    shutil.copytree(f"{tmp}/in", f"{tmp}/in_copy")
+    r = _runner(spark, tmp, "moved", n_buckets=4)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        r.run(spark.read.parquet(f"{tmp}/in"), pit_features, fail_after=2)
+    marker = f"{tmp}/out_moved/_staged/_stage.json"
+    with pytest.raises(
+        ValueError, match=f"{re.escape(marker)}.*new output and checkpoint dirs"
+    ):
+        r.run(spark.read.parquet(f"{tmp}/in_copy"), pit_features)
+    # the original input still resumes from its snapshot
+    s = r.run(spark.read.parquet(f"{tmp}/in"), pit_features)
+    assert s["computed"] == 2 and s["staged_writes"] == 0
+
+
+def test_unreadable_stage_marker_raises_naming_it(spark, transcripts, tmp_path):
+    """A garbled ``_stage.json`` must not read as "no snapshot" or as a
+    reusable one."""
+    import re
+
+    tmp = str(tmp_path)
+    r = _runner(spark, tmp, "badmarker", n_buckets=3)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        r.run(transcripts, lambda df: df, fail_after=1)
+    marker = f"{tmp}/out_badmarker/_staged/_stage.json"
+    with open(marker, "w") as f:
+        f.write("{not json")
+    match = f"unreadable staging marker {re.escape(marker)}"
+    with pytest.raises(ValueError, match=match):
+        r.run(transcripts, lambda df: df)
+
+
 def test_runner_counts_rows_in_the_write_pass(spark, transcripts, tmp_path):
     """``output_rows`` comes from an ``Observation`` on each bucket's
     write: a tick-UDF accumulator in the pipeline proves every bucket's
@@ -335,7 +432,9 @@ def _in_job_group(sc, group: str, fn):
 def test_runner_names_its_spark_jobs(spark, transcripts, tmp_path):
     """Every Spark job of an attempt carries ``pit:<attempt>:stage`` or
     ``pit:<attempt>:<bucket>`` as its description in the status store,
-    and the caller's own description is back in place afterwards."""
+    and the caller's own description is back in place afterwards. The
+    restart reads the first attempt's staged snapshot, so it runs no
+    ``pit:2:stage`` job."""
     sc = spark.sparkContext
     store = sc._jsc.sc().statusStore()
 
@@ -360,7 +459,7 @@ def test_runner_names_its_spark_jobs(spark, transcripts, tmp_path):
     r.run(transcripts, pit_features)
     assert sc.getLocalProperty("spark.job.description") is None
     named = {d for i, d in jobs().items() if i not in before}
-    assert named == {"pit:1:stage", "pit:1:0", "pit:1:1", "pit:2:stage", "pit:2:2"}
+    assert named == {"pit:1:stage", "pit:1:0", "pit:1:1", "pit:2:2"}
 
 
 def test_control_plane_launches_no_spark_job(spark, transcripts, tmp_path):
