@@ -24,9 +24,12 @@ can reach) to a ``_``-prefixed temp name, then renamed to
 leaves no half record. The directory reads as a JSON-lines table
 (``spark.read.json(checkpoint_dir)``) and holds one record per bucket
 and attempt, so it needs no compaction. A missing ``checkpoint_dir``
-means nothing is done; an entry that is not a readable record, or a
-record written with another ``n_buckets`` or ``entity_col``, raises
-naming the file instead of producing a wrong table.
+means nothing is done; an entry that is not a readable record, a
+record written with another ``n_buckets`` or ``entity_col``, or a done
+record written by a pipeline with another output schema, raises naming
+the file instead of producing a wrong table. Each record's lineage holds
+``output_schema_sha256``, a SHA-256 of the pipeline output's
+``schema.simpleString()``; ``run`` checks it before any write.
 
 The source is scanned once per job. The first attempt with pending
 work writes it, bucket-partitioned, to ``{output_dir}/_staged`` and then
@@ -57,6 +60,7 @@ published, whatever the output's table format (SURVEY.md §7c).
 from __future__ import annotations
 
 import contextlib
+import hashlib
 import json
 import os
 import re
@@ -184,12 +188,14 @@ class CheckpointedRunner:
             raise OSError(f"could not rename {tmp.toString()} to {final.toString()}")
 
     # -- checkpoint records ----------------------------------------------
-    def _records(self) -> list[dict]:
+    def _records(self, output_schema: str | None = None) -> list[dict]:
         """Every record in ``checkpoint_dir``, typed as CHECKPOINT_SCHEMA.
 
         Raises ``ValueError`` naming the file for an entry that is not a
-        readable record, or for a record this runner's ``n_buckets`` /
-        ``entity_col`` would not have written."""
+        readable record, for a record this runner's ``n_buckets`` /
+        ``entity_col`` would not have written, and, given the
+        ``output_schema`` fingerprint of this run's pipeline, for a done
+        record whose lineage holds another fingerprint or none."""
         fs, d = self._path(self.checkpoint_dir)
         if not fs.exists(d):
             return []
@@ -206,6 +212,7 @@ class CheckpointedRunner:
                 rec = {k: _CAST[t](raw[k]) for k, t in _FIELDS}
                 lineage = json.loads(rec["lineage"])
                 ran_with = (lineage["n_buckets"], lineage["entity_col"])
+                schema_was = lineage.get("output_schema_sha256")
             except (ValueError, KeyError, TypeError, Py4JJavaError) as e:
                 raise ValueError(
                     f"unreadable checkpoint record {where}: {e!r}"
@@ -217,6 +224,14 @@ class CheckpointedRunner:
                     f"this runner has n_buckets={self.n_buckets}, "
                     f"entity_col={self.entity_col!r}. Resume with the "
                     f"original settings or use a new checkpoint_dir"
+                )
+            done = rec["status"] == "done"
+            if output_schema and done and schema_was != output_schema:
+                raise ValueError(
+                    f"checkpoint record {where} was written by a pipeline with "
+                    f"output schema sha256 {schema_was}; this pipeline's is "
+                    f"{output_schema}. A resume would mix two schemas in one "
+                    f"table: use new output and checkpoint dirs"
                 )
             records.append(rec)
         return sorted(records, key=lambda r: (r["attempt"], r["bucket"]))
@@ -289,7 +304,12 @@ class CheckpointedRunner:
         N buckets complete (simulates a killed job).
         """
         t_run = time.monotonic()
-        records = self._records()
+        # the pipeline's output schema over this input, as it will be
+        # over each bucket (planned only, no Spark job)
+        output_schema = hashlib.sha256(
+            pipeline(source.drop("__bucket")).schema.simpleString().encode()
+        ).hexdigest()
+        records = self._records(output_schema)
         done_rows = {r["bucket"]: r["rows"] for r in records if r["status"] == "done"}
         pending = [b for b in range(self.n_buckets) if b not in done_rows]
         attempt = 1 + max((r["attempt"] for r in records), default=0)
@@ -400,6 +420,7 @@ class CheckpointedRunner:
                             "n_buckets": self.n_buckets,
                             "entity_col": self.entity_col,
                             "attempt": attempt,
+                            "output_schema_sha256": output_schema,
                         }
                     ),
                 }

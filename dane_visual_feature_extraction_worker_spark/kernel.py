@@ -14,25 +14,28 @@ machine. There is one engine implementation and one oracle:
 - ``feature_vectors_windows``: the engine. A pure-Catalyst plan —
   text features computed map-side (``_text_features``: plain columns
   and an ``array<float>`` bag, from one interpreted pass over each
-  turn's tokens), ONE hash exchange on the entity key, running-window
-  prefix aggregates over (conv_id ORDER BY ts, turn_idx), one session
-  window over (conv_id, session_id) that gives the session bounds, f13
-  and f14, no Python stage, every other Project in whole-stage
-  codegen. Its Columns do not depend on the input, so they are built
-  once per process (``_text_columns``, ``_window_columns``) and a
-  call only replays the plan's ~11 DataFrame calls;
+  turn's tokens), ONE hash exchange on the entity key, one sort,
+  every output column a running-window prefix aggregate over (conv_id
+  ORDER BY ts, turn_idx), no Python stage, every other Project in
+  whole-stage codegen. Its Columns do not depend on the input, so
+  they are built once per process (``_text_columns``,
+  ``_window_columns``) and a call only replays the plan's ~11
+  DataFrame calls;
 - ``compute_features_numeric``: the numpy oracle over
   ``with_text_features`` rows. It runs the same sequential double
   arithmetic, so the engine must match it bit for bit
   (tests/test_kernel.py, pitbench's ``pandas_twin`` gate).
 
-Both read only rows [0..i] for the features of row i — prefix sums and
-running stats — which is the zero-temporal-leakage contract. Both
+Both read only rows [0..i] for every output column of row i — prefix
+sums and running stats — which is the zero-temporal-leakage contract:
+cutting a conversation after row i leaves rows [0..i] unchanged. Both
 refuse a null ``conv_id``: the engine with a Spark runtime error from
 its map-side projection, the oracle with ``ValueError``.
 
-Feature vector (D = 32 float32), per (conv_id, ts) anchor, from history
-rows with ts <= anchor:
+Output: 37 columns per (conv_id, ts) anchor, ``conv_id, turn_idx, ts,
+session_id, session_start`` (the first ts of the row's session so far)
+and the feature vector (D = 32 float32) from history rows with
+ts <= anchor:
   f0  n_turns_so_far            f1  cum_text_chars
   f2  mean_text_chars           f3  text_chars_this_turn
   f4  gap_seconds_from_prev     f5  mean_gap_seconds (exact: the
@@ -85,8 +88,8 @@ def with_text_features(transcripts: DataFrame) -> DataFrame:
 
 
 def compute_features_numeric(pdf: pd.DataFrame) -> pd.DataFrame:
-    """The numpy oracle: the 32 features plus per-session bounds from
-    ``with_text_features`` rows, as prefix ops over each conversation's
+    """The numpy oracle: the 32 features plus the session id and start
+    from ``with_text_features`` rows, as prefix ops over each conversation's
     slice of one (conv_id, ts, turn_idx) sort. Same output columns as
     ``feature_vectors_windows``, and the same refusal of a null
     ``conv_id``."""
@@ -103,7 +106,6 @@ def compute_features_numeric(pdf: pd.DataFrame) -> pd.DataFrame:
             "ts": pd.Series(dtype="datetime64[us]"),
             "session_id": pd.Series(dtype="int64"),
             "session_start": pd.Series(dtype="datetime64[us]"),
-            "session_end": pd.Series(dtype="datetime64[us]"),
         }
         for i in range(FEATURE_DIM):
             empty[f"f{i}"] = pd.Series(dtype="float32")
@@ -123,7 +125,6 @@ def compute_features_numeric(pdf: pd.DataFrame) -> pd.DataFrame:
     feats = np.empty((n, FEATURE_DIM), dtype=np.float64)
     sess_all = np.empty(n, dtype=np.int64)
     sess_start_us = np.empty(n, dtype=np.int64)
-    sess_end_us = np.empty(n, dtype=np.int64)
     role_eq = {r: (role_code == j).astype(np.float64) for r, j in _ROLE_IDX.items()}
     for a, b in zip(starts, ends):
         m = b - a
@@ -157,11 +158,8 @@ def compute_features_numeric(pdf: pd.DataFrame) -> pd.DataFrame:
         out[:, 15] = words[a:b]
         out[:, 16:] = bag[a:b]
         sess_all[a:b] = sess_id
-        # per-session bounds (exact int64 µs, no float roundtrip)
-        s_idx = np.flatnonzero(new_sess)
-        s_end = np.r_[s_idx[1:] - 1, m - 1]
-        sess_start_us[a:b] = ts_us[a:b][s_idx[sess_id]]
-        sess_end_us[a:b] = ts_us[a:b][s_end[sess_id]]
+        # exact int64 µs, no float roundtrip
+        sess_start_us[a:b] = ts_us[a:b][sess_start]
 
     f32 = feats.astype(np.float32)
     cols = {
@@ -170,7 +168,6 @@ def compute_features_numeric(pdf: pd.DataFrame) -> pd.DataFrame:
         "ts": pdf["ts"],
         "session_id": sess_all,
         "session_start": pd.Series(sess_start_us).astype("datetime64[us]"),
-        "session_end": pd.Series(sess_end_us).astype("datetime64[us]"),
     }
     for i in range(FEATURE_DIM):
         cols[f"f{i}"] = f32[:, i]
@@ -291,24 +288,23 @@ def feature_vectors_windows(transcripts: DataFrame) -> DataFrame:
     """The engine kernel: the 32 features as window expressions — NO
     Python stage at all.
 
-    f0..f12 and f15 are per-conversation prefix ops (cumsum / running
-    max / first) over rows sorted by (ts, turn_idx); the bag columns
-    f16..f31 are read straight from ``__bag[b]``. The session window
-    (conv_id, session_id) gives the session bounds, f13 = ``__rn`` −
-    its min + 1 and f14 = ``__ts_s`` − its min: the session's first
-    row is its least row number and, rows being sorted by ts, its
-    least timestamp. ``lag`` runs once, in ``__gap``, which also
-    flags a session start (first row, or gap > SESSION_GAP_S) inside
-    the one running sum that numbers sessions. A running-frame
-    window aggregate accumulates rows one at a time in sort order — the SAME
-    sequential double arithmetic as the numpy kernel's cumsum — so the
-    float32 outputs are bit-identical to ``compute_features_numeric``
-    (asserted in tests/test_kernel.py).
+    Every output column is a per-conversation prefix op (cumsum /
+    running max / first) over rows sorted by (ts, turn_idx), so a row
+    never reads a later one; the bag columns f16..f31 are read straight
+    from ``__bag[b]``. ``lag`` runs once, in ``__gap``, which also
+    flags a session start (first row, or gap > SESSION_GAP_S). Over the
+    same running window, the sum of that flag numbers sessions and its
+    running ``max(when(flag, ...))`` gives the current session's first
+    row number ``__s_rn`` and first ts ``session_start``: f13 =
+    ``__rn`` − ``__s_rn`` + 1 and f14 = ``__ts_s`` − its epoch
+    seconds. A running-frame window aggregate accumulates rows one at
+    a time in sort order — the SAME sequential double arithmetic as the
+    numpy kernel's cumsum — so the float32 outputs are bit-identical to
+    ``compute_features_numeric`` (asserted in tests/test_kernel.py).
 
-    Plan: ONE shuffle (hash on conv_id) + one sort for the main window;
-    the session window partitions on (conv_id, session_id),
-    which hash(conv_id) already clusters, so Catalyst adds only a
-    partition-local re-sort, no second exchange. Removing the Arrow
+    Plan: ONE shuffle (hash on conv_id), one sort and two Window
+    nodes — ``lag``/``row_number``, then the running aggregates — on
+    the same (conv_id ORDER BY ts, turn_idx) spec. Removing the Arrow
     transfer + Python workers is what lifts multi-core scaling
     efficiency (BENCH/BASELINE.md): whole-stage codegen end to end.
 
@@ -342,7 +338,7 @@ def feature_vectors_windows(transcripts: DataFrame) -> DataFrame:
 
 @functools.cache
 def _window_columns() -> tuple[tuple[Column | str, ...], ...]:
-    """The Columns of ``feature_vectors_windows``' three window selects,
+    """The Columns of ``feature_vectors_windows``' three selects,
     built once per process like ``_text_columns``."""
     from pyspark.sql import Window
 
@@ -379,6 +375,9 @@ def _window_columns() -> tuple[tuple[Column | str, ...], ...]:
         (F.sum(new_session.cast("int")).over(wrun) - 1)
         .cast("bigint")
         .alias("session_id"),
+        # the current session's first row: the last flagged one so far
+        F.max(F.when(new_session, F.col("__rn"))).over(wrun).alias("__s_rn"),
+        F.max(F.when(new_session, F.col("ts"))).over(wrun).alias("session_start"),
         F.sum("chars").over(wrun).alias("__cum_chars"),
         # f5 numerator: exact telescoping gap sum in integer micros
         F.first("__ts_us").over(wrun).alias("__ts0_us"),
@@ -389,9 +388,6 @@ def _window_columns() -> tuple[tuple[Column | str, ...], ...]:
         ],
         F.sum(F.col("has_tool").cast("double")).over(wrun).alias("__cum_tool"),
     ]
-    ws = Window.partitionBy("__ck", "conv_id", "session_id").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
     ff = F.col  # shorthand
     feats = [
         ff("__rn").cast("float").alias("f0"),
@@ -408,8 +404,8 @@ def _window_columns() -> tuple[tuple[Column | str, ...], ...]:
         ff("session_id").cast("float").alias("f7"),
         *[ff(f"__r{j}").cast("float").alias(f"f{8 + j}") for j in range(4)],
         ff("__cum_tool").cast("float").alias("f12"),
-        (ff("__rn") - F.min("__rn").over(ws) + 1).cast("float").alias("f13"),
-        (ff("__ts_s") - F.min("__ts_s").over(ws)).cast("float").alias("f14"),
+        (ff("__rn") - ff("__s_rn") + 1).cast("float").alias("f13"),
+        (ff("__ts_s") - epoch_seconds("session_start")).cast("float").alias("f14"),
         ff("words").cast("float").alias("f15"),
         *[ff("__bag")[b].alias(f"f{16 + b}") for b in range(_HASH_BUCKETS)],
     ]
@@ -418,8 +414,7 @@ def _window_columns() -> tuple[tuple[Column | str, ...], ...]:
         F.col("turn_idx").cast("int").alias("turn_idx"),
         "ts",
         "session_id",
-        F.min("ts").over(ws).alias("session_start"),
-        F.max("ts").over(ws).alias("session_end"),
+        "session_start",
         *feats,
     ]
     return tuple(map(tuple, (s1, s2, out)))

@@ -2887,7 +2887,9 @@ def pit_features_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     role, text, tool, ts) and run through the real
     ``kernel.feature_vectors_windows`` — the exact pure-Catalyst plan
     entry()/bench exercise. Gated columns: ALL 32 features + session
-    bounds (r5 closed the last two r4 exclusions: f5 now averages the
+    bounds; the kernel is causal and gives only ``session_start``, so
+    this query takes ``session_end`` as max(ts) over each session of
+    the kernel's output (r5 closed the last two r4 exclusions: f5 now averages the
     telescoping gap sum in exact integer microseconds, and the f16-31
     bag hash is crc32 mod 16 — both computable bit-identically by the
     JVM, numpy and DuckDB). The oracle tokenizes with an explicit
@@ -2923,12 +2925,13 @@ def pit_features_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     # float32 can't hold value*1e6 past ~16 — a float32 column would
     # corrupt its own values inside the harness (debugged r4: 1353.7114
     # → 1353.7115 through the float32 round-trip)
+    ws = Window.partitionBy("conv_id", "session_id")
     return feature_vectors_windows(tr).select(
         "conv_id",
         "turn_idx",
         "session_id",
         "session_start",
-        "session_end",
+        F.max("ts").over(ws).alias("session_end"),
         *[F.col(c).cast("double").alias(c) for c in keep],
     )
 

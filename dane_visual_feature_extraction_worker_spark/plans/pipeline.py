@@ -4,16 +4,19 @@ The end-to-end job the north rule names: for every (conv_id, ts) anchor,
 an as-of matched state + a D=32 feature vector computed from history
 only, sessionized, with the positional output layout mirroring the
 reference's ``[timestamp, shot_start, shot_end, features...]`` matrix
-(feature_extraction.py:26-31): here
-``(conv_id, turn_idx, ts, session_id, session_start, session_end,
-features)``.
+(feature_extraction.py:26-31): here the 37 columns
+``(conv_id, turn_idx, ts, session_id, session_start, f0..f31)``, or
+``features`` in place of f0..f31 in array form. There is no
+``shot_end`` twin: the reference read it from a boundary table known
+in advance, while a live session's end is not known at ``ts``, and
+every column here reads only rows at or before its own.
 
 One physical plan: read → text features computed map-side → ONE
-entity-key shuffle → window prefix aggregates over (conv_id ORDER BY
-ts, turn_idx) → sink. No Python stage: whole-stage codegen end to end,
-so throughput scales with cores (BENCH/BASELINE.md). Its output is
-bit-identical to the numpy oracle ``kernel.compute_features_numeric``
-(tests/test_kernel.py).
+entity-key shuffle → one sort → prefix aggregates in two Window nodes
+over (conv_id ORDER BY ts, turn_idx) → sink. No Python stage:
+whole-stage codegen end to end, so throughput scales with cores
+(BENCH/BASELINE.md). Its output is bit-identical to the numpy oracle
+``kernel.compute_features_numeric`` (tests/test_kernel.py).
 """
 
 from __future__ import annotations
@@ -27,7 +30,8 @@ from dane_visual_feature_extraction_worker_spark.kernel import (
 
 
 def pit_features(transcripts: DataFrame) -> DataFrame:
-    """Features + per-session bounds for every (conv_id, ts) anchor."""
+    """Features, session id and session start for every (conv_id, ts)
+    anchor."""
     return feature_vectors_windows(transcripts)
 
 

@@ -262,13 +262,16 @@ def test_asof_over_unmaterialized_kernel_plans_fast_and_matches_two_jobs(
     once spent 8-10 s in the optimizer's constraint propagation; it now
     optimizes in well under a second. The 3 s bound sits far from both
     sides of that gap. The fused output equals the two-job path
-    (features → parquet → as-of)."""
+    (features → parquet → as-of). The fused plan sorts twice (the
+    kernel, the as-of) and has 3 Window nodes (2 kernel, 1 as-of): no
+    column the as-of reads needs a window of its own."""
     import time
 
     from dane_visual_feature_extraction_worker_spark.kernel import FEATURE_DIM
     from dane_visual_feature_extraction_worker_spark.plans.pipeline import (
         pit_features,
     )
+    from tests.test_kernel import _plan_nodes
 
     tmp = str(tmp_path)
     gen_transcripts(spark, n_convs=50, seed=1).write.parquet(f"{tmp}/t")
@@ -283,6 +286,9 @@ def test_asof_over_unmaterialized_kernel_plans_fast_and_matches_two_jobs(
     t0 = time.perf_counter()
     fused._jdf.queryExecution().optimizedPlan()
     assert time.perf_counter() - t0 < 3.0
+    jplan = fused._jdf.queryExecution().executedPlan()
+    names = [node.nodeName() for node, _ in _plan_nodes(jplan)]
+    assert (names.count("Sort"), names.count("Window")) == (2, 3), names
 
     pit_features(t).write.parquet(f"{tmp}/f")
     two_job = asof_join_union(

@@ -57,10 +57,9 @@ def _assert_hand_computed(out: pd.DataFrame) -> None:
     # hashed bag is l2-normalized when text nonempty
     assert abs(np.linalg.norm(f[0, 16:]) - 1.0) < 1e-6
     assert np.linalg.norm(f[1, 16:]) == 0.0
-    # session bounds: [00:00:00, 00:00:10] then the lone 01:00:00 turn
-    t0, t1, t2 = _tiny_conv()["ts"]
+    # session starts: 00:00:00 twice, then the lone 01:00:00 turn
+    t0, _, t2 = _tiny_conv()["ts"]
     assert list(out["session_start"]) == [t0, t0, t2]
-    assert list(out["session_end"]) == [t1, t1, t2]
 
 
 def test_kernel_hand_computed(spark):
@@ -87,20 +86,17 @@ def test_kernel_distributed_matches_reference(transcripts, transcripts_pd):
     rf = ref[FCOLS].to_numpy()
     assert gf.shape == rf.shape == (len(ref), FEATURE_DIM)
     assert np.allclose(gf, rf, rtol=1e-6, atol=1e-6)
-    # kernel-computed session bounds == groupby min/max of ts
-    bounds = (
-        got.groupby(["conv_id", "session_id"])
-        .agg(lo=("ts", "min"), hi=("ts", "max"))
-        .reset_index()
-    )
-    g1 = got.merge(bounds, on=["conv_id", "session_id"])
-    assert (g1["session_start"] == g1["lo"]).all()
-    assert (g1["session_end"] == g1["hi"]).all()
+    # kernel-computed session start == groupby min of ts
+    lo = got.groupby(["conv_id", "session_id"])["ts"].transform("min")
+    assert (got["session_start"] == lo).all()
 
 
 def test_zero_temporal_leakage(spark, transcripts, transcripts_pd):
     """Perturb/remove everything after an anchor: features at and before
-    the anchor must be bit-identical (north rule)."""
+    the anchor must be bit-identical (north rule). And prefix
+    invariance on every output column: the kernel over each
+    conversation cut after one of its turns equals the kernel over the
+    whole input restricted to the cut."""
     t = sort_transcripts(transcripts_pd)
     conv = t["conv_id"].iloc[0]
     g = t[t["conv_id"] == conv]
@@ -138,6 +134,39 @@ def test_zero_temporal_leakage(spark, transcripts, transcripts_pd):
         .reset_index(drop=True)
     )
     assert (base[FCOLS].to_numpy() == mut[FCOLS].to_numpy()).all()
+
+    # cut conversation c after its row pmod(xxhash64(c), n_c) + 1 in
+    # (ts, turn_idx) order
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("conv_id")
+    cuts = (
+        transcripts.select(
+            "conv_id",
+            F.col("ts").alias("__cut"),
+            F.row_number().over(w.orderBy("ts", "turn_idx")).alias("__rn"),
+            (F.pmod(F.xxhash64("conv_id"), F.count("*").over(w)) + 1).alias("__k"),
+        )
+        .where(F.col("__rn") == F.col("__k"))
+        .select("conv_id", "__cut")
+    )
+
+    def cut(df):
+        return (
+            df.join(cuts, "conv_id")
+            .where(F.col("ts") <= F.col("__cut"))
+            .drop("__cut")
+        )
+
+    keys = ["conv_id", "ts", "turn_idx"]
+    got, want = (
+        df.toPandas().sort_values(keys, kind="mergesort").reset_index(drop=True)
+        for df in (pit_features(cut(transcripts)), cut(pit_features(transcripts)))
+    )
+    assert 0 < len(got) < transcripts.count()
+    assert list(got.columns) == list(want.columns)
+    for c in got.columns:
+        assert (got[c].to_numpy() == want[c].to_numpy()).all(), f"column {c} differs"
 
 
 def test_per_turn_text_equality_under_stable_order(transcripts, transcripts_pd):
@@ -194,7 +223,8 @@ def test_window_strategy_bit_identical_and_pure_jvm(spark, transcripts):
     ``compute_features_numeric`` BIT-FOR-BIT on every output column
     (same sequential double arithmetic in the same order), both over
     the JVM text features and over the Python text step of
-    ``features_ref``, with zero Python stages and one exchange."""
+    ``features_ref``, with zero Python stages, one exchange, one sort
+    and two Window nodes."""
     import re
 
     from dane_visual_feature_extraction_worker_spark.kernel import (
@@ -227,6 +257,10 @@ def test_window_strategy_bit_identical_and_pure_jvm(spark, transcripts):
     plan = jplan.toString()
     assert not re.search(r"Pandas|Python", plan)
     assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1
+    # every column reads the one running window: one sort, and the
+    # lag/row_number Window under the running-aggregate Window
+    names = [node.nodeName() for node, _ in _plan_nodes(jplan)]
+    assert (names.count("Sort"), names.count("Window")) == (1, 2), names
     # the text features are computed before the exchange: no raw
     # text/role/tool string crosses it
     shipped = set(re.findall(r"(\w+)#\d+", _exchange_output(jplan)))

@@ -315,6 +315,31 @@ def test_restart_with_other_bucket_count_is_refused(spark, transcripts, tmp_path
         wrong_key.run(transcripts, pit_features)
 
 
+def test_restart_with_other_output_schema_is_refused(spark, transcripts, tmp_path):
+    """A job killed under one pipeline and restarted under another used
+    to report success over a table holding two schemas. The restart now
+    raises naming a done record, before it writes anything."""
+    import os
+
+    from dane_visual_feature_extraction_worker_spark.plans.pipeline import (
+        pit_features as pit_features_flat,
+    )
+
+    tmp = str(tmp_path)
+    r = _runner(spark, tmp, "reshape", n_buckets=3)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        r.run(transcripts, pit_features, fail_after=1)
+    before = sorted(os.listdir(f"{tmp}/out_reshape"))
+    with pytest.raises(
+        ValueError,
+        match=r"cp_reshape/bucket=\d+-attempt=1\.json.*new output and checkpoint dirs",
+    ):
+        r.run(transcripts, pit_features_flat)
+    assert sorted(os.listdir(f"{tmp}/out_reshape")) == before
+    # the original pipeline still resumes
+    assert r.run(transcripts, pit_features)["computed"] == 2
+
+
 def test_prebucketed_source_rejects_null_buckets(spark, transcripts, tmp_path):
     """A hive ``__bucket=`` source with null-bucket rows used to report
     success without them: min/max skip nulls and ``__bucket == b``
