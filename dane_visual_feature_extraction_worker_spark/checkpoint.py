@@ -31,19 +31,27 @@ the file instead of producing a wrong table. Each record's lineage holds
 ``output_schema_sha256``, a SHA-256 of the pipeline output's
 ``schema.simpleString()``; ``run`` checks it before any write.
 
-The source is scanned once per job. The first attempt with pending
-work writes it, bucket-partitioned, to ``{output_dir}/_staged`` and then
-publishes ``_staged/_stage.json`` by the same temp-then-rename: the
-``n_buckets``/``entity_col`` lineage, the staged bucket list and
-``input_files_sha256``, a SHA-256 of the source's sorted input file list
-(``DataFrame.inputFiles``), computed in the JVM. A later attempt reads
-``_staged`` instead of the source when the marker's lineage matches and
-its buckets cover every pending bucket; otherwise it stages again. A
-restart refuses (``ValueError`` naming the file) a marker it cannot
-read, and a source whose input files differ from the staged ones: their
-mix would be two snapshots in one table. A source that lists no files
-(``createDataFrame``, an RDD) cannot be checked and reuses the snapshot
-as it is. A ``__bucket`` source is never staged (see ``run``). A
+The source is scanned once per job. A pipeline may carry its split as
+``rows`` (a row-local stage) and ``windows`` (the rest), with
+``pipeline(df) == windows(rows(df))``, as ``plans.pipeline.pit_features``
+does; a plain callable's row stage is the identity. The first attempt
+with pending work writes ``rows(source)``, bucket-partitioned, to
+``{output_dir}/_staged`` and then publishes ``_staged/_stage.json`` by
+the same temp-then-rename: the ``n_buckets``/``entity_col`` lineage, the
+staged bucket list, ``rows_schema_sha256`` (a SHA-256 of
+``rows(source).schema.simpleString()``) and ``input_files_sha256``, a
+SHA-256 of the source's sorted input file list (``DataFrame.inputFiles``),
+computed in the JVM. Each bucket's job then runs only ``windows`` over
+its staged rows, so neither a bucket nor a restart repeats the row
+stage. A later attempt reads ``_staged`` instead of the source when the
+marker's lineage matches and its buckets cover every pending bucket;
+otherwise it stages again. A restart refuses (``ValueError`` naming the
+file) a marker it cannot read, a row stage of another schema (the done
+buckets came from the other rows), and a source whose input files
+differ from the staged ones: their mix would be two snapshots in one
+table. A source that lists no files (``createDataFrame``, an RDD) cannot
+be checked and reuses the snapshot as it is. A ``__bucket`` source is
+never staged: each bucket runs the whole pipeline (see ``run``). A
 successful attempt deletes ``_staged``.
 
 Each attempt names its Spark jobs by their description: the staging
@@ -109,6 +117,12 @@ def _write_text(fs, path, text: str) -> None:
         out.close()
 
 
+def _schema_sha256(df: DataFrame) -> str:
+    """SHA-256 of ``df.schema.simpleString()`` (planning only, no Spark
+    job)."""
+    return hashlib.sha256(df.schema.simpleString().encode()).hexdigest()
+
+
 def _input_files_sha256(df: DataFrame) -> str | None:
     """SHA-256 of ``df``'s sorted input file list (as the Java list
     string ``[a, b, ...]``), or None when it lists no files. The list
@@ -138,7 +152,10 @@ def _input_files_sha256(df: DataFrame) -> str | None:
 class CheckpointedRunner:
     """Drives a bucket-partitioned pipeline to completion, resumably.
 
-    ``pipeline``: (DataFrame of one bucket's input) -> output DataFrame.
+    ``pipeline``: (DataFrame of one bucket's input) -> output DataFrame,
+    optionally split into ``pipeline.rows``, a row-local stage that keeps
+    ``entity_col`` and runs once per job when the source is staged, and
+    ``pipeline.windows``, which runs per bucket over the staged rows.
     Each bucket's output lands in ``{output_dir}/bucket={i}``; its
     checkpoint record lands in ``{checkpoint_dir}`` after the write
     succeeds, so a crash between the two re-runs that bucket (at-least-
@@ -249,14 +266,16 @@ class CheckpointedRunner:
 
     # -- the staged snapshot ----------------------------------------------
     def _staged_covers(
-        self, staged_dir: str, pending: list[int], files: str | None
+        self, staged_dir: str, pending: list[int], files: str | None, rows_schema: str
     ) -> bool:
         """Whether ``staged_dir`` already holds every ``pending`` bucket of
         this job's input, by its ``_stage.json`` marker.
 
-        Raises ``ValueError`` naming the marker when it is unreadable, or
+        Raises ``ValueError`` naming the marker when it is unreadable,
         when ``files`` (the source's input-file digest) differs from the
-        staged source's: the done buckets came from the staged input."""
+        staged source's, or when ``rows_schema`` (the row stage's schema
+        digest) differs from the staged rows': the done buckets came from
+        the staged input and rows."""
         fs, p = self._path(staged_dir, _STAGE_MARKER)
         if not fs.exists(p):
             return False
@@ -266,6 +285,7 @@ class CheckpointedRunner:
             ran_with = (m["n_buckets"], m["entity_col"])
             staged = set(m["buckets"])
             staged_files = m["input_files_sha256"]
+            staged_rows = m.get("rows_schema_sha256")
         except (ValueError, KeyError, TypeError, Py4JJavaError) as e:
             raise ValueError(f"unreadable staging marker {where}: {e!r}") from e
         if ran_with != (self.n_buckets, self.entity_col):
@@ -276,6 +296,13 @@ class CheckpointedRunner:
                 f"(sha256 {staged_files}) than this source lists (sha256 "
                 f"{files}); restart over the original input or use new "
                 f"output and checkpoint dirs"
+            )
+        if staged_rows != rows_schema:
+            raise ValueError(
+                f"staging marker {where} was written by a row stage with "
+                f"schema sha256 {staged_rows}; this "
+                f"pipeline's row stage has {rows_schema}. Restart with the original "
+                f"pipeline or use new output and checkpoint dirs"
             )
         return staged.issuperset(pending)
 
@@ -304,17 +331,19 @@ class CheckpointedRunner:
         N buckets complete (simulates a killed job).
         """
         t_run = time.monotonic()
-        # the pipeline's output schema over this input, as it will be
-        # over each bucket (planned only, no Spark job)
-        output_schema = hashlib.sha256(
-            pipeline(source.drop("__bucket")).schema.simpleString().encode()
-        ).hexdigest()
+        rows = getattr(pipeline, "rows", lambda df: df)
+        windows = getattr(pipeline, "windows", pipeline)
+        # the row stage and the pipeline's output schema over this input,
+        # as it will be over each bucket (planned only, no Spark job)
+        input_rows = rows(source.drop("__bucket"))
+        output_schema = _schema_sha256(windows(input_rows))
         records = self._records(output_schema)
         done_rows = {r["bucket"]: r["rows"] for r in records if r["status"] == "done"}
         pending = [b for b in range(self.n_buckets) if b not in done_rows]
         attempt = 1 + max((r["attempt"] for r in records), default=0)
-        # Stage the pending input ONCE PER JOB, hive-partitioned by
-        # bucket: one scan + one write of the source, then every
+        # Stage the pending input's row stage ONCE PER JOB,
+        # hive-partitioned by bucket: one scan of the source, one pass of
+        # the row stage and one write, then every
         # per-bucket read prunes on the partition column (PartitionFilters
         # in the scan — no recompute of the bucket hash, no re-scan).
         # Without this, filtering a *computed* column per bucket costs
@@ -329,7 +358,8 @@ class CheckpointedRunner:
         # source already carries ``__bucket`` — a hive ``__bucket=``
         # partition layout or an Iceberg bucket-transform column — the
         # per-bucket filter is already a partition prune on the
-        # original scan, so there is nothing to stage.
+        # original scan, so there is nothing to stage, and each bucket
+        # runs the whole pipeline.
         staged_dir = os.path.join(self.output_dir, "_staged")
         staged_writes = 0
         if pending:
@@ -362,13 +392,14 @@ class CheckpointedRunner:
                         f"construct the runner with the matching "
                         f"n_buckets"
                     )
-                staged = source
+                staged, job = source, pipeline
             else:
-                src = source.withColumn(
+                src = input_rows.withColumn(
                     "__bucket", bucket_of(self.entity_col, self.n_buckets)
                 )
                 files = _input_files_sha256(source)
-                if not self._staged_covers(staged_dir, pending, files):
+                rows_schema = _schema_sha256(input_rows)
+                if not self._staged_covers(staged_dir, pending, files, rows_schema):
                     # no marker may outlive the snapshot it describes
                     fs, p = self._path(staged_dir, _STAGE_MARKER)
                     fs.delete(p, False)
@@ -382,6 +413,7 @@ class CheckpointedRunner:
                         "n_buckets": self.n_buckets,
                         "entity_col": self.entity_col,
                         "buckets": pending,
+                        "rows_schema_sha256": rows_schema,
                         "input_files_sha256": files,
                     }
                     self._publish(staged_dir, _STAGE_MARKER, json.dumps(marker))
@@ -390,11 +422,12 @@ class CheckpointedRunner:
                 # source / empty pending buckets) has no part files to
                 # infer from and would raise (ADVICE r2)
                 staged = self.spark.read.schema(src.schema).parquet(staged_dir)
+                job = windows
         completed = 0
         for b in pending:
             t0 = time.monotonic()
             part = staged.where(F.col("__bucket") == b).drop("__bucket")
-            out = pipeline(part)
+            out = job(part)
             path = os.path.join(self.output_dir, f"bucket={b}")
             # rows observed DURING the sink write: counting before or
             # after the write would be a second pass over the bucket

@@ -11,14 +11,18 @@ Ours replaces the torch forward pass with deterministic, model-free
 feature math (FIXTURES.md §5) so golden fixtures reproduce on any
 machine. There is one engine implementation and one oracle:
 
-- ``feature_vectors_windows``: the engine. A pure-Catalyst plan —
-  text features computed map-side (``_text_features``: plain columns
-  and an ``array<float>`` bag, from one interpreted pass over each
-  turn's tokens), ONE hash exchange on the entity key, one sort,
-  every output column a running-window prefix aggregate over (conv_id
-  ORDER BY ts, turn_idx), no Python stage, every other Project in
-  whole-stage codegen. Its Columns do not depend on the input, so
-  they are built once per process (``_text_columns``,
+- ``feature_vectors_windows``: the engine. A pure-Catalyst plan in two
+  stages split at its exchange:
+  - ``turn_rows``, the row stage: text features computed map-side
+    (plain columns and an ``array<float>`` bag, from one interpreted
+    pass over each turn's tokens). It is row-local, so
+    ``CheckpointedRunner`` stages its output once per job;
+  - ``window_features``: ONE hash exchange on the entity key, one
+    sort, every output column a running-window prefix aggregate over
+    (conv_id ORDER BY ts, turn_idx).
+  No Python stage, every Project but the tokenizer in whole-stage
+  codegen. Its select lists do not depend on the input, so they are
+  built and sent to the JVM once per process (``_text_columns``,
   ``_window_columns``) and a call only replays the plan's ~11
   DataFrame calls;
 - ``compute_features_numeric``: the numpy oracle over
@@ -64,7 +68,10 @@ import functools
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
+from py4j.java_gateway import JavaObject
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame
+from pyspark.sql.classic.column import _to_java_column, _to_seq
 
 FEATURE_DIM = 32
 SESSION_GAP_S = 1800.0
@@ -77,10 +84,10 @@ def with_text_features(transcripts: DataFrame) -> DataFrame:
     token bag (bag0..bag15), role_code, has_tool — one row per turn,
     the input of ``compute_features_numeric``.
 
-    The engine's own map-side projection (``_text_features``, the same
-    cached Columns) with ``__bag`` expanded, so the oracle twin reads
-    the exact values the window plan computes."""
-    tf = _text_features(transcripts)
+    The engine's own row stage (``turn_rows``, the same cached
+    Columns) with ``__bag`` expanded, so the oracle twin reads the exact
+    values the window plan computes."""
+    tf = turn_rows(transcripts)
     return tf.select(
         *[c for c in tf.columns if c not in ("__ck", "__bag")],
         *[F.col("__bag")[b].alias(f"bag{b}") for b in range(_HASH_BUCKETS)],
@@ -184,11 +191,25 @@ def with_feature_array(df: DataFrame) -> DataFrame:
     return df.select(*keep, arr)
 
 
+def _jseqs(*selects: list[Column | str]) -> tuple[JavaObject, ...]:
+    """Each select list as a JVM Seq of Columns. The Seq holds the JVM
+    Columns, so a cached one is all ``_select`` needs: converting a list
+    again costs one py4j round trip per element."""
+    sc = SparkContext._active_spark_context
+    return tuple(_to_seq(sc, cols, _to_java_column) for cols in selects)
+
+
+def _select(df: DataFrame, jcols: JavaObject) -> DataFrame:
+    """``df.select`` of a cached JVM Seq of Columns."""
+    return DataFrame(df._jdf.select(jcols), df.sparkSession)
+
+
 @functools.cache
-def _text_columns() -> tuple[tuple[Column | str, ...], ...]:
-    """The Columns of ``_text_features``' four selects, built once per
-    process: they are unresolved expressions that do not depend on the
-    input, and building them costs thousands of py4j round trips."""
+def _text_columns() -> tuple[JavaObject, ...]:
+    """The four selects of ``turn_rows``' projection, built once per
+    process and sent to the JVM once: they are unresolved expressions
+    that do not depend on the input, and building them costs thousands
+    of py4j round trips."""
     # (?U): Unicode-aware \s, i.e. Unicode White_Space: NBSP & friends
     # split tokens, U+001C..U+001F do not. The Python oracle
     # (tests/reference_impl.py) and the DuckDB _WS_CLASS split on the
@@ -254,14 +275,16 @@ def _text_columns() -> tuple[tuple[Column | str, ...], ...]:
             ]
         ).alias("__bag"),
     ]
-    return tuple(map(tuple, (tokenized, counted, normed, bagged)))
+    return _jseqs(tokenized, counted, normed, bagged)
 
 
-def _text_features(transcripts: DataFrame) -> DataFrame:
-    """The map-side projection of the window plan: every per-row text
-    derivation, done once per row before the exchange, as plain
-    columns plus the bag as one array, so the shuffle moves no
-    text/role/tool strings.
+def turn_rows(transcripts: DataFrame) -> DataFrame:
+    """The kernel's row stage: the map-side projection of the window
+    plan, every per-row text derivation done once per row before the
+    exchange, as plain columns plus the bag as one array, so the shuffle
+    moves no text/role/tool strings. Row-local, so
+    ``CheckpointedRunner`` runs it once per job, when it stages its
+    input, and each bucket runs only ``window_features``.
 
     - ``__ck`` = xxhash64(conv_id); a null ``conv_id`` raises here
       (a lazy ``raise_error``, no extra Spark job) rather than joining
@@ -275,18 +298,28 @@ def _text_features(transcripts: DataFrame) -> DataFrame:
     - ``__bag``: the 16 counts, l2-normalized in double and stored as
       ``array<float>``, the output precision.
 
-    One select per step: Catalyst does not collapse a Project whose
-    non-trivial output the next one reads more than once, so ``__d``,
-    each count and the norm are computed once per row."""
-    df = transcripts
-    for cols in _text_columns():
-        df = df.select(*cols)
+    Output: ``__ck, conv_id, turn_idx, ts, role_code, has_tool, chars,
+    words, __bag``. One select per step: Catalyst does not collapse a
+    Project whose non-trivial output the next one reads more than once,
+    so ``__d``, each count and the norm are computed once per row."""
+    df = transcripts.select("conv_id", "turn_idx", "role", "text", "tool", "ts")
+    for jcols in _text_columns():
+        df = _select(df, jcols)
     return df
 
 
+def window_features(rows: DataFrame) -> DataFrame:
+    """The kernel's windowed stage over ``turn_rows`` output: ONE hash
+    exchange on ``__ck``, one sort, and three selects of prefix
+    aggregates (see ``feature_vectors_windows``)."""
+    s1, s2, out = _window_columns()
+    df = rows.repartition("__ck").sortWithinPartitions("__ck", "conv_id", "ts", "turn_idx")
+    return _select(_select(_select(df, s1), s2), out)
+
+
 def feature_vectors_windows(transcripts: DataFrame) -> DataFrame:
-    """The engine kernel: the 32 features as window expressions — NO
-    Python stage at all.
+    """The engine kernel, ``window_features(turn_rows(transcripts))``:
+    the 32 features as window expressions — NO Python stage at all.
 
     Every output column is a per-conversation prefix op (cumsum /
     running max / first) over rows sorted by (ts, turn_idx), so a row
@@ -308,17 +341,17 @@ def feature_vectors_windows(transcripts: DataFrame) -> DataFrame:
     transfer + Python workers is what lifts multi-core scaling
     efficiency (BENCH/BASELINE.md): whole-stage codegen end to end.
 
-    Text is tokenized, counted and normalized map-side
-    (``_text_features``), so the exchange + sort move four plain
-    columns and the 16-float bag instead of the raw text/role/tool
-    strings. The plan's one higher-order function, the token → bucket
-    digit ``transform``, runs once per row before the shuffle; every
-    other Project runs in whole-stage codegen (tests/test_kernel.py).
+    Text is tokenized, counted and normalized map-side (``turn_rows``),
+    so the exchange + sort move four plain columns and the 16-float bag
+    instead of the raw text/role/tool strings. The plan's one
+    higher-order function, the token → bucket digit ``transform``, runs
+    once per row before the shuffle; every other Project runs in
+    whole-stage codegen (tests/test_kernel.py).
 
-    The Columns of every select come from ``_text_columns`` and
-    ``_window_columns``, built on the first call in a process; later
-    calls, on any input schema, reuse them and cost a few hundred py4j
-    round trips instead of thousands.
+    The select lists come from ``_text_columns`` and
+    ``_window_columns``, built and sent to the JVM on the first call in
+    a process; later calls, on any input schema, reuse the JVM Seqs and
+    only replay the plan's DataFrame calls.
 
     ``__ck`` = xxhash64(conv_id) leads every sort key: string conv_ids
     share long prefixes, which defeats the radix/prefix comparator — a
@@ -326,20 +359,13 @@ def feature_vectors_windows(transcripts: DataFrame) -> DataFrame:
     partition spec, so a (astronomically unlikely) hash collision
     still cannot merge two conversations.
     """
-    cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-    s1, s2, out = _window_columns()
-    tf = (
-        _text_features(transcripts.select(*cols))
-        .repartition("__ck")
-        .sortWithinPartitions("__ck", "conv_id", "ts", "turn_idx")
-    )
-    return tf.select(*s1).select(*s2).select(*out)
+    return window_features(turn_rows(transcripts))
 
 
 @functools.cache
-def _window_columns() -> tuple[tuple[Column | str, ...], ...]:
-    """The Columns of ``feature_vectors_windows``' three selects,
-    built once per process like ``_text_columns``."""
+def _window_columns() -> tuple[JavaObject, ...]:
+    """The three selects of ``window_features``, built once per process
+    and sent to the JVM once, like ``_text_columns``."""
     from pyspark.sql import Window
 
     from dane_visual_feature_extraction_worker_spark.functions import epoch_seconds
@@ -417,4 +443,4 @@ def _window_columns() -> tuple[tuple[Column | str, ...], ...]:
         "session_start",
         *feats,
     ]
-    return tuple(map(tuple, (s1, s2, out)))
+    return _jseqs(s1, s2, out)

@@ -17,6 +17,13 @@ over (conv_id ORDER BY ts, turn_idx) → sink. No Python stage:
 whole-stage codegen end to end, so throughput scales with cores
 (BENCH/BASELINE.md). Its output is bit-identical to the numpy oracle
 ``kernel.compute_features_numeric`` (tests/test_kernel.py).
+
+Each pipeline carries its split at the exchange as two attributes,
+``rows`` (the row-local stage, ``kernel.turn_rows``) and ``windows``
+(the rest), with ``pipeline(df) == pipeline.windows(pipeline.rows(df))``.
+``CheckpointedRunner`` stages ``rows(source)`` once per job and runs
+only ``windows`` over each bucket, so a restart does not tokenize its
+pending turns again.
 """
 
 from __future__ import annotations
@@ -24,7 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from dane_visual_feature_extraction_worker_spark.kernel import (
-    feature_vectors_windows,
+    turn_rows,
+    window_features,
     with_feature_array,
 )
 
@@ -32,10 +40,18 @@ from dane_visual_feature_extraction_worker_spark.kernel import (
 def pit_features(transcripts: DataFrame) -> DataFrame:
     """Features, session id and session start for every (conv_id, ts)
     anchor."""
-    return feature_vectors_windows(transcripts)
+    return window_features(turn_rows(transcripts))
+
+
+def _window_features_array(rows: DataFrame) -> DataFrame:
+    return with_feature_array(window_features(rows))
 
 
 def pit_features_array(transcripts: DataFrame) -> DataFrame:
     """Array-form output (fixture schema); flat form is the scale sink."""
-    return with_feature_array(pit_features(transcripts))
+    return _window_features_array(turn_rows(transcripts))
 
+
+pit_features.rows = pit_features_array.rows = turn_rows
+pit_features.windows = window_features
+pit_features_array.windows = _window_features_array

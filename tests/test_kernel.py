@@ -319,12 +319,14 @@ def test_text_projection_is_the_only_interpreted_project(transcripts):
 def test_repeated_build_reuses_the_kernel_columns(
     spark, transcripts, tmp_path, monkeypatch
 ):
-    """The kernel's Columns do not depend on the input, so they are built
-    once per process: building ``pit_features`` again, over an input
-    with another schema (an extra column, ``ts`` read back from
-    parquet), only replays the DataFrame calls. Each py4j command this
-    thread sends is one round trip to the JVM; py4j's finalizer thread
-    detaches freed objects in the background and is not counted."""
+    """The kernel's select lists do not depend on the input, so they are
+    built and sent to the JVM once per process: building ``pit_features``
+    again, over an input with another schema (an extra column, ``ts``
+    read back from parquet), only replays the DataFrame calls (106 round
+    trips on Spark 4.1.2, 382 when each select sent its list again).
+    Each py4j command this thread sends is one round trip to the JVM;
+    py4j's finalizer thread detaches freed objects in the background and
+    is not counted."""
     import threading
 
     from py4j.clientserver import ClientServerConnection
@@ -345,7 +347,7 @@ def test_repeated_build_reuses_the_kernel_columns(
     monkeypatch.setattr(ClientServerConnection, "send_command", counting)
     out = pit_features(src)
     monkeypatch.undo()
-    assert sent[0] < 1000, f"{sent[0]} py4j round trips"
+    assert sent[0] < 200, f"{sent[0]} py4j round trips"
 
     keys = ["conv_id", "ts", "turn_idx"]
     got = out.toPandas().sort_values(keys, kind="mergesort").reset_index(drop=True)

@@ -3,6 +3,8 @@ final table equals a never-killed run (north rule)."""
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pytest
 
@@ -340,6 +342,82 @@ def test_restart_with_other_output_schema_is_refused(spark, transcripts, tmp_pat
     assert r.run(transcripts, pit_features)["computed"] == 2
 
 
+def test_restart_with_other_row_stage_is_refused(spark, transcripts, tmp_path):
+    """``_staged`` holds the pipeline's row stage. A restart whose row
+    stage has another schema, under a pipeline with the same output,
+    used to report success over buckets computed from two kinds of
+    rows. It now raises naming the staging marker, before it writes
+    anything."""
+    import os
+
+    import pyspark.sql.functions as F
+
+    def wider(df):
+        return pit_features(df)
+
+    # the row stage keeps every source column and adds one
+    wider.rows = lambda df: df.withColumn("extra", F.lit(1))
+    wider.windows = pit_features
+
+    tmp = str(tmp_path)
+    r = _runner(spark, tmp, "rerow", n_buckets=3)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        r.run(transcripts, pit_features, fail_after=1)
+    before = sorted(os.listdir(f"{tmp}/out_rerow"))
+    marker = f"{tmp}/out_rerow/_staged/_stage.json"
+    with pytest.raises(
+        ValueError,
+        match=f"{re.escape(marker)} was written by a row stage.*new output and checkpoint dirs",
+    ):
+        r.run(transcripts, wider)
+    assert sorted(os.listdir(f"{tmp}/out_rerow")) == before
+    # the original pipeline still resumes from its snapshot
+    s = r.run(transcripts, pit_features)
+    assert s["computed"] == 2 and s["staged_writes"] == 0
+
+
+def _final_plan_nodes(plan: str) -> list[str]:
+    """The detail blocks (``(n) Name ...``) of the nodes in the final AQE
+    plan of an executed plan's description."""
+    phys = plan[plan.index("== Physical Plan ==") :]
+    tree, _, details = phys.partition("\n\n\n")
+    final = tree[tree.index("== Final Plan ==") : tree.index("== Initial Plan ==")]
+    ids = set(re.findall(r"\((\d+)\)", final))
+    blocks = re.split(r"\n\n(?=\(\d+\) )", details.strip())
+    return [b for b in blocks if re.match(r"\((\d+)\)", b).group(1) in ids]
+
+
+def test_buckets_run_only_the_windowed_stage(spark, transcripts, tmp_path):
+    """The staging write runs the kernel's row stage, the one tokenizer,
+    and each bucket's write reads the staged rows, ``__bag`` included,
+    and tokenizes nothing. Before, every bucket (and every restart)
+    tokenized its turns again."""
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def plans():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        listed = store.executionsList()
+        execs = (listed.apply(i) for i in range(listed.size()))
+        return {e.executionId(): (e.description(), e.physicalPlanDescription()) for e in execs}
+
+    before = set(plans())
+    r = _runner(spark, str(tmp_path), "stages", n_buckets=3)
+    r.run(transcripts, pit_features)
+    ran = {d: p for i, (d, p) in plans().items() if i not in before}
+    assert set(ran) == {"pit:1:stage", "pit:1:0", "pit:1:1", "pit:1:2"}
+
+    stage = _final_plan_nodes(ran.pop("pit:1:stage"))
+    tokenizers = [n for n in stage if "split(" in n]
+    assert len(tokenizers) == 1 and "transform(" in tokenizers[0]
+    for desc, plan in ran.items():
+        assert "split(" not in plan and "transform(" not in plan, desc
+        scans = [n for n in _final_plan_nodes(plan) if re.match(r"\(\d+\) Scan parquet", n)]
+        assert len(scans) == 1, desc
+        assert "/out_stages/_staged]" in scans[0], desc
+        assert "__bag:array<float>" in scans[0], desc
+
+
 def test_prebucketed_source_rejects_null_buckets(spark, transcripts, tmp_path):
     """A hive ``__bucket=`` source with null-bucket rows used to report
     success without them: min/max skip nulls and ``__bucket == b``
@@ -363,21 +441,22 @@ def test_prebucketed_source_rejects_null_buckets(spark, transcripts, tmp_path):
 
 def test_runner_refuses_null_conv_id(spark, transcripts, tmp_path):
     """Null-``conv_id`` turns used to be written as one conversation and
-    their bucket recorded done; now the run raises at that bucket and
-    records nothing for it."""
+    their bucket recorded done. The row stage refuses them, so the run
+    now raises in its staging write, before it writes any bucket or
+    publishes any marker."""
+    import os
+
     import pyspark.sql.functions as F
     from pyspark.errors import SparkRuntimeException
 
-    from dane_visual_feature_extraction_worker_spark.checkpoint import bucket_of
-
     nulls = transcripts.limit(3).withColumn("conv_id", F.lit(None).cast("string"))
     src = transcripts.unionByName(nulls)
-    b = src.where(F.col("conv_id").isNull()).select(bucket_of("conv_id", 4)).first()[0]
     r = _runner(spark, str(tmp_path), "nullkey", n_buckets=4)
     with pytest.raises(SparkRuntimeException, match="null conv_id"):
         r.run(src, pit_features)
     done = {row["bucket"] for row in r.load_checkpoints().where("status = 'done'").collect()}
-    assert b not in done and done == set(range(b))
+    assert done == set()
+    assert not os.path.exists(f"{tmp_path}/out_nullkey/_staged/_stage.json")
 
 
 @pytest.mark.parametrize("n_buckets", [0, -1])
