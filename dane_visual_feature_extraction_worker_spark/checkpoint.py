@@ -24,35 +24,34 @@ can reach) to a ``_``-prefixed temp name, then renamed to
 leaves no half record. The directory reads as a JSON-lines table
 (``spark.read.json(checkpoint_dir)``) and holds one record per bucket
 and attempt, so it needs no compaction. A missing ``checkpoint_dir``
-means nothing is done; an entry that is not a readable record, a
-record written with another ``n_buckets`` or ``entity_col``, or a done
-record written by a pipeline with another output schema, raises naming
-the file instead of producing a wrong table. Each record's lineage holds
-``output_schema_sha256``, a SHA-256 of the pipeline output's
-``schema.simpleString()``; ``run`` checks it before any write.
+means nothing is done; an entry that is not a readable record raises
+naming the file instead of producing a wrong table.
+
+Each run has one identity, planned before any write (no Spark job):
+``n_buckets``, ``entity_col``, ``input_files_sha256`` (a SHA-256 of the
+source's sorted input file list, ``DataFrame.inputFiles``, computed in
+the JVM; null for a source that lists no files, such as
+``createDataFrame``, which cannot be checked), ``rows_schema_sha256``
+and ``output_schema_sha256`` (SHA-256s of the row stage's and the
+pipeline output's ``schema.simpleString()``). Every record's lineage
+holds it, and a restart raises ``ValueError`` naming the record and the
+first key that differs, so no table mixes two inputs or two pipelines.
+A record without a key, written by an older version, is refused the
+same way.
 
 The source is scanned once per job. A pipeline may carry its split as
 ``rows`` (a row-local stage) and ``windows`` (the rest), with
 ``pipeline(df) == windows(rows(df))``, as ``plans.pipeline.pit_features``
 does; a plain callable's row stage is the identity. The first attempt
 with pending work writes ``rows(source)``, bucket-partitioned, to
-``{output_dir}/_staged`` and then publishes ``_staged/_stage.json`` by
-the same temp-then-rename: the ``n_buckets``/``entity_col`` lineage, the
-staged bucket list, ``rows_schema_sha256`` (a SHA-256 of
-``rows(source).schema.simpleString()``) and ``input_files_sha256``, a
-SHA-256 of the source's sorted input file list (``DataFrame.inputFiles``),
-computed in the JVM. Each bucket's job then runs only ``windows`` over
-its staged rows, so neither a bucket nor a restart repeats the row
-stage. A later attempt reads ``_staged`` instead of the source when the
-marker's lineage matches and its buckets cover every pending bucket;
-otherwise it stages again. A restart refuses (``ValueError`` naming the
-file) a marker it cannot read, a row stage of another schema (the done
-buckets came from the other rows), and a source whose input files
-differ from the staged ones: their mix would be two snapshots in one
-table. A source that lists no files (``createDataFrame``, an RDD) cannot
-be checked and reuses the snapshot as it is. A ``__bucket`` source is
-never staged: each bucket runs the whole pipeline (see ``run``). A
-successful attempt deletes ``_staged``.
+``{output_dir}/_staged`` and then publishes ``_staged/_stage.json``, the
+identity plus the staged bucket list, by the same temp-then-rename.
+Each bucket's job then runs only ``windows`` over its staged rows. The
+snapshot is a cache: a later attempt reads it instead of the source
+when the marker holds this run's identity and every pending bucket,
+and stages again otherwise; only a marker it cannot read raises. A
+``__bucket`` source is never staged: each bucket runs the whole
+pipeline (see ``run``). A successful attempt deletes ``_staged``.
 
 Each attempt names its Spark jobs by their description: the staging
 write runs as ``pit:<attempt>:stage`` and each bucket's write as
@@ -149,6 +148,20 @@ def _input_files_sha256(df: DataFrame) -> str | None:
     return bytes(md.digest()).hex()
 
 
+def _check_identity(where: str, lineage: dict, identity: dict) -> None:
+    """Raise ``ValueError`` naming ``where`` and the first ``identity``
+    key whose value ``lineage`` does not hold."""
+    for key, now in identity.items():
+        was = lineage.get(key)
+        if was != now:
+            raise ValueError(
+                f"checkpoint record {where} was written with {key}={was!r}; "
+                f"this run has {key}={now!r}. A resume would mix two inputs or "
+                f"pipelines in one table: restart with the original ones or "
+                f"use new output and checkpoint dirs"
+            )
+
+
 class CheckpointedRunner:
     """Drives a bucket-partitioned pipeline to completion, resumably.
 
@@ -205,14 +218,12 @@ class CheckpointedRunner:
             raise OSError(f"could not rename {tmp.toString()} to {final.toString()}")
 
     # -- checkpoint records ----------------------------------------------
-    def _records(self, output_schema: str | None = None) -> list[dict]:
+    def _records(self, identity: dict | None = None) -> list[dict]:
         """Every record in ``checkpoint_dir``, typed as CHECKPOINT_SCHEMA.
 
         Raises ``ValueError`` naming the file for an entry that is not a
-        readable record, for a record this runner's ``n_buckets`` /
-        ``entity_col`` would not have written, and, given the
-        ``output_schema`` fingerprint of this run's pipeline, for a done
-        record whose lineage holds another fingerprint or none."""
+        readable record and, given this run's ``identity``, for a record
+        whose lineage does not hold it."""
         fs, d = self._path(self.checkpoint_dir)
         if not fs.exists(d):
             return []
@@ -228,28 +239,14 @@ class CheckpointedRunner:
                 raw = self._read_json(fs, st.getPath())
                 rec = {k: _CAST[t](raw[k]) for k, t in _FIELDS}
                 lineage = json.loads(rec["lineage"])
-                ran_with = (lineage["n_buckets"], lineage["entity_col"])
-                schema_was = lineage.get("output_schema_sha256")
+                if not isinstance(lineage, dict):
+                    raise TypeError("lineage is not a JSON object")
             except (ValueError, KeyError, TypeError, Py4JJavaError) as e:
                 raise ValueError(
                     f"unreadable checkpoint record {where}: {e!r}"
                 ) from e
-            if ran_with != (self.n_buckets, self.entity_col):
-                raise ValueError(
-                    f"checkpoint record {where} was written with "
-                    f"n_buckets={ran_with[0]}, entity_col={ran_with[1]!r}; "
-                    f"this runner has n_buckets={self.n_buckets}, "
-                    f"entity_col={self.entity_col!r}. Resume with the "
-                    f"original settings or use a new checkpoint_dir"
-                )
-            done = rec["status"] == "done"
-            if output_schema and done and schema_was != output_schema:
-                raise ValueError(
-                    f"checkpoint record {where} was written by a pipeline with "
-                    f"output schema sha256 {schema_was}; this pipeline's is "
-                    f"{output_schema}. A resume would mix two schemas in one "
-                    f"table: use new output and checkpoint dirs"
-                )
+            if identity is not None:
+                _check_identity(where, lineage, identity)
             records.append(rec)
         return sorted(records, key=lambda r: (r["attempt"], r["bucket"]))
 
@@ -265,46 +262,19 @@ class CheckpointedRunner:
         self._publish(self.checkpoint_dir, name, json.dumps(row) + "\n")
 
     # -- the staged snapshot ----------------------------------------------
-    def _staged_covers(
-        self, staged_dir: str, pending: list[int], files: str | None, rows_schema: str
-    ) -> bool:
+    def _staged_covers(self, staged_dir: str, pending: list[int], identity: dict) -> bool:
         """Whether ``staged_dir`` already holds every ``pending`` bucket of
-        this job's input, by its ``_stage.json`` marker.
-
-        Raises ``ValueError`` naming the marker when it is unreadable,
-        when ``files`` (the source's input-file digest) differs from the
-        staged source's, or when ``rows_schema`` (the row stage's schema
-        digest) differs from the staged rows': the done buckets came from
-        the staged input and rows."""
+        this run's ``identity``, by its ``_stage.json`` marker. Raises
+        ``ValueError`` naming the marker when it is unreadable."""
         fs, p = self._path(staged_dir, _STAGE_MARKER)
         if not fs.exists(p):
             return False
-        where = p.toString()
         try:
             m = self._read_json(fs, p)
-            ran_with = (m["n_buckets"], m["entity_col"])
-            staged = set(m["buckets"])
-            staged_files = m["input_files_sha256"]
-            staged_rows = m.get("rows_schema_sha256")
-        except (ValueError, KeyError, TypeError, Py4JJavaError) as e:
-            raise ValueError(f"unreadable staging marker {where}: {e!r}") from e
-        if ran_with != (self.n_buckets, self.entity_col):
-            return False
-        if files is not None and files != staged_files:
-            raise ValueError(
-                f"staging marker {where} was written for other input files "
-                f"(sha256 {staged_files}) than this source lists (sha256 "
-                f"{files}); restart over the original input or use new "
-                f"output and checkpoint dirs"
-            )
-        if staged_rows != rows_schema:
-            raise ValueError(
-                f"staging marker {where} was written by a row stage with "
-                f"schema sha256 {staged_rows}; this "
-                f"pipeline's row stage has {rows_schema}. Restart with the original "
-                f"pipeline or use new output and checkpoint dirs"
-            )
-        return staged.issuperset(pending)
+            staged = set(m.pop("buckets"))
+        except (ValueError, KeyError, TypeError, AttributeError, Py4JJavaError) as e:
+            raise ValueError(f"unreadable staging marker {p.toString()}: {e!r}") from e
+        return m == identity and staged.issuperset(pending)
 
     # -- driver loop (the queue-consumer analogue) ------------------------
     def run(
@@ -333,33 +303,27 @@ class CheckpointedRunner:
         t_run = time.monotonic()
         rows = getattr(pipeline, "rows", lambda df: df)
         windows = getattr(pipeline, "windows", pipeline)
-        # the row stage and the pipeline's output schema over this input,
-        # as it will be over each bucket (planned only, no Spark job)
+        # the row stage and the output over this input, as they will be
+        # over each bucket (planned only, no Spark job)
         input_rows = rows(source.drop("__bucket"))
-        output_schema = _schema_sha256(windows(input_rows))
-        records = self._records(output_schema)
+        identity = {
+            "n_buckets": self.n_buckets,
+            "entity_col": self.entity_col,
+            "input_files_sha256": _input_files_sha256(source),
+            "rows_schema_sha256": _schema_sha256(input_rows),
+            "output_schema_sha256": _schema_sha256(windows(input_rows)),
+        }
+        records = self._records(identity)
         done_rows = {r["bucket"]: r["rows"] for r in records if r["status"] == "done"}
         pending = [b for b in range(self.n_buckets) if b not in done_rows]
         attempt = 1 + max((r["attempt"] for r in records), default=0)
-        # Stage the pending input's row stage ONCE PER JOB,
-        # hive-partitioned by bucket: one scan of the source, one pass of
-        # the row stage and one write, then every
-        # per-bucket read prunes on the partition column (PartitionFilters
-        # in the scan — no recompute of the bucket hash, no re-scan).
-        # Without this, filtering a *computed* column per bucket costs
-        # n_buckets full scans of the source — fatal at 100 TB (VERDICT
-        # r1). A restart whose ``_stage.json`` marker covers its pending
-        # buckets reads the crashed attempt's `_staged` and does not scan
-        # the source at all. `_staged` starts with '_' so result() readers
-        # ignore it.
-        #
-        # PRE-BUCKETED sources skip staging entirely (VERDICT r2: even
-        # one extra full write per attempt is heavy at 100 TB): when the
-        # source already carries ``__bucket`` — a hive ``__bucket=``
-        # partition layout or an Iceberg bucket-transform column — the
-        # per-bucket filter is already a partition prune on the
-        # original scan, so there is nothing to stage, and each bucket
-        # runs the whole pipeline.
+        # each bucket reads its staged rows by a partition prune on
+        # ``__bucket``: filtering a computed bucket column instead would
+        # scan the source once per bucket (VERDICT r1). A PRE-BUCKETED
+        # source (a hive ``__bucket=`` layout or an Iceberg bucket
+        # transform) already prunes that way, so it is not staged
+        # (VERDICT r2) and each bucket runs the whole pipeline. The
+        # leading ``_`` keeps ``_staged`` out of ``result()``.
         staged_dir = os.path.join(self.output_dir, "_staged")
         staged_writes = 0
         if pending:
@@ -397,9 +361,7 @@ class CheckpointedRunner:
                 src = input_rows.withColumn(
                     "__bucket", bucket_of(self.entity_col, self.n_buckets)
                 )
-                files = _input_files_sha256(source)
-                rows_schema = _schema_sha256(input_rows)
-                if not self._staged_covers(staged_dir, pending, files, rows_schema):
+                if not self._staged_covers(staged_dir, pending, identity):
                     # no marker may outlive the snapshot it describes
                     fs, p = self._path(staged_dir, _STAGE_MARKER)
                     fs.delete(p, False)
@@ -409,14 +371,8 @@ class CheckpointedRunner:
                         src.write.mode("overwrite").partitionBy("__bucket").parquet(
                             staged_dir
                         )
-                    marker = {
-                        "n_buckets": self.n_buckets,
-                        "entity_col": self.entity_col,
-                        "buckets": pending,
-                        "rows_schema_sha256": rows_schema,
-                        "input_files_sha256": files,
-                    }
-                    self._publish(staged_dir, _STAGE_MARKER, json.dumps(marker))
+                    marker = json.dumps({**identity, "buckets": pending})
+                    self._publish(staged_dir, _STAGE_MARKER, marker)
                     staged_writes = 1
                 # schema-providing read: a zero-row staged dir (empty
                 # source / empty pending buckets) has no part files to
@@ -447,14 +403,7 @@ class CheckpointedRunner:
                     "ms": ms,
                     "attempt": attempt,
                     "lineage": json.dumps(
-                        {
-                            "step": "pipeline",
-                            "bucket": b,
-                            "n_buckets": self.n_buckets,
-                            "entity_col": self.entity_col,
-                            "attempt": attempt,
-                            "output_schema_sha256": output_schema,
-                        }
+                        {"step": "pipeline", "bucket": b, "attempt": attempt, **identity}
                     ),
                 }
             )

@@ -386,8 +386,11 @@ def _window_columns() -> tuple[JavaObject, ...]:
         "ts",
         "role_code",
         "has_tool",
-        "chars",
-        "words",
+        # never null, but a parquet read of staged rows declares every
+        # column nullable; the coalesce keeps f3/f15 required in the
+        # output, as over the source, where Catalyst drops it
+        F.coalesce(F.col("chars"), F.lit(0.0)).alias("chars"),
+        F.coalesce(F.col("words"), F.lit(0.0)).alias("words"),
         "__bag",
         ts_s.alias("__ts_s"),
         F.unix_micros(F.col("ts").cast("timestamp")).alias("__ts_us"),

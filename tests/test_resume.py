@@ -149,8 +149,9 @@ def test_restart_without_stage_marker_restages(spark, transcripts, tmp_path):
 def test_restart_over_other_input_files_is_refused(spark, transcripts, tmp_path):
     """A job killed over one parquet dir and restarted over a copy of it
     at another path used to report success over a table mixing two
-    snapshots. The restart now raises naming the staging marker."""
-    import re
+    snapshots. The restart now raises naming a done record and its
+    ``input_files_sha256``, before it writes anything."""
+    import os
     import shutil
 
     tmp = str(tmp_path)
@@ -159,11 +160,14 @@ def test_restart_over_other_input_files_is_refused(spark, transcripts, tmp_path)
     r = _runner(spark, tmp, "moved", n_buckets=4)
     with pytest.raises(RuntimeError, match="injected failure"):
         r.run(spark.read.parquet(f"{tmp}/in"), pit_features, fail_after=2)
-    marker = f"{tmp}/out_moved/_staged/_stage.json"
+    before = sorted(os.listdir(f"{tmp}/out_moved"))
     with pytest.raises(
-        ValueError, match=f"{re.escape(marker)}.*new output and checkpoint dirs"
+        ValueError,
+        match=r"cp_moved/bucket=\d+-attempt=1\.json was written with "
+        r"input_files_sha256=.*new output and checkpoint dirs",
     ):
         r.run(spark.read.parquet(f"{tmp}/in_copy"), pit_features)
+    assert sorted(os.listdir(f"{tmp}/out_moved")) == before
     # the original input still resumes from its snapshot
     s = r.run(spark.read.parquet(f"{tmp}/in"), pit_features)
     assert s["computed"] == 2 and s["staged_writes"] == 0
@@ -346,8 +350,8 @@ def test_restart_with_other_row_stage_is_refused(spark, transcripts, tmp_path):
     """``_staged`` holds the pipeline's row stage. A restart whose row
     stage has another schema, under a pipeline with the same output,
     used to report success over buckets computed from two kinds of
-    rows. It now raises naming the staging marker, before it writes
-    anything."""
+    rows. It now raises naming a done record and its
+    ``rows_schema_sha256``, before it writes anything."""
     import os
 
     import pyspark.sql.functions as F
@@ -364,16 +368,100 @@ def test_restart_with_other_row_stage_is_refused(spark, transcripts, tmp_path):
     with pytest.raises(RuntimeError, match="injected failure"):
         r.run(transcripts, pit_features, fail_after=1)
     before = sorted(os.listdir(f"{tmp}/out_rerow"))
-    marker = f"{tmp}/out_rerow/_staged/_stage.json"
     with pytest.raises(
         ValueError,
-        match=f"{re.escape(marker)} was written by a row stage.*new output and checkpoint dirs",
+        match=r"cp_rerow/bucket=\d+-attempt=1\.json was written with "
+        r"rows_schema_sha256=.*new output and checkpoint dirs",
     ):
         r.run(transcripts, wider)
     assert sorted(os.listdir(f"{tmp}/out_rerow")) == before
     # the original pipeline still resumes from its snapshot
     s = r.run(transcripts, pit_features)
     assert s["computed"] == 2 and s["staged_writes"] == 0
+
+
+def test_prebucketed_restart_over_other_input_files_is_refused(
+    spark, transcripts, tmp_path
+):
+    """A pre-bucketed source is never staged, so it had no input check:
+    a job killed over one ``__bucket=`` layout and restarted over a copy
+    of it at another path used to report success over two snapshots.
+    The restart now raises naming a done record and its
+    ``input_files_sha256``, before it writes anything."""
+    import os
+    import shutil
+
+    from dane_visual_feature_extraction_worker_spark.checkpoint import bucket_of
+
+    tmp = str(tmp_path)
+    transcripts.withColumn("__bucket", bucket_of("conv_id", 4)).write.partitionBy(
+        "__bucket"
+    ).parquet(f"{tmp}/pre")
+    shutil.copytree(f"{tmp}/pre", f"{tmp}/pre_copy")
+    r = _runner(spark, tmp, "premoved", n_buckets=4)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        r.run(spark.read.parquet(f"{tmp}/pre"), pit_features, fail_after=2)
+    before = sorted(os.listdir(f"{tmp}/out_premoved"))
+    with pytest.raises(
+        ValueError,
+        match=r"cp_premoved/bucket=\d+-attempt=1\.json was written with "
+        r"input_files_sha256=.*new output and checkpoint dirs",
+    ):
+        r.run(spark.read.parquet(f"{tmp}/pre_copy"), pit_features)
+    assert sorted(os.listdir(f"{tmp}/out_premoved")) == before
+    # the original input still resumes
+    s = r.run(spark.read.parquet(f"{tmp}/pre"), pit_features)
+    assert s["skipped"] == 2 and s["computed"] == 2 and s["staged_writes"] == 0
+
+
+def test_stage_marker_is_only_a_cache(spark, transcripts, tmp_path):
+    """Only done records can put a second input into the table. With
+    none left, a marker written for other input files only says the
+    snapshot is stale: a restart over moved input stages again and
+    gives the one-shot table. It used to raise naming the marker."""
+    import shutil
+
+    tmp = str(tmp_path)
+    transcripts.write.parquet(f"{tmp}/in")
+    shutil.copytree(f"{tmp}/in", f"{tmp}/in_copy")
+    r = _runner(spark, tmp, "stale", n_buckets=4)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        r.run(spark.read.parquet(f"{tmp}/in"), pit_features, fail_after=1)
+    shutil.rmtree(f"{tmp}/cp_stale")
+    s = r.run(spark.read.parquet(f"{tmp}/in_copy"), pit_features)
+    assert s["computed"] == 4 and s["staged_writes"] == 1 and s["source_scans"] == 1
+
+    ref = _runner(spark, tmp, "stale_ref", n_buckets=4)
+    ref.run(spark.read.parquet(f"{tmp}/in"), pit_features)
+    (ka, fa), (kb, fb) = _sorted_features(ref), _sorted_features(r)
+    assert ka.equals(kb) and (fa == fb).all()
+
+
+def test_checkpointed_bucket_declares_the_one_shot_schema(spark, transcripts, tmp_path):
+    """A bucket written from the staged rows used to declare ``f3`` and
+    ``f15`` nullable in its parquet footer, where the one-shot write
+    declares them required: a parquet read of ``_staged`` makes every
+    column nullable."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from dane_visual_feature_extraction_worker_spark.plans.pipeline import (
+        pit_features as pit_features_flat,
+    )
+
+    tmp = str(tmp_path)
+    transcripts.write.parquet(f"{tmp}/in")
+    src = spark.read.parquet(f"{tmp}/in")
+    pit_features_flat(src).write.parquet(f"{tmp}/one_shot")
+    r = _runner(spark, tmp, "footer", n_buckets=2)
+    assert r.run(src, pit_features_flat)["staged_writes"] == 1
+
+    def footer(d):
+        schema = pq.read_schema(sorted(glob.glob(f"{d}/part-*.parquet"))[0])
+        return [(f.name, str(f.type), f.nullable) for f in schema]
+
+    assert footer(f"{tmp}/out_footer/bucket=0") == footer(f"{tmp}/one_shot")
 
 
 def _final_plan_nodes(plan: str) -> list[str]:
@@ -467,13 +555,15 @@ def test_runner_refuses_fewer_than_one_bucket(spark, tmp_path, n_buckets):
 
 
 @pytest.mark.parametrize(
-    "damage", ["garbled_record", "checksum_mismatch", "old_parquet_part"]
+    "damage",
+    ["garbled_record", "checksum_mismatch", "old_parquet_part", "lineage_not_an_object"],
 )
 def test_unreadable_checkpoint_dir_raises_naming_the_file(
     spark, transcripts, tmp_path, damage
 ):
     """An existing but unreadable checkpoint dir must not read as
     "nothing done" (which silently recomputes everything)."""
+    import json
     import os
     import re
 
@@ -484,9 +574,11 @@ def test_unreadable_checkpoint_dir_raises_naming_the_file(
     cp = f"{tmp}/cp_bad"
     if damage != "old_parquet_part":
         bad = [n for n in os.listdir(cp) if not n.startswith((".", "_"))][0]
+        with open(os.path.join(cp, bad)) as f:
+            text = json.dumps({**json.load(f), "lineage": "[]"})
         with open(os.path.join(cp, bad), "w") as f:
-            f.write("{not json")
-        if damage == "garbled_record" and os.path.exists(f"{cp}/.{bad}.crc"):
+            f.write(text if damage == "lineage_not_an_object" else "{not json")
+        if damage != "checksum_mismatch" and os.path.exists(f"{cp}/.{bad}.crc"):
             os.remove(f"{cp}/.{bad}.crc")
     else:
         bad = "part-00000-0000.snappy.parquet"
