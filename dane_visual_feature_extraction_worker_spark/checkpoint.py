@@ -50,8 +50,10 @@ Each bucket's job then runs only ``windows`` over its staged rows. The
 snapshot is a cache: a later attempt reads it instead of the source
 when the marker holds this run's identity and every pending bucket,
 and stages again otherwise; only a marker it cannot read raises. A
-``__bucket`` source is never staged: each bucket runs the whole
-pipeline (see ``run``). A successful attempt deletes ``_staged``.
+successful attempt deletes ``_staged``. Buckets are always assigned by
+``bucket_of``: a source's own ``__bucket`` column is ignored, so a
+layout keyed by anything but the entity cannot split an entity's
+history across buckets.
 
 Each attempt names its Spark jobs by their description: the staging
 write runs as ``pit:<attempt>:stage`` and each bucket's write as
@@ -290,10 +292,9 @@ class CheckpointedRunner:
         - ``skipped``: buckets already done before this attempt;
         - ``computed``: buckets this attempt wrote and recorded;
         - ``n_buckets``: the runner's bucket count;
-        - ``source_scans``: full scans of ``source`` this attempt made: 1
-          when it staged, 0 when it reused the staged snapshot, found the
-          source pre-bucketed or had nothing pending;
-        - ``staged_writes``: writes of ``_staged`` (0 or 1);
+        - ``staged_writes``: writes of ``_staged``, each one full scan of
+          ``source``: 1 when this attempt staged, 0 when it reused the
+          staged snapshot or had nothing pending;
         - ``output_rows``: rows over every done bucket, from the records;
         - ``ms``: the attempt's wall time.
 
@@ -319,71 +320,38 @@ class CheckpointedRunner:
         attempt = 1 + max((r["attempt"] for r in records), default=0)
         # each bucket reads its staged rows by a partition prune on
         # ``__bucket``: filtering a computed bucket column instead would
-        # scan the source once per bucket (VERDICT r1). A PRE-BUCKETED
-        # source (a hive ``__bucket=`` layout or an Iceberg bucket
-        # transform) already prunes that way, so it is not staged
-        # (VERDICT r2) and each bucket runs the whole pipeline. The
-        # leading ``_`` keeps ``_staged`` out of ``result()``.
+        # scan the source once per bucket (VERDICT r1). A source's own
+        # ``__bucket`` column was dropped above, so every source is
+        # staged and bucketed by ``bucket_of``. The leading ``_`` keeps
+        # ``_staged`` out of ``result()``.
         staged_dir = os.path.join(self.output_dir, "_staged")
         staged_writes = 0
         if pending:
-            if "__bucket" in source.columns:
-                # Validate the pre-bucketed contract BEFORE trusting it
-                # (ADVICE r3): a source bucketed with a different
-                # n_buckets (e.g. 0..511 against a 256-bucket runner)
-                # would silently drop every row whose bucket is out of
-                # range while the run reports success, and a null
-                # ``__bucket`` row matches no bucket (min/max skip
-                # nulls, so they need their own count). One cheap agg —
-                # for a hive ``__bucket=`` layout it reads partition
-                # values, no data column.
-                lo, hi, nulls = source.agg(
-                    F.min("__bucket"),
-                    F.max("__bucket"),
-                    F.count(F.when(F.col("__bucket").isNull(), 1)),
-                ).collect()[0]
-                if nulls:
-                    raise ValueError(
-                        f"pre-bucketed source has {nulls} rows with a null "
-                        f"__bucket, which no bucket would process; assign "
-                        f"them a bucket in 0..{self.n_buckets - 1}"
+            src = input_rows.withColumn(
+                "__bucket", bucket_of(self.entity_col, self.n_buckets)
+            )
+            if not self._staged_covers(staged_dir, pending, identity):
+                # no marker may outlive the snapshot it describes
+                fs, p = self._path(staged_dir, _STAGE_MARKER)
+                fs.delete(p, False)
+                if len(pending) < self.n_buckets:
+                    src = src.where(F.col("__bucket").isin(pending))
+                with _job_description(self.spark, f"pit:{attempt}:stage"):
+                    src.write.mode("overwrite").partitionBy("__bucket").parquet(
+                        staged_dir
                     )
-                if lo is not None and (lo < 0 or hi >= self.n_buckets):
-                    raise ValueError(
-                        f"pre-bucketed source has __bucket range "
-                        f"[{lo}, {hi}] incompatible with n_buckets="
-                        f"{self.n_buckets}; re-bucket the source or "
-                        f"construct the runner with the matching "
-                        f"n_buckets"
-                    )
-                staged, job = source, pipeline
-            else:
-                src = input_rows.withColumn(
-                    "__bucket", bucket_of(self.entity_col, self.n_buckets)
-                )
-                if not self._staged_covers(staged_dir, pending, identity):
-                    # no marker may outlive the snapshot it describes
-                    fs, p = self._path(staged_dir, _STAGE_MARKER)
-                    fs.delete(p, False)
-                    if len(pending) < self.n_buckets:
-                        src = src.where(F.col("__bucket").isin(pending))
-                    with _job_description(self.spark, f"pit:{attempt}:stage"):
-                        src.write.mode("overwrite").partitionBy("__bucket").parquet(
-                            staged_dir
-                        )
-                    marker = json.dumps({**identity, "buckets": pending})
-                    self._publish(staged_dir, _STAGE_MARKER, marker)
-                    staged_writes = 1
-                # schema-providing read: a zero-row staged dir (empty
-                # source / empty pending buckets) has no part files to
-                # infer from and would raise (ADVICE r2)
-                staged = self.spark.read.schema(src.schema).parquet(staged_dir)
-                job = windows
+                marker = json.dumps({**identity, "buckets": pending})
+                self._publish(staged_dir, _STAGE_MARKER, marker)
+                staged_writes = 1
+            # schema-providing read: a zero-row staged dir (empty source /
+            # empty pending buckets) has no part files to infer from and
+            # would raise (ADVICE r2)
+            staged = self.spark.read.schema(src.schema).parquet(staged_dir)
         completed = 0
         for b in pending:
             t0 = time.monotonic()
             part = staged.where(F.col("__bucket") == b).drop("__bucket")
-            out = job(part)
+            out = windows(part)
             path = os.path.join(self.output_dir, f"bucket={b}")
             # rows observed DURING the sink write: counting before or
             # after the write would be a second pass over the bucket
@@ -420,7 +388,6 @@ class CheckpointedRunner:
             "skipped": self.n_buckets - len(pending),
             "computed": completed,
             "n_buckets": self.n_buckets,
-            "source_scans": staged_writes,
             "staged_writes": staged_writes,
             "output_rows": sum(done_rows.values()),
             "ms": (time.monotonic() - t_run) * 1000.0,

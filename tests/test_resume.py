@@ -82,7 +82,7 @@ def test_source_scanned_once_per_attempt(spark, transcripts, tmp_path):
 
     r = _runner(spark, str(tmp_path), "scan1", n_buckets=5)
     s = r.run(src, pit_features)
-    assert s["computed"] == 5 and s["source_scans"] == 1
+    assert s["computed"] == 5 and s["staged_writes"] == 1
     assert acc.value == n_rows, (
         f"source scanned {acc.value / n_rows:.1f}x, expected exactly once"
     )
@@ -112,16 +112,16 @@ def test_source_scanned_once_per_job(spark, transcripts, tmp_path):
         r.run(src, pit_features, fail_after=2)
     s = r.run(src, pit_features)
     assert s["skipped"] == 2 and s["computed"] == 3
-    assert s["staged_writes"] == 0 and s["source_scans"] == 0
+    assert s["staged_writes"] == 0
     assert acc.value == n_rows, (
         f"source scanned {acc.value / n_rows:.2f}x over the job, expected once"
     )
     assert r.result().count() == n_rows
 
 
-def _sorted_features(runner):
+def _sorted_features(df):
     key = ["conv_id", "ts", "turn_idx"]
-    pdf = runner.result().toPandas().sort_values(key).reset_index(drop=True)
+    pdf = df.toPandas().sort_values(key).reset_index(drop=True)
     return pdf[key], np.stack(pdf["features"].to_numpy())
 
 
@@ -137,40 +137,51 @@ def test_restart_without_stage_marker_restages(spark, transcripts, tmp_path):
         r.run(transcripts, pit_features, fail_after=2)
     os.remove(f"{tmp}/out_nomarker/_staged/_stage.json")
     s = r.run(transcripts, pit_features)
-    assert s["computed"] == 2 and s["staged_writes"] == 1 and s["source_scans"] == 1
+    assert s["computed"] == 2 and s["staged_writes"] == 1
     assert not os.path.exists(f"{tmp}/out_nomarker/_staged")
 
     ref = _runner(spark, tmp, "nomarker_ref", n_buckets=4)
     ref.run(transcripts, pit_features)
-    (ka, fa), (kb, fb) = _sorted_features(ref), _sorted_features(r)
+    (ka, fa), (kb, fb) = _sorted_features(ref.result()), _sorted_features(r.result())
     assert ka.equals(kb) and (fa == fb).all()
 
 
 def test_restart_over_other_input_files_is_refused(spark, transcripts, tmp_path):
-    """A job killed over one parquet dir and restarted over a copy of it
-    at another path used to report success over a table mixing two
+    """A job killed over one input dir and restarted over a copy of it at
+    another path used to report success over a table mixing two
     snapshots. The restart now raises naming a done record and its
-    ``input_files_sha256``, before it writes anything."""
+    ``input_files_sha256``, before it writes anything, for a plain
+    parquet dir and a hive ``__bucket=`` layout alike."""
     import os
     import shutil
 
+    from dane_visual_feature_extraction_worker_spark.checkpoint import bucket_of
+
     tmp = str(tmp_path)
-    transcripts.write.parquet(f"{tmp}/in")
-    shutil.copytree(f"{tmp}/in", f"{tmp}/in_copy")
-    r = _runner(spark, tmp, "moved", n_buckets=4)
-    with pytest.raises(RuntimeError, match="injected failure"):
-        r.run(spark.read.parquet(f"{tmp}/in"), pit_features, fail_after=2)
-    before = sorted(os.listdir(f"{tmp}/out_moved"))
-    with pytest.raises(
-        ValueError,
-        match=r"cp_moved/bucket=\d+-attempt=1\.json was written with "
-        r"input_files_sha256=.*new output and checkpoint dirs",
-    ):
-        r.run(spark.read.parquet(f"{tmp}/in_copy"), pit_features)
-    assert sorted(os.listdir(f"{tmp}/out_moved")) == before
-    # the original input still resumes from its snapshot
-    s = r.run(spark.read.parquet(f"{tmp}/in"), pit_features)
-    assert s["computed"] == 2 and s["staged_writes"] == 0
+    writers = {
+        "plain": transcripts.write,
+        "bucket_layout": transcripts.withColumn(
+            "__bucket", bucket_of("conv_id", 4)
+        ).write.partitionBy("__bucket"),
+    }
+    for layout, writer in writers.items():
+        src, tag = f"{tmp}/in_{layout}", f"moved_{layout}"
+        writer.parquet(src)
+        shutil.copytree(src, f"{src}_copy")
+        r = _runner(spark, tmp, tag, n_buckets=4)
+        with pytest.raises(RuntimeError, match="injected failure"):
+            r.run(spark.read.parquet(src), pit_features, fail_after=2)
+        before = sorted(os.listdir(f"{tmp}/out_{tag}"))
+        with pytest.raises(
+            ValueError,
+            match=rf"cp_{tag}/bucket=\d+-attempt=1\.json was written with "
+            r"input_files_sha256=.*new output and checkpoint dirs",
+        ):
+            r.run(spark.read.parquet(f"{src}_copy"), pit_features)
+        assert sorted(os.listdir(f"{tmp}/out_{tag}")) == before, layout
+        # the original input still resumes from its snapshot
+        s = r.run(spark.read.parquet(src), pit_features)
+        assert s["computed"] == 2 and s["staged_writes"] == 0, layout
 
 
 def test_unreadable_stage_marker_raises_naming_it(spark, transcripts, tmp_path):
@@ -216,53 +227,6 @@ def test_runner_counts_rows_in_the_write_pass(spark, transcripts, tmp_path):
     assert r.result().count() == n_rows
 
 
-def test_prebucketed_source_skips_staging(spark, transcripts, tmp_path):
-    """VERDICT r2: a source already partitioned by ``__bucket`` (hive
-    layout / Iceberg bucket transform) must not be re-staged — zero
-    staging writes, identical output, resume semantics unchanged."""
-    import os
-
-    import numpy as np
-    import pyspark.sql.functions as F
-
-    from dane_visual_feature_extraction_worker_spark.checkpoint import bucket_of
-
-    tmp = str(tmp_path)
-    n_buckets = 5
-    pre_dir = f"{tmp}/prebucketed"
-    transcripts.withColumn("__bucket", bucket_of("conv_id", n_buckets)).write.mode(
-        "overwrite"
-    ).partitionBy("__bucket").parquet(pre_dir)
-    pre = spark.read.parquet(pre_dir)
-
-    r = _runner(spark, tmp, "preb", n_buckets=n_buckets)
-    s = r.run(pre, pit_features)
-    assert s["computed"] == n_buckets
-    assert s["staged_writes"] == 0
-    assert not os.path.exists(f"{tmp}/out_preb/_staged")
-
-    # resume path on a pre-bucketed source: crash, then finish
-    r2 = _runner(spark, tmp, "preb2", n_buckets=n_buckets)
-    with pytest.raises(RuntimeError, match="injected failure"):
-        r2.run(pre, pit_features, fail_after=2)
-    s2 = r2.run(pre, pit_features)
-    assert s2["skipped"] == 2 and s2["computed"] == 3
-    assert s2["staged_writes"] == 0
-
-    # output identical to the staged (non-prebucketed) run
-    ref = _runner(spark, tmp, "preb_ref", n_buckets=n_buckets)
-    sref = ref.run(transcripts, pit_features)
-    assert sref["staged_writes"] == 1
-    key = ["conv_id", "ts", "turn_idx"]
-    a = ref.result().toPandas().sort_values(key).reset_index(drop=True)
-    b = r.result().toPandas().sort_values(key).reset_index(drop=True)
-    c = r2.result().toPandas().sort_values(key).reset_index(drop=True)
-    assert len(a) == len(b) == len(c) == transcripts.count()
-    fa = np.stack(a["features"].to_numpy())
-    for other in (b, c):
-        assert (fa == np.stack(other["features"].to_numpy())).all()
-
-
 def test_empty_source_completes(spark, transcripts, tmp_path):
     """ADVICE r2: a zero-row source used to crash the staged read-back
     ('Unable to infer schema'); a schema-providing read fixes it."""
@@ -271,6 +235,56 @@ def test_empty_source_completes(spark, transcripts, tmp_path):
     s = r.run(empty, pit_features)
     assert s["computed"] == 3
     assert r.result().count() == 0
+
+
+@pytest.mark.parametrize("layout", ["split_conversations", "wider", "null", "matching"])
+def test_source_bucket_column_is_ignored(spark, transcripts, tmp_path, layout):
+    """A source with its own ``__bucket`` column used to skip staging,
+    each bucket running the whole pipeline over ``__bucket = b``. A
+    layout keyed by ``turn_idx % 2`` split every conversation across
+    buckets and reported success over features from half a history; a
+    column wider than ``n_buckets`` or holding nulls raised. The runner
+    now ignores the column and buckets by ``bucket_of``: each layout is
+    staged once by the attempt that crashes after 2 buckets, the
+    restart reads that snapshot, and the table equals the one-shot
+    ``pit_features``."""
+    import json
+    import os
+
+    import pyspark.sql.functions as F
+
+    from dane_visual_feature_extraction_worker_spark.checkpoint import bucket_of
+
+    tmp = str(tmp_path)
+    n_buckets = 8 if layout == "wider" else 4
+    by_conv = bucket_of("conv_id", n_buckets)
+    columns = {
+        "split_conversations": F.col("turn_idx") % 2,
+        "wider": bucket_of("conv_id", 16),
+        "null": F.when(by_conv != 0, by_conv),
+        "matching": by_conv,
+    }
+    src = transcripts.withColumn("__bucket", columns[layout])
+    if layout != "wider":  # a hive ``__bucket=`` layout
+        src.write.partitionBy("__bucket").parquet(f"{tmp}/in")
+        src = spark.read.parquet(f"{tmp}/in")
+    r = _runner(spark, tmp, layout, n_buckets=n_buckets)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        r.run(src, pit_features, fail_after=2)
+    marker = f"{tmp}/out_{layout}/_staged/_stage.json"
+    staged = None
+    if os.path.exists(marker):
+        with open(marker) as f:
+            staged = json.load(f)["buckets"]
+    s = r.run(src, pit_features)
+    assert s["skipped"] == 2 and s["computed"] == n_buckets - 2
+    (ka, fa), (kb, fb) = (
+        _sorted_features(pit_features(transcripts)),
+        _sorted_features(r.result()),
+    )
+    assert ka.equals(kb) and (fa == fb).all()
+    # one staging write per job: the crashed attempt's
+    assert staged == list(range(n_buckets)) and s["staged_writes"] == 0
 
 
 def test_checkpoint_records_readable_as_json_table(spark, transcripts, tmp_path):
@@ -287,21 +301,6 @@ def test_checkpoint_records_readable_as_json_table(spark, transcripts, tmp_path)
     ) == list(range(8))
     assert not [n for n in os.listdir(f"{tmp_path}/cp_json") if n.startswith("_")]
     assert r.load_checkpoints().where("status = 'done'").count() == 8
-
-
-def test_prebucketed_source_rejects_mismatched_buckets(
-    spark, transcripts, tmp_path
-):
-    """A source bucketed 0..15 against an 8-bucket runner previously
-    dropped half the corpus silently (ADVICE r3) — must raise."""
-    import pytest
-
-    from dane_visual_feature_extraction_worker_spark.checkpoint import bucket_of
-
-    src = transcripts.withColumn("__bucket", bucket_of("conv_id", 16))
-    r = _runner(spark, str(tmp_path), "mismatch", n_buckets=8)
-    with pytest.raises(ValueError, match="incompatible with n_buckets"):
-        r.run(src, lambda df: df)
 
 
 def test_restart_with_other_bucket_count_is_refused(spark, transcripts, tmp_path):
@@ -380,40 +379,6 @@ def test_restart_with_other_row_stage_is_refused(spark, transcripts, tmp_path):
     assert s["computed"] == 2 and s["staged_writes"] == 0
 
 
-def test_prebucketed_restart_over_other_input_files_is_refused(
-    spark, transcripts, tmp_path
-):
-    """A pre-bucketed source is never staged, so it had no input check:
-    a job killed over one ``__bucket=`` layout and restarted over a copy
-    of it at another path used to report success over two snapshots.
-    The restart now raises naming a done record and its
-    ``input_files_sha256``, before it writes anything."""
-    import os
-    import shutil
-
-    from dane_visual_feature_extraction_worker_spark.checkpoint import bucket_of
-
-    tmp = str(tmp_path)
-    transcripts.withColumn("__bucket", bucket_of("conv_id", 4)).write.partitionBy(
-        "__bucket"
-    ).parquet(f"{tmp}/pre")
-    shutil.copytree(f"{tmp}/pre", f"{tmp}/pre_copy")
-    r = _runner(spark, tmp, "premoved", n_buckets=4)
-    with pytest.raises(RuntimeError, match="injected failure"):
-        r.run(spark.read.parquet(f"{tmp}/pre"), pit_features, fail_after=2)
-    before = sorted(os.listdir(f"{tmp}/out_premoved"))
-    with pytest.raises(
-        ValueError,
-        match=r"cp_premoved/bucket=\d+-attempt=1\.json was written with "
-        r"input_files_sha256=.*new output and checkpoint dirs",
-    ):
-        r.run(spark.read.parquet(f"{tmp}/pre_copy"), pit_features)
-    assert sorted(os.listdir(f"{tmp}/out_premoved")) == before
-    # the original input still resumes
-    s = r.run(spark.read.parquet(f"{tmp}/pre"), pit_features)
-    assert s["skipped"] == 2 and s["computed"] == 2 and s["staged_writes"] == 0
-
-
 def test_stage_marker_is_only_a_cache(spark, transcripts, tmp_path):
     """Only done records can put a second input into the table. With
     none left, a marker written for other input files only says the
@@ -429,11 +394,11 @@ def test_stage_marker_is_only_a_cache(spark, transcripts, tmp_path):
         r.run(spark.read.parquet(f"{tmp}/in"), pit_features, fail_after=1)
     shutil.rmtree(f"{tmp}/cp_stale")
     s = r.run(spark.read.parquet(f"{tmp}/in_copy"), pit_features)
-    assert s["computed"] == 4 and s["staged_writes"] == 1 and s["source_scans"] == 1
+    assert s["computed"] == 4 and s["staged_writes"] == 1
 
     ref = _runner(spark, tmp, "stale_ref", n_buckets=4)
     ref.run(spark.read.parquet(f"{tmp}/in"), pit_features)
-    (ka, fa), (kb, fb) = _sorted_features(ref), _sorted_features(r)
+    (ka, fa), (kb, fb) = _sorted_features(ref.result()), _sorted_features(r.result())
     assert ka.equals(kb) and (fa == fb).all()
 
 
@@ -504,27 +469,6 @@ def test_buckets_run_only_the_windowed_stage(spark, transcripts, tmp_path):
         assert len(scans) == 1, desc
         assert "/out_stages/_staged]" in scans[0], desc
         assert "__bag:array<float>" in scans[0], desc
-
-
-def test_prebucketed_source_rejects_null_buckets(spark, transcripts, tmp_path):
-    """A hive ``__bucket=`` source with null-bucket rows used to report
-    success without them: min/max skip nulls and ``__bucket == b``
-    selects none of them."""
-    import pyspark.sql.functions as F
-
-    from dane_visual_feature_extraction_worker_spark.checkpoint import bucket_of
-
-    pre_dir = f"{tmp_path}/nullbucket"
-    b = bucket_of("conv_id", 4)
-    transcripts.withColumn(
-        "__bucket", F.when(b != 0, b)
-    ).write.partitionBy("__bucket").parquet(pre_dir)
-    pre = spark.read.parquet(pre_dir)
-    nulls = pre.where(F.col("__bucket").isNull()).count()
-    assert 0 < nulls < transcripts.count()
-    r = _runner(spark, str(tmp_path), "nullb", n_buckets=4)
-    with pytest.raises(ValueError, match=f"{nulls} rows with a null __bucket"):
-        r.run(pre, lambda df: df)
 
 
 def test_runner_refuses_null_conv_id(spark, transcripts, tmp_path):
