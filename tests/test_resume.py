@@ -146,42 +146,58 @@ def test_restart_without_stage_marker_restages(spark, transcripts, tmp_path):
     assert ka.equals(kb) and (fa == fb).all()
 
 
+def _refuse_restart_over_copied_input(spark, src_df, write, tmp, tag):
+    """Run over ``src_df`` written by ``write`` until a failure after two
+    buckets, then restart over a copy of those files at another path: the
+    restart must raise naming a done record and its
+    ``input_files_sha256`` before it writes anything, and the original
+    files must still resume."""
+    import os
+    import shutil
+
+    src = f"{tmp}/in_{tag}"
+    write(src_df, src)
+    shutil.copytree(src, f"{src}_copy")
+    r = _runner(spark, tmp, tag, n_buckets=4)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        r.run(spark.read.parquet(src), pit_features, fail_after=2)
+    before = sorted(os.listdir(f"{tmp}/out_{tag}"))
+    with pytest.raises(
+        ValueError,
+        match=rf"cp_{tag}/bucket=\d+-attempt=1\.json was written with "
+        r"input_files_sha256=.*new output and checkpoint dirs",
+    ):
+        r.run(spark.read.parquet(f"{src}_copy"), pit_features)
+    assert sorted(os.listdir(f"{tmp}/out_{tag}")) == before
+    # the original input still resumes from its snapshot
+    s = r.run(spark.read.parquet(src), pit_features)
+    assert s["skipped"] == 2 and s["computed"] == 2 and s["staged_writes"] == 0
+
+
 def test_restart_over_other_input_files_is_refused(spark, transcripts, tmp_path):
     """A job killed over one input dir and restarted over a copy of it at
     another path used to report success over a table mixing two
     snapshots. The restart now raises naming a done record and its
-    ``input_files_sha256``, before it writes anything, for a plain
-    parquet dir and a hive ``__bucket=`` layout alike."""
-    import os
-    import shutil
+    ``input_files_sha256``, before it writes anything."""
+    _refuse_restart_over_copied_input(
+        spark, transcripts, lambda df, path: df.write.parquet(path),
+        str(tmp_path), "moved",
+    )
 
+
+def test_prebucketed_restart_over_other_input_files_is_refused(
+    spark, transcripts, tmp_path
+):
+    """A hive ``__bucket=`` layout is staged like plain parquet, so a
+    restart over a copy of it at another path is refused the same way."""
     from dane_visual_feature_extraction_worker_spark.checkpoint import bucket_of
 
-    tmp = str(tmp_path)
-    writers = {
-        "plain": transcripts.write,
-        "bucket_layout": transcripts.withColumn(
-            "__bucket", bucket_of("conv_id", 4)
-        ).write.partitionBy("__bucket"),
-    }
-    for layout, writer in writers.items():
-        src, tag = f"{tmp}/in_{layout}", f"moved_{layout}"
-        writer.parquet(src)
-        shutil.copytree(src, f"{src}_copy")
-        r = _runner(spark, tmp, tag, n_buckets=4)
-        with pytest.raises(RuntimeError, match="injected failure"):
-            r.run(spark.read.parquet(src), pit_features, fail_after=2)
-        before = sorted(os.listdir(f"{tmp}/out_{tag}"))
-        with pytest.raises(
-            ValueError,
-            match=rf"cp_{tag}/bucket=\d+-attempt=1\.json was written with "
-            r"input_files_sha256=.*new output and checkpoint dirs",
-        ):
-            r.run(spark.read.parquet(f"{src}_copy"), pit_features)
-        assert sorted(os.listdir(f"{tmp}/out_{tag}")) == before, layout
-        # the original input still resumes from its snapshot
-        s = r.run(spark.read.parquet(src), pit_features)
-        assert s["computed"] == 2 and s["staged_writes"] == 0, layout
+    _refuse_restart_over_copied_input(
+        spark,
+        transcripts.withColumn("__bucket", bucket_of("conv_id", 4)),
+        lambda df, path: df.write.partitionBy("__bucket").parquet(path),
+        str(tmp_path), "premoved",
+    )
 
 
 def test_unreadable_stage_marker_raises_naming_it(spark, transcripts, tmp_path):
