@@ -9,7 +9,7 @@ dane-visual-feature-extraction-worker) as a distributed Spark engine:
 - windowed features (lag/lead, rolling, backfill, sessionize) (reference
   precedent: misc/spectrogram_example2/get_sepectogram.py:22-55 anchored
   windows),
-- a D=32 feature kernel: a pure-Catalyst window plan (zero Python),
+- a D=32 feature kernel: a JVM-only window plan (zero Python),
   bit-identical to a vectorized numpy oracle (reference:
   feature_extraction.py:17-32 apply_model),
 - checkpointed, resumable execution with per-partition lineage/metrics

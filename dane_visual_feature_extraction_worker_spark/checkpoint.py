@@ -7,9 +7,10 @@ Generalizes the reference's control plane:
 - per-step timed Provenance records persisted as JSON
   (models.py:19-43, provenance.py:19-43) → here: one small JSON record
   per bucket in ``checkpoint_dir`` with rows/bytes/ms/status + a JSON
-  lineage blob, plus one ``_provenance_attempt<n>.json`` per successful
-  attempt in ``output_dir`` holding the summary ``run()`` returns (no
-  separate provenance tracker);
+  lineage blob, plus one ``_provenance_attempt<n>.json`` per attempt in
+  ``output_dir`` holding the summary ``run()`` returns, or, for an
+  attempt that raised, its summary so far and the error (no separate
+  provenance tracker);
 - result registration in an index (worker.py:93-114 save_to_dane_index)
   → here: the checkpoint record IS the registration.
 
@@ -298,6 +299,11 @@ class CheckpointedRunner:
         - ``output_rows``: rows over every done bucket, from the records;
         - ``ms``: the attempt's wall time.
 
+        An attempt that raises once its records are read (a failed
+        staging or bucket write, ``fail_after``) writes its summary so
+        far too, with ``error``, the exception's type and message, then
+        re-raises the exception unchanged.
+
         ``fail_after``: crash injection for resume tests — raises after
         N buckets complete (simulates a killed job).
         """
@@ -325,76 +331,88 @@ class CheckpointedRunner:
         # staged and bucketed by ``bucket_of``. The leading ``_`` keeps
         # ``_staged`` out of ``result()``.
         staged_dir = os.path.join(self.output_dir, "_staged")
-        staged_writes = 0
-        if pending:
-            src = input_rows.withColumn(
-                "__bucket", bucket_of(self.entity_col, self.n_buckets)
-            )
-            if not self._staged_covers(staged_dir, pending, identity):
-                # no marker may outlive the snapshot it describes
-                fs, p = self._path(staged_dir, _STAGE_MARKER)
-                fs.delete(p, False)
-                if len(pending) < self.n_buckets:
-                    src = src.where(F.col("__bucket").isin(pending))
-                with _job_description(self.spark, f"pit:{attempt}:stage"):
-                    src.write.mode("overwrite").partitionBy("__bucket").parquet(
-                        staged_dir
-                    )
-                marker = json.dumps({**identity, "buckets": pending})
-                self._publish(staged_dir, _STAGE_MARKER, marker)
-                staged_writes = 1
-            # schema-providing read: a zero-row staged dir (empty source /
-            # empty pending buckets) has no part files to infer from and
-            # would raise (ADVICE r2)
-            staged = self.spark.read.schema(src.schema).parquet(staged_dir)
-        completed = 0
-        for b in pending:
-            t0 = time.monotonic()
-            part = staged.where(F.col("__bucket") == b).drop("__bucket")
-            out = windows(part)
-            path = os.path.join(self.output_dir, f"bucket={b}")
-            # rows observed DURING the sink write: counting before or
-            # after the write would be a second pass over the bucket
-            obs = Observation()
-            out = out.observe(obs, F.count(F.lit(1)).alias("rows"))
-            with _job_description(self.spark, f"pit:{attempt}:{b}"):
-                out.write.mode("overwrite").parquet(path)
-            rows = int(obs.get["rows"])
-            ms = (time.monotonic() - t0) * 1000.0
-            fs, p = self._path(path)
-            self._record(
-                {
-                    "bucket": b,
-                    "status": "done",
-                    "rows": rows,
-                    "bytes": fs.getContentSummary(p).getLength(),
-                    "ms": ms,
-                    "attempt": attempt,
-                    "lineage": json.dumps(
-                        {"step": "pipeline", "bucket": b, "attempt": attempt, **identity}
-                    ),
-                }
-            )
-            done_rows[b] = rows
-            completed += 1
-            if fail_after is not None and completed >= fail_after:
-                raise RuntimeError(f"injected failure after {completed} buckets")
+        staged_writes = completed = 0
+
+        def summary(**error: str) -> dict:
+            """The attempt summary, also written to its provenance file."""
+            out = {
+                "attempt": attempt,
+                "skipped": self.n_buckets - len(pending),
+                "computed": completed,
+                "n_buckets": self.n_buckets,
+                "staged_writes": staged_writes,
+                "output_rows": sum(done_rows.values()),
+                "ms": (time.monotonic() - t_run) * 1000.0,
+                **error,
+            }
+            fs, p = self._path(self.output_dir, f"_provenance_attempt{attempt}.json")
+            _write_text(fs, p, json.dumps(out, indent=2, sort_keys=True))
+            return out
+
+        try:
+            if pending:
+                src = input_rows.withColumn(
+                    "__bucket", bucket_of(self.entity_col, self.n_buckets)
+                )
+                if not self._staged_covers(staged_dir, pending, identity):
+                    # no marker may outlive the snapshot it describes
+                    fs, p = self._path(staged_dir, _STAGE_MARKER)
+                    fs.delete(p, False)
+                    if len(pending) < self.n_buckets:
+                        src = src.where(F.col("__bucket").isin(pending))
+                    with _job_description(self.spark, f"pit:{attempt}:stage"):
+                        src.write.mode("overwrite").partitionBy("__bucket").parquet(
+                            staged_dir
+                        )
+                    marker = json.dumps({**identity, "buckets": pending})
+                    self._publish(staged_dir, _STAGE_MARKER, marker)
+                    staged_writes = 1
+                # schema-providing read: a zero-row staged dir (empty source /
+                # empty pending buckets) has no part files to infer from and
+                # would raise (ADVICE r2)
+                staged = self.spark.read.schema(src.schema).parquet(staged_dir)
+            for b in pending:
+                t0 = time.monotonic()
+                part = staged.where(F.col("__bucket") == b).drop("__bucket")
+                out = windows(part)
+                path = os.path.join(self.output_dir, f"bucket={b}")
+                # rows observed DURING the sink write: counting before or
+                # after the write would be a second pass over the bucket
+                obs = Observation()
+                out = out.observe(obs, F.count(F.lit(1)).alias("rows"))
+                with _job_description(self.spark, f"pit:{attempt}:{b}"):
+                    out.write.mode("overwrite").parquet(path)
+                rows = int(obs.get["rows"])
+                ms = (time.monotonic() - t0) * 1000.0
+                fs, p = self._path(path)
+                self._record(
+                    {
+                        "bucket": b,
+                        "status": "done",
+                        "rows": rows,
+                        "bytes": fs.getContentSummary(p).getLength(),
+                        "ms": ms,
+                        "attempt": attempt,
+                        "lineage": json.dumps(
+                            {"step": "pipeline", "bucket": b, "attempt": attempt, **identity}
+                        ),
+                    }
+                )
+                done_rows[b] = rows
+                completed += 1
+                if fail_after is not None and completed >= fail_after:
+                    raise RuntimeError(f"injected failure after {completed} buckets")
+        except Exception as e:
+            # the attempt's own error is the one to raise, whether or
+            # not its summary could be written
+            with contextlib.suppress(Exception):
+                summary(error=f"{type(e).__name__}: {e}")
+            raise
         # success: staging no longer needed (a crashed attempt leaves it
         # and its marker for the next attempt to read)
         fs, p = self._path(staged_dir)
         fs.delete(p, True)
-        summary = {
-            "attempt": attempt,
-            "skipped": self.n_buckets - len(pending),
-            "computed": completed,
-            "n_buckets": self.n_buckets,
-            "staged_writes": staged_writes,
-            "output_rows": sum(done_rows.values()),
-            "ms": (time.monotonic() - t_run) * 1000.0,
-        }
-        fs, p = self._path(self.output_dir, f"_provenance_attempt{attempt}.json")
-        _write_text(fs, p, json.dumps(summary, indent=2, sort_keys=True))
-        return summary
+        return summary()
 
     def result(self) -> DataFrame:
         return self.spark.read.parquet(self.output_dir)

@@ -11,20 +11,21 @@ Ours replaces the torch forward pass with deterministic, model-free
 feature math (FIXTURES.md §5) so golden fixtures reproduce on any
 machine. There is one engine implementation and one oracle:
 
-- ``feature_vectors_windows``: the engine. A pure-Catalyst plan in two
+- ``feature_vectors_windows``: the engine. A JVM-only plan in two
   stages split at its exchange:
   - ``turn_rows``, the row stage: text features computed map-side
-    (plain columns and an ``array<float>`` bag, from one interpreted
-    pass over each turn's tokens). It is row-local, so
-    ``CheckpointedRunner`` stages its output once per job;
+    (plain columns and an ``array<float>`` bag). One compiled JVM
+    function, ``token_bag`` (``TokenBag.java``, compiled in the driver
+    by Spark's bundled Janino), splits, hashes and counts each turn's
+    tokens in one pass. It is row-local, so ``CheckpointedRunner``
+    stages its output once per job;
   - ``window_features``: ONE hash exchange on the entity key, one
     sort, every output column a running-window prefix aggregate over
     (conv_id ORDER BY ts, turn_idx).
-  No Python stage, every Project but the tokenizer in whole-stage
-  codegen. Its select lists do not depend on the input, so they are
-  built and sent to the JVM once per process (``_text_columns``,
-  ``_window_columns``) and a call only replays the plan's ~11
-  DataFrame calls;
+  No Python stage, every Project in whole-stage codegen. Its select
+  lists do not depend on the input, so they are built and sent to the
+  JVM once per process (``_text_columns``, ``_window_columns``) and a
+  call only replays the plan's ~10 DataFrame calls;
 - ``compute_features_numeric``: the numpy oracle over
   ``with_text_features`` rows. It runs the same sequential double
   arithmetic, so the engine must match it bit for bit
@@ -53,7 +54,8 @@ ts <= anchor:
   f14 seconds_since_session_start
   f15 words_this_turn
   f16..f31  16-dim hashed token bag of current turn text (token ->
-            bucket = crc32(utf8(token)) mod 16, count, l2-normalized;
+            bucket = crc32(utf8(token)) mod 16, count, l2-normalized,
+            all in ``token_bag``;
             crc32 because the JVM computes it ~30% cheaper than md5 on
             the flagship (measured, BENCH/BASELINE.md r5) — the DuckDB
             oracle replays the SAME CRC-32 with a table-driven
@@ -63,7 +65,14 @@ ts <= anchor:
 
 from __future__ import annotations
 
+import atexit
 import functools
+import os
+import shutil
+import tempfile
+import weakref
+import zipfile
+from importlib import resources
 
 import numpy as np
 import pandas as pd
@@ -204,18 +213,49 @@ def _select(df: DataFrame, jcols: JavaObject) -> DataFrame:
     return DataFrame(df._jdf.select(jcols), df.sparkSession)
 
 
+def _token_bag_source() -> str:
+    """``TokenBag.java``, read as a package resource: spark-submit
+    imports this package from the ``--py-files`` zip, where the file has
+    no path of its own."""
+    return resources.files(__package__).joinpath("TokenBag.java").read_text("utf-8")
+
+
+@functools.cache
+def _token_bag() -> tuple[JavaObject, str]:
+    """``TokenBag.java`` compiled in the driver JVM by the Janino compiler
+    Spark bundles (no JDK needed): the UDF ``token_bag`` and the path of
+    a jar holding its class, for the executors. Built once per process,
+    on the first kernel build."""
+    sc = SparkContext._active_spark_context
+    jvm, gateway = sc._jvm, sc._gateway
+    compiler = jvm.org.codehaus.janino.SimpleCompiler()
+    compiler.cook(_token_bag_source())
+    jar_dir = tempfile.mkdtemp(prefix="pit-token-bag-")
+    atexit.register(shutil.rmtree, jar_dir, True)
+    jar = os.path.join(jar_dir, "token_bag.jar")
+    code = compiler.getBytecodes()
+    with zipfile.ZipFile(jar, "w") as z:
+        for name in code.keySet():
+            z.writestr(name.replace(".", "/") + ".class", bytes(code.get(name)))
+    bag = compiler.getClassLoader().loadClass("pitfeatures.TokenBag")
+    # the static ``udf()`` picks functions.udf(UDF1, DataType); py4j
+    # would pick the untyped udf(Object, DataType), which Spark refuses
+    udf = bag.getMethod("udf", gateway.new_array(jvm.java.lang.Class, 0))
+    return udf.invoke(None, gateway.new_array(jvm.java.lang.Object, 0)), jar
+
+
+# SparkContexts whose executors can load the token bag's class
+_jar_added: weakref.WeakSet = weakref.WeakSet()
+
+
 @functools.cache
 def _text_columns() -> tuple[JavaObject, ...]:
-    """The four selects of ``turn_rows``' projection, built once per
+    """The two selects of ``turn_rows``' projection, built once per
     process and sent to the JVM once: they are unresolved expressions
-    that do not depend on the input, and building them costs thousands
+    that do not depend on the input, and building them costs hundreds
     of py4j round trips."""
-    # (?U): Unicode-aware \s, i.e. Unicode White_Space: NBSP & friends
-    # split tokens, U+001C..U+001F do not. The Python oracle
-    # (tests/reference_impl.py) and the DuckDB _WS_CLASS split on the
-    # same set.
-    text = F.coalesce(F.col("text"), F.lit(""))
-    toks = F.array_remove(F.split(text, r"(?U)\s+"), "")
+    udf, _ = _token_bag()
+    sc = SparkContext._active_spark_context
     roles = (
         F.when(F.col("role") == "user", 0)
         .when(F.col("role") == "assistant", 1)
@@ -224,7 +264,7 @@ def _text_columns() -> tuple[JavaObject, ...]:
         .otherwise(-1)
     )
     keys = ["__ck", "conv_id", "turn_idx", "ts", "role_code", "has_tool", "chars"]
-    tokenized = [
+    bagged = [
         F.when(
             F.col("conv_id").isNull(),
             F.raise_error(F.lit("pit_features: null conv_id in the input")),
@@ -236,46 +276,16 @@ def _text_columns() -> tuple[JavaObject, ...]:
         "ts",
         roles.alias("role_code"),
         F.col("tool").isNotNull().cast("int").alias("has_tool"),
-        F.length(text).cast("double").alias("chars"),
-        # the one interpreted pass: each token becomes the hex digit of
-        # its bucket, e.g. "3A03"
-        F.array_join(
-            F.transform(
-                toks, lambda t: F.hex(F.pmod(F.crc32(t), F.lit(_HASH_BUCKETS)))
-            ),
-            "",
-        ).alias("__d"),
+        F.length(F.coalesce(F.col("text"), F.lit(""))).cast("double").alias("chars"),
+        Column(udf.apply(_to_seq(sc, ["text"], _to_java_column))).alias("__tb"),
     ]
-    d = F.col("__d")
-    counts = [F.col(f"__c{b}") for b in range(_HASH_BUCKETS)]
-    counted = [
+    tb = F.col("__tb")
+    split = [
         *keys,
-        F.length(d).cast("double").alias("words"),
-        *[
-            (F.length(d) - F.length(F.replace(d, F.lit(f"{b:X}"), F.lit(""))))
-            .cast("double")
-            .alias(f"__c{b}")
-            for b in range(_HASH_BUCKETS)
-        ],
+        tb[0].alias("words"),
+        F.slice(tb, 2, _HASH_BUCKETS).cast("array<float>").alias("__bag"),
     ]
-    # whole counts: the sum of squares is exact in double, so it equals
-    # the oracle's in any order
-    sq = F.lit(0.0)
-    for c in counts:
-        sq = sq + c * c
-    normed = [*keys, "words", *counts, F.sqrt(sq).alias("__norm")]
-    norm = F.col("__norm")
-    bagged = [
-        *keys,
-        "words",
-        F.array(
-            *[
-                F.when(norm > 0, c / norm).otherwise(F.lit(0.0)).cast("float")
-                for c in counts
-            ]
-        ).alias("__bag"),
-    ]
-    return _jseqs(tokenized, counted, normed, bagged)
+    return _jseqs(bagged, split)
 
 
 def turn_rows(transcripts: DataFrame) -> DataFrame:
@@ -291,19 +301,25 @@ def turn_rows(transcripts: DataFrame) -> DataFrame:
       the other nulls as one conversation;
     - ``chars`` (double), ``role_code`` (-1 for an unknown role),
       ``has_tool``;
-    - ``__d``: one hex digit per token, its crc32 bucket — the only
-      interpreted (higher-order) expression, one pass over the tokens;
-    - ``words`` = the length of ``__d``, and bucket b's count = how many
-      digits ``replace`` removes, both codegen'd string ops;
-    - ``__bag``: the 16 counts, l2-normalized in double and stored as
+    - ``__tb`` = ``token_bag(text)`` (``TokenBag.java``): one compiled
+      pass over each text that splits it on Unicode White_Space, buckets
+      each token by crc32(utf8) mod 16 and counts, giving ``[words,
+      bag0 .. bag15]``, the bag l2-normalized in double;
+    - ``words`` = ``__tb[0]`` and ``__bag`` = the other 16 as
       ``array<float>``, the output precision.
 
     Output: ``__ck, conv_id, turn_idx, ts, role_code, has_tool, chars,
-    words, __bag``. One select per step: Catalyst does not collapse a
-    Project whose non-trivial output the next one reads more than once,
-    so ``__d``, each count and the norm are computed once per row."""
+    words, __bag``. Two selects: Catalyst does not collapse a Project
+    whose non-trivial output the next one reads more than once, so the
+    token bag runs once per row. The first call in a SparkContext adds
+    the token bag's jar to it, so its executors can load the class."""
+    sc = transcripts.sparkSession.sparkContext
+    text_columns = _text_columns()
+    if sc not in _jar_added:
+        sc._jsc.addJar(_token_bag()[1])
+        _jar_added.add(sc)
     df = transcripts.select("conv_id", "turn_idx", "role", "text", "tool", "ts")
-    for jcols in _text_columns():
+    for jcols in text_columns:
         df = _select(df, jcols)
     return df
 
@@ -343,10 +359,10 @@ def feature_vectors_windows(transcripts: DataFrame) -> DataFrame:
 
     Text is tokenized, counted and normalized map-side (``turn_rows``),
     so the exchange + sort move four plain columns and the 16-float bag
-    instead of the raw text/role/tool strings. The plan's one
-    higher-order function, the token → bucket digit ``transform``, runs
-    once per row before the shuffle; every other Project runs in
-    whole-stage codegen (tests/test_kernel.py).
+    instead of the raw text/role/tool strings. The plan holds no
+    higher-order function: ``token_bag`` runs once per row before the
+    shuffle, and every Project runs in whole-stage codegen
+    (tests/test_kernel.py).
 
     The select lists come from ``_text_columns`` and
     ``_window_columns``, built and sent to the JVM on the first call in
@@ -387,8 +403,8 @@ def _window_columns() -> tuple[JavaObject, ...]:
         "role_code",
         "has_tool",
         # never null, but a parquet read of staged rows declares every
-        # column nullable; the coalesce keeps f3/f15 required in the
-        # output, as over the source, where Catalyst drops it
+        # column nullable, and so does ``turn_rows`` for ``words``; the
+        # coalesce keeps f3/f15 required in the output
         F.coalesce(F.col("chars"), F.lit(0.0)).alias("chars"),
         F.coalesce(F.col("words"), F.lit(0.0)).alias("words"),
         "__bag",

@@ -2885,19 +2885,21 @@ def pit_features_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FLAGSHIP transcript kernel itself under the oracle gate:
     events projected into the transcript schema (conv_id, turn_idx,
     role, text, tool, ts) and run through the real
-    ``kernel.feature_vectors_windows`` — the exact pure-Catalyst plan
-    entry()/bench exercise. Gated columns: ALL 32 features + session
-    bounds; the kernel is causal and gives only ``session_start``, so
-    this query takes ``session_end`` as max(ts) over each session of
-    the kernel's output (r5 closed the last two r4 exclusions: f5 now averages the
+    ``kernel.feature_vectors_windows`` — the exact JVM-only plan
+    entry()/bench exercise, tokenized by the compiled ``token_bag``.
+    Gated columns: ALL 32 features + session bounds; the kernel is
+    causal and gives only ``session_start``, so this query takes
+    ``session_end`` as max(ts) over each session of the kernel's
+    output (r5 closed the last two r4 exclusions: f5 now averages the
     telescoping gap sum in exact integer microseconds, and the f16-31
     bag hash is crc32 mod 16 — both computable bit-identically by the
     JVM, numpy and DuckDB). The oracle tokenizes with an explicit
     Unicode White_Space character class, the exact set Java's (?U)\\s
-    matches — RE2 has no (?U) flag and its bare \\s is ASCII-only
-    (ADVICE r4). U+001C..001F are not White_Space, so neither engine
-    splits on them, and neither does the Python oracle in the tests
-    (``str.split()`` would): all three agree on every codepoint."""
+    matches and ``TokenBag.java`` splits on — RE2 has no (?U) flag and
+    its bare \\s is ASCII-only (ADVICE r4). U+001C..001F are not
+    White_Space, so neither engine splits on them, and neither does the
+    Python oracle in the tests (``str.split()`` would): all three agree
+    on every codepoint."""
     from dane_visual_feature_extraction_worker_spark.kernel import (
         feature_vectors_windows,
     )

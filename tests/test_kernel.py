@@ -7,12 +7,15 @@ import pandas as pd
 import pyspark.sql.functions as F
 import pytest
 
-from dane_visual_feature_extraction_worker_spark.kernel import FEATURE_DIM
+from dane_visual_feature_extraction_worker_spark.kernel import (
+    FEATURE_DIM,
+    with_text_features,
+)
 from dane_visual_feature_extraction_worker_spark.plans.pipeline import (
     pit_features,
     pit_features_array,
 )
-from tests.reference_impl import features_ref, sort_transcripts
+from tests.reference_impl import features_ref, sort_transcripts, text_features_ref
 
 FCOLS = [f"f{i}" for i in range(FEATURE_DIM)]
 
@@ -301,19 +304,27 @@ def _exchange_output(jplan) -> str:
     return found[0]
 
 
-def test_text_projection_is_the_only_interpreted_project(transcripts):
+def test_every_kernel_project_runs_in_codegen(transcripts):
     """Every Project of the executed kernel plan runs in whole-stage
-    codegen except the one that tokenizes: its ``transform`` over the
-    tokens is the kernel's only interpreted expression."""
+    codegen, the tokenizer's included: before the token bag, its
+    ``transform`` over the tokens was interpreted. The optimized plan
+    calls ``token_bag`` once per row (Catalyst does not inline it into
+    its 17 reads) and holds no lambda function, whose variable is named
+    from PySpark's process-wide counter (``x_1``, ``x_2``), so the plan
+    text of one pipeline does not depend on what the process built
+    before it."""
     out = pit_features(transcripts.localCheckpoint(eager=True))
     out.collect()
+    qe = out._jdf.queryExecution()
     interpreted = [
         node.output().toString()
-        for node, in_codegen in _plan_nodes(out._jdf.queryExecution().executedPlan())
+        for node, in_codegen in _plan_nodes(qe.executedPlan())
         if node.nodeName() == "Project" and not in_codegen
     ]
-    assert len(interpreted) <= 1, interpreted
-    assert all("__d#" in p for p in interpreted), interpreted
+    assert interpreted == []
+    optimized = qe.optimizedPlan().toString()
+    assert optimized.count("token_bag(") == 1, optimized
+    assert "lambdafunction" not in optimized
 
 
 def test_repeated_build_reuses_the_kernel_columns(
@@ -471,3 +482,95 @@ def test_unicode_whitespace_tokenizer_matches_sql_oracle(spark):
         g = got[f"f{b}"].to_numpy().astype("float64")
         r = ref[f"f{b}"].to_numpy()
         assert (g == r).all(), f"f{b} diverges on unicode whitespace"
+
+
+_TEXT_SCHEMA = "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
+_EDGE_TEXTS = {
+    "empty": "",
+    "whitespace_only": " \t\n ",
+    "leading_trailing_space": "  lead and trail  ",
+    "info_separators_do_not_split": "a\x1cb c\x1fd \x1c",
+    "nbsp": "nb\xa0sp\xa0x",
+    "line_and_paragraph_separators": "line\u2028sep\u2029para",
+    "ideographic_space": "ideo\u3000graphic",
+    "nel": "nel\x85break",
+    "crlf_tab": "cr\r\nlf\ttab\x0bvt\x0cff",
+    "surrogate_pair": "emoji \U0001f600 x\U0001f600y",
+    "long_token": "x" * 5000,
+    "many_tokens": " ".join(f"t{i}" for i in range(3000)),
+    "null": None,
+}
+
+
+def _turns(texts: list) -> pd.DataFrame:
+    return pd.DataFrame(
+        {
+            "conv_id": ["e"] * len(texts),
+            "turn_idx": np.arange(len(texts), dtype="int32"),
+            "role": ["user"] * len(texts),
+            "text": texts,
+            "tool": [None] * len(texts),
+            "ts": pd.date_range("2024-01-01", periods=len(texts), freq="10s"),
+        }
+    )
+
+
+def _text_features(df) -> pd.DataFrame:
+    return with_text_features(df).toPandas().sort_values("turn_idx").reset_index(drop=True)
+
+
+def _assert_text_features_equal(
+    got: pd.DataFrame,
+    want: pd.DataFrame,
+    exact: tuple[str, ...] = ("role_code", "has_tool", "chars", "words"),
+) -> None:
+    """Equal ``exact`` columns and bag; the engine's bag is float32, the
+    Python oracle's double."""
+    for c in exact:
+        assert (got[c].to_numpy() == want[c].to_numpy()).all(), c
+    for b in range(16):
+        g, w = got[f"bag{b}"].to_numpy(), want[f"bag{b}"].to_numpy().astype(np.float32)
+        assert (g == w).all(), f"bag{b}"
+
+
+@pytest.mark.parametrize("name", list(_EDGE_TEXTS))
+def test_token_bag_matches_python_oracle(spark, name):
+    """``turn_rows``' tokenizer against the Python oracle on texts the
+    generated transcripts never hold: Unicode White_Space splits, the
+    information separators U+001C..U+001F do not, a null text has no
+    tokens, and a surrogate pair is one char of one token."""
+    pdf = _turns([_EDGE_TEXTS[name]])
+    got = _text_features(spark.createDataFrame(pdf, _TEXT_SCHEMA))
+    _assert_text_features_equal(got, text_features_ref(pdf))
+
+
+def test_token_bag_decodes_invalid_utf8_as_replacement_chars(spark):
+    """A string column holding invalid UTF-8 is tokenized as the JVM
+    decodes it, each malformed sequence replaced by one U+FFFD. That is
+    Python's ``errors="replace"`` except for an encoded surrogate
+    (ED A0 80), which the JVM replaces as one sequence and Python as
+    three bytes. ``chars`` counts the raw bytes' lead bytes, so only
+    words and the bag are compared."""
+    decoded = {
+        "ff": "\ufffd",
+        "c3": "\ufffd",
+        "e282": "\ufffd",
+        "eda080": "\ufffd",
+        "8041": "\ufffdA",
+        "41fe42c0af": "A\ufffdB\ufffd\ufffd",
+        "20e3802041": " \ufffd A",
+    }
+    hexes = spark.createDataFrame(_turns(list(decoded)), _TEXT_SCHEMA)
+    df = hexes.withColumn("text", F.unhex("text").cast("string"))
+    want = text_features_ref(_turns(list(decoded.values())))
+    _assert_text_features_equal(_text_features(df), want, exact=("words",))
+
+
+def test_token_bag_in_a_new_session(spark):
+    """The kernel runs in a second session of the same SparkContext,
+    which has its own function registry and SQL confs."""
+    pdf = _turns(["hello world", "nb\xa0sp", None])
+    other = spark.newSession()
+    got = _text_features(other.createDataFrame(pdf, _TEXT_SCHEMA))
+    _assert_text_features_equal(got, text_features_ref(pdf))
+    assert len(pit_features(other.createDataFrame(pdf, _TEXT_SCHEMA)).collect()) == 3

@@ -457,8 +457,8 @@ def _final_plan_nodes(plan: str) -> list[str]:
 
 
 def test_buckets_run_only_the_windowed_stage(spark, transcripts, tmp_path):
-    """The staging write runs the kernel's row stage, the one tokenizer,
-    and each bucket's write reads the staged rows, ``__bag`` included,
+    """The staging write runs the kernel's row stage, whose one plan
+    node calls the tokenizer ``token_bag``, and each bucket's write reads the staged rows, ``__bag`` included,
     and tokenizes nothing. Before, every bucket (and every restart)
     tokenized its turns again."""
     sc = spark.sparkContext
@@ -477,10 +477,9 @@ def test_buckets_run_only_the_windowed_stage(spark, transcripts, tmp_path):
     assert set(ran) == {"pit:1:stage", "pit:1:0", "pit:1:1", "pit:1:2"}
 
     stage = _final_plan_nodes(ran.pop("pit:1:stage"))
-    tokenizers = [n for n in stage if "split(" in n]
-    assert len(tokenizers) == 1 and "transform(" in tokenizers[0]
+    assert len([n for n in stage if "token_bag(" in n]) == 1
     for desc, plan in ran.items():
-        assert "split(" not in plan and "transform(" not in plan, desc
+        assert "token_bag(" not in plan, desc
         scans = [n for n in _final_plan_nodes(plan) if re.match(r"\(\d+\) Scan parquet", n)]
         assert len(scans) == 1, desc
         assert "/out_stages/_staged]" in scans[0], desc
@@ -491,7 +490,8 @@ def test_runner_refuses_null_conv_id(spark, transcripts, tmp_path):
     """Null-``conv_id`` turns used to be written as one conversation and
     their bucket recorded done. The row stage refuses them, so the run
     now raises in its staging write, before it writes any bucket or
-    publishes any marker."""
+    publishes any marker. Its summary records the error."""
+    import json
     import os
 
     import pyspark.sql.functions as F
@@ -505,6 +505,31 @@ def test_runner_refuses_null_conv_id(spark, transcripts, tmp_path):
     done = {row["bucket"] for row in r.load_checkpoints().where("status = 'done'").collect()}
     assert done == set()
     assert not os.path.exists(f"{tmp_path}/out_nullkey/_staged/_stage.json")
+    with open(f"{tmp_path}/out_nullkey/_provenance_attempt1.json") as f:
+        s = json.load(f)
+    assert s["staged_writes"] == 0 and s["computed"] == 0
+    assert s["error"].startswith("SparkRuntimeException") and "null conv_id" in s["error"]
+
+
+def test_failed_attempt_writes_its_summary(spark, transcripts, tmp_path):
+    """An attempt that raises used to write no
+    ``_provenance_attempt<n>.json``: what it staged and finished showed
+    only in the staging marker and the records. It now writes its
+    summary so far with the error, and the caller still gets the
+    original exception."""
+    import json
+
+    r = _runner(spark, str(tmp_path), "failed", n_buckets=2)
+    with pytest.raises(RuntimeError, match="^injected failure after 1 buckets$"):
+        r.run(transcripts, pit_features, fail_after=1)
+    with open(f"{tmp_path}/out_failed/_provenance_attempt1.json") as f:
+        s = json.load(f)
+    assert s["attempt"] == 1 and s["skipped"] == 0 and s["n_buckets"] == 2
+    assert s["computed"] == 1 and s["staged_writes"] == 1
+    assert s["output_rows"] == r.load_checkpoints().collect()[0]["rows"] > 0
+    assert s["error"] == "RuntimeError: injected failure after 1 buckets"
+    done = r.run(transcripts, pit_features)
+    assert done["attempt"] == 2 and done["computed"] == 1 and "error" not in done
 
 
 @pytest.mark.parametrize("n_buckets", [0, -1])
