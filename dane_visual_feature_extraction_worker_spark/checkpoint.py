@@ -28,6 +28,15 @@ and attempt, so it needs no compaction. A missing ``checkpoint_dir``
 means nothing is done; an entry that is not a readable record raises
 naming the file instead of producing a wrong table.
 
+Each attempt claims its number before it writes anything: 1 + the
+highest number recorded or claimed, by creating ``_attempt<n>`` in
+``checkpoint_dir`` only if absent (``FileSystem.createNewFile``; the
+next number while it exists), so no two attempts share a number or a
+``_provenance_attempt<n>.json``. The create is atomic on HDFS, where
+the loser of a race raises ``FileAlreadyExistsException``; Hadoop's
+local FS and S3A check, then create, so two attempts started in the
+same instant could both claim one number.
+
 Each run has one identity, planned before any write (no Spark job):
 ``n_buckets``, ``entity_col``, ``input_files_sha256`` (a SHA-256 of the
 source's sorted input file list, ``DataFrame.inputFiles``, computed in
@@ -89,6 +98,7 @@ _FIELDS = [tuple(c.split()) for c in CHECKPOINT_SCHEMA.split(", ")]
 _CAST = {"int": int, "bigint": int, "double": float, "string": str}
 _RECORD_NAME = re.compile(r"bucket=\d+-attempt=\d+\.json")
 _STAGE_MARKER = "_stage.json"
+_CLAIM = re.compile(r"_attempt(\d+)")
 
 
 def bucket_of(entity_col: str, n_buckets: int) -> F.Column:
@@ -253,6 +263,21 @@ class CheckpointedRunner:
             records.append(rec)
         return sorted(records, key=lambda r: (r["attempt"], r["bucket"]))
 
+    def _claim_attempt(self, records: list[dict]) -> int:
+        """Claim and return this attempt's number, 1 + the highest one in
+        ``records`` or claimed in ``checkpoint_dir``, by creating its
+        ``_attempt<n>`` file only if absent (the next number otherwise)."""
+        fs, d = self._path(self.checkpoint_dir)
+        claimed = [
+            int(m.group(1))
+            for st in (fs.listStatus(d) if fs.exists(d) else [])
+            if (m := _CLAIM.fullmatch(st.getPath().getName()))
+        ]
+        n = 1 + max([r["attempt"] for r in records] + claimed, default=0)
+        while not fs.createNewFile(self._path(self.checkpoint_dir, f"_attempt{n}")[1]):
+            n += 1
+        return n
+
     def load_checkpoints(self) -> DataFrame:
         """The records as a CHECKPOINT_SCHEMA DataFrame, built in the driver."""
         return self.spark.createDataFrame(
@@ -289,7 +314,8 @@ class CheckpointedRunner:
         """Process all pending buckets; returns the attempt summary, which
         is also written to ``{output_dir}/_provenance_attempt<n>.json``:
 
-        - ``attempt``: this attempt's number, 1 + the highest recorded;
+        - ``attempt``: this attempt's number, 1 + the highest recorded or
+          claimed by an earlier attempt, so never reused;
         - ``skipped``: buckets already done before this attempt;
         - ``computed``: buckets this attempt wrote and recorded;
         - ``n_buckets``: the runner's bucket count;
@@ -299,7 +325,7 @@ class CheckpointedRunner:
         - ``output_rows``: rows over every done bucket, from the records;
         - ``ms``: the attempt's wall time.
 
-        An attempt that raises once its records are read (a failed
+        An attempt that raises once it has claimed its number (a failed
         staging or bucket write, ``fail_after``) writes its summary so
         far too, with ``error``, the exception's type and message, then
         re-raises the exception unchanged.
@@ -323,7 +349,7 @@ class CheckpointedRunner:
         records = self._records(identity)
         done_rows = {r["bucket"]: r["rows"] for r in records if r["status"] == "done"}
         pending = [b for b in range(self.n_buckets) if b not in done_rows]
-        attempt = 1 + max((r["attempt"] for r in records), default=0)
+        attempt = self._claim_attempt(records)
         # each bucket reads its staged rows by a partition prune on
         # ``__bucket``: filtering a computed bucket column instead would
         # scan the source once per bucket (VERDICT r1). A source's own

@@ -24,9 +24,14 @@ Null keys follow SQL equality on every path: a null-key anchor
 matches nothing and is emitted with null right columns.
 
 Tie-break: among right rows sharing the max ts <= anchor, the one with
-the greatest ``right_order`` column wins (deterministic, mirrors the
-reference's deterministic first-hit rule data_handling.py:124-126 but
-"latest state" oriented).
+the greatest ``right_order`` column wins (mirrors the reference's
+deterministic first-hit rule data_handling.py:124-126 but "latest
+state" oriented). The winner is fixed only when ``right_order`` is
+given and distinct among the tied rows. With ``right_order=None`` tied
+rows compare equal, and the in-partition sort order, not the plan,
+picks one. Feature rows do share timestamps: in pitbench ``backfill``'s
+seed-1 feature table, 1 542 ``(conv_id, ts)`` pairs hold more than one
+of the 49 598 rows.
 
 The union-window family (union, nearest, forward) is built from three
 shared pieces: ``_tagged_union`` (the two sides tagged and unioned by
@@ -218,13 +223,16 @@ def asof_join_union(
     payload. Each anchor then carries the latest right row with
     ``right.ts <= left.ts`` (right rows sort before anchors at equal
     ts ⇒ exact matches allowed; later right_order sorts later ⇒ wins
-    the tie; zero temporal leakage by construction).
+    the tie, and with ``right_order=None`` the sort order picks among
+    tied rows; zero temporal leakage by construction).
 
     ONE shuffle (hash on the entity key) + one sort, all whole-stage
     codegen — no Python, no Arrow transfer. This is the engine path;
     ``asof_join_rangejoin`` is its oracle. Skew: a hot entity is one
-    sort run inside a partition (linear scan), and AQE skew-split
-    handles oversized shuffle blocks.
+    sort run inside one partition, sorted and scanned linearly by one
+    task. AQE's skew split does not help here: it splits the
+    partitions of a sort-merge or shuffled hash join, not a window's,
+    so AQE can only coalesce this exchange's small partitions.
 
     Output schema matches ``asof_join_rangejoin``: left columns +
     ``matched_ts`` + right payload columns.

@@ -306,7 +306,8 @@ def test_source_bucket_column_is_ignored(spark, transcripts, tmp_path, layout):
 def test_checkpoint_records_readable_as_json_table(spark, transcripts, tmp_path):
     """One JSON record per bucket, published by rename: an 8-bucket run
     leaves 8 ``done`` rows readable as a plain JSON table and no
-    ``_``-prefixed temp record."""
+    ``_``-prefixed temp record; its one ``_`` file is the attempt's
+    claim."""
     import os
 
     r = _runner(spark, str(tmp_path), "json", n_buckets=8)
@@ -315,7 +316,9 @@ def test_checkpoint_records_readable_as_json_table(spark, transcripts, tmp_path)
     assert sorted(
         row["bucket"] for row in cps.where("status = 'done'").collect()
     ) == list(range(8))
-    assert not [n for n in os.listdir(f"{tmp_path}/cp_json") if n.startswith("_")]
+    assert [n for n in os.listdir(f"{tmp_path}/cp_json") if n.startswith("_")] == [
+        "_attempt1"
+    ]
     assert r.load_checkpoints().where("status = 'done'").count() == 8
 
 
@@ -530,6 +533,31 @@ def test_failed_attempt_writes_its_summary(spark, transcripts, tmp_path):
     assert s["error"] == "RuntimeError: injected failure after 1 buckets"
     done = r.run(transcripts, pit_features)
     assert done["attempt"] == 2 and done["computed"] == 1 and "error" not in done
+
+
+def test_attempt_numbers_are_never_reused(spark, transcripts, tmp_path):
+    """An attempt that failed before its first record used to have its
+    number taken again by the next attempt, which overwrote its
+    ``_provenance_attempt<n>.json`` and the error in it. Each attempt
+    now claims its number in ``checkpoint_dir``."""
+    import json
+
+    import pyspark.sql.functions as F
+    from pyspark.errors import SparkRuntimeException
+
+    nulls = transcripts.limit(3).withColumn("conv_id", F.lit(None).cast("string"))
+    r = _runner(spark, str(tmp_path), "claims", n_buckets=2)
+    with pytest.raises(SparkRuntimeException, match="null conv_id"):
+        r.run(transcripts.unionByName(nulls), pit_features)
+    done = r.run(transcripts, pit_features)
+    assert done["attempt"] == 2 and done["computed"] == 2 and "error" not in done
+    with open(f"{tmp_path}/out_claims/_provenance_attempt1.json") as f:
+        failed = json.load(f)
+    assert failed["attempt"] == 1 and "null conv_id" in failed["error"]
+    with open(f"{tmp_path}/out_claims/_provenance_attempt2.json") as f:
+        assert json.load(f) == done
+    assert {row["attempt"] for row in r.load_checkpoints().collect()} == {2}
+    assert r.run(transcripts, pit_features)["attempt"] == 3
 
 
 @pytest.mark.parametrize("n_buckets", [0, -1])
